@@ -44,4 +44,4 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle for every registered query (all 50 have
     one, including the unrolled power-method oracles for pagerank /
     personalized_pagerank and the full IVF trainer in SQL)."""
-    return {k: workloads.ORACLE[k] for k in workloads.QUERIES if k in workloads.ORACLE}
+    return {k: workloads.ORACLE[k] for k in workloads.QUERIES}

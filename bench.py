@@ -73,7 +73,8 @@ HEADLINE = (
 )
 
 # family per query for --full subtotals (name-prefix/keyword rules
-# would misfile e.g. simhash vs simhash_near_dupes; explicit is safer)
+# would misfile e.g. simhash vs simhash_near_dupes; explicit is safer).
+# Must partition workloads.ALL_QUERIES exactly (tests/test_bench_check.py).
 FAMILIES: dict[str, tuple[str, ...]] = {
     "text": (
         "word_count", "bigram_count", "cooccurrence", "cooccurrence_stripes",
@@ -136,7 +137,7 @@ FAMILIES: dict[str, tuple[str, ...]] = {
         "cluster_canonical", "dup_span_report",
         "prefix_jaccard", "dedup_savings", "semantic_decontamination",
         "winnowing_fingerprints", "winnowing_candidates",
-        "dedup_threshold_curve",
+        "dedup_threshold_curve", "cluster_aware_split",
     ),
     "similarity": (
         "brute_force_topk", "ivf_assign", "ivf_topk_trained",
@@ -146,7 +147,8 @@ FAMILIES: dict[str, tuple[str, ...]] = {
         "label_spread", "semantic_dedup", "knn_label_accuracy",
         "embedding_covariance", "quantization_error", "index_shard_balance",
         "nn_similarity_histogram", "margin_bitext", "matryoshka_recall",
-        "embedding_pca", "mutual_knn_pairs",
+        "embedding_pca", "mutual_knn_pairs", "ivf_silhouette", "pq_codes",
+        "pq_adc_topk", "pq_recall_report",
     ),
     "text_quality": (
         "token_counts", "quality_score", "nb_quality_confusion", "language_id", "doc_fingerprint",
@@ -181,6 +183,7 @@ FAMILIES: dict[str, tuple[str, ...]] = {
     "multimodal": (
         "image_stats", "png_decode_stats", "jpeg_decode_stats", "phash_duplicates", "media_sniff", "frame_sample",
         "audio_stats", "resize_images", "aspect_ratio_histogram",
+        "mjpeg_frame_stats", "mp4_frame_text",
     ),
     "streaming": (
         "streaming_hourly_counts", "streaming_user_sessions",
@@ -361,7 +364,7 @@ def run_full(
     times = {n: min(s) for n, s in samples.items()}
     fam_totals: dict[str, float] = {}
     for name, t in times.items():
-        fam = _FAMILY_OF.get(name, "other")
+        fam = _FAMILY_OF[name]
         fam_totals[fam] = round(fam_totals.get(fam, 0.0) + t, 3)
     result = {
         "metric": "full_total",

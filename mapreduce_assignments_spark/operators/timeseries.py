@@ -170,8 +170,8 @@ def maintain_hourly_rollup(
     any batch split yields bit-identical results to the one-shot
     aggregation — the invariant the oracle checks.
 
-    ``spark.sql.sources.partitionOverwriteMode`` is set to
-    ``dynamic`` for the write and restored after — static mode would
+    The write sets ``partitionOverwriteMode=dynamic`` as a writer
+    option, leaving the session conf alone — static mode would
     clobber the whole rollup directory.
     """
     import os
@@ -203,17 +203,13 @@ def maintain_hourly_rollup(
         )
     else:
         merged = delta
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.repartition("d")
-            .write.mode("overwrite")
-            .partitionBy("d")
-            .parquet(rollup_dir)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        merged.repartition("d")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("d")
+        .parquet(rollup_dir)
+    )
 
 
 def read_hourly_rollup(spark, rollup_dir: str) -> DataFrame:

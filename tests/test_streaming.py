@@ -436,20 +436,64 @@ def test_streaming_session_stats_matches_batch(spark, tmp_path):
 
 def test_streaming_quality_gate_matches_batch_funnel(spark):
     """Multi-batch streamed funnel partials sum to the one-shot batch
-    funnel at sf0.001 — the additive-curation contract."""
+    funnel at sf0.001 — the additive-curation contract. A second call
+    on the same session must replay its stream again (only the input
+    is staged once), and give the same rows."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
     from mapreduce_assignments_spark import workloads
     from mapreduce_assignments_spark.operators.text_quality import filter_funnel
 
-    got = sorted(
-        tuple(r)
-        for r in workloads.ALL_QUERIES["streaming_quality_gate"](
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    )
+    class Starts(StreamingQueryListener):
+        n = 0
+
+        def onQueryStarted(self, event):
+            self.n += 1
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    def run():
+        return sorted(
+            tuple(r)
+            for r in workloads.ALL_QUERIES["streaming_quality_gate"](
+                spark, SF_DIR
+            ).collect()
+        )
+
+    first = run()
+    starts = Starts()
+    spark.streams.addListener(starts)
+    try:
+        second = run()
+        deadline = time.monotonic() + 30  # listener events arrive async
+        while starts.n == 0 and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(starts)
     want = sorted(
-        tuple(r)
-        for r in filter_funnel(
-            workloads._docs(spark, "/root/testdata/sf0.001")
-        ).collect()
+        tuple(r) for r in filter_funnel(workloads._docs(spark, SF_DIR)).collect()
     )
-    assert got == want
+    assert first == want
+    assert second == first
+    assert starts.n == 1, "second call served a memoized result"
+
+
+def test_stage_once_writes_once_per_kind_and_sf_dir():
+    from mapreduce_assignments_spark import workloads
+
+    calls = []
+    a = workloads._stage_once("test-kind-a", "sf-x", calls.append)
+    assert workloads._stage_once("test-kind-a", "sf-x", calls.append) == a
+    b = workloads._stage_once("test-kind-a", "sf-y", calls.append)
+    c = workloads._stage_once("test-kind-b", "sf-x", calls.append)
+    assert calls == [a, b, c]
+    assert len({a, b, c}) == 3

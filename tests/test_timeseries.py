@@ -117,6 +117,8 @@ def test_maintain_hourly_rollup_touches_only_delta_partitions(spark, tmp_path):
     def ev(day, hour, n):
         return [(datetime(2024, 1, day, hour, 30),)] * n
 
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(conf_key)
     d = str(tmp_path / "rollup")
     batch1 = spark.createDataFrame(ev(1, 3, 2) + ev(2, 5, 1), "ts timestamp")
     maintain_hourly_rollup(spark, d, batch1)
@@ -133,6 +135,7 @@ def test_maintain_hourly_rollup_touches_only_delta_partitions(spark, tmp_path):
     batch2 = spark.createDataFrame(ev(2, 5, 4) + ev(2, 7, 1), "ts timestamp")
     maintain_hourly_rollup(spark, d, batch2)
     assert snapshot(1) == day1_before  # untouched partition not rewritten
+    assert spark.conf.get(conf_key) == conf_before  # session conf untouched
     got = {
         (r["d"], r["hour"]): r["n"] for r in read_hourly_rollup(spark, d).collect()
     }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Physical-plan health audit across the driver queries.
+"""Physical-plan health audit across the registered queries.
 
-For every query in ``workloads.QUERIES``, prints one line with the
+For every query in ``workloads.ALL_QUERIES``, prints one line with the
 plan's scale-relevant facts:
 
 - join strategies (broadcast vs sort-merge vs shuffled-hash),
