@@ -408,6 +408,7 @@ def ivf_train(
     # before a full collect is one extra exchange+sort stage for rows
     # the driver re-materializes anyway (vec_id is unique, so the
     # Python sort is the identical order).
+    # NULL vec_ids never reach this sort: deterministic_sample drops NULL bins.
     sample = sorted(
         deterministic_sample(emb, "vec_id", fraction)
         .select("vec_id", "embedding")

@@ -45,17 +45,19 @@ _TS_COLS: dict[str, tuple[str, ...]] = {
 # rebuild triggers), and a full bench run calls it several hundred
 # times over the same ten static paths. The memo returns the SAME
 # immutable lazy DataFrame (a plan, never rows — every action still
-# scans parquet from scratch), keyed by the session so a foreign
-# session gets its own load (and its conf pins). This is what a table
-# catalog does; at 100 TB the session catalog's file-index cache
-# plays this role.
-_LOADED: dict[tuple[int, str, str], DataFrame] = {}
+# scans parquet from scratch), keyed by the JVM session's UUID: every
+# Python wrapper of one session shares it, and a foreign session gets
+# its own load (and its conf pins). A wrapper's ``id()`` is no key: it
+# differs between wrappers and is reused once a wrapper is freed. This
+# is what a table catalog does; at 100 TB the session catalog's
+# file-index cache plays this role.
+_LOADED: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (id(spark._jsparkSession), sf_dir, name)
+    key = (spark._jsparkSession.sessionUUID(), sf_dir, name)
     cached = _LOADED.get(key)
     if cached is not None:
         return cached

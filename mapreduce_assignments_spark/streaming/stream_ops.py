@@ -176,9 +176,9 @@ def maintain_snapshot(
     stream — the ``foreachBatch`` upsert-to-storage pattern: each
     micro-batch is merged with the snapshot at rest through the SAME
     batch ``temporal.latest_snapshot`` operator, and the result
-    replaces the snapshot atomically-enough for a single writer
-    (checkpoint-then-overwrite; a lakehouse table format would make
-    this a real MERGE, the operator seam is identical).
+    replaces the snapshot atomically-enough for a single writer (a
+    lakehouse table format would make this a real MERGE, the operator
+    seam is identical).
 
     Scale: each merge is one key-shuffle of (snapshot + batch) — the
     snapshot side re-reads from parquet each batch, which is the
@@ -186,26 +186,25 @@ def maintain_snapshot(
     callback body becomes ``MERGE INTO`` and touches only matched
     files. State lives entirely at rest; the stream holds none.
 
-    r15: each batch is ONE Spark action — the merge writes to a
-    sibling temp directory (so the plan can stream straight from the
-    old snapshot files) and the directories are swapped with
-    metadata-only filesystem ops. The previous shape materialized the
-    merge through an extra eager ``localCheckpoint`` action per batch
-    purely so the overwrite-in-place would not clobber its own input.
+    Per-batch job shape: one shuffle-map job for the merge's key
+    exchange and one write job, nothing else. The snapshot is read
+    with the schema the merge itself writes (planned on the driver,
+    no footer-inference job), and while no snapshot exists the batch
+    is merged alone (``latest_snapshot(batch)`` equals
+    ``latest_snapshot(∅ ∪ batch)``). The merge writes to a sibling
+    temp directory, so the plan streams straight from the old
+    snapshot files, and the directories are then swapped with
+    metadata-only operations.
 
-    r16: the swap goes through the Hadoop ``FileSystem`` API resolved
-    from the snapshot path's scheme (HDFS/S3A/ABFS/file:), not POSIX
-    ``os.replace`` — and it is crash-recoverable: the current snapshot
-    is renamed ASIDE (``<path>__prev``) before the new one is promoted,
-    and a batch that starts with the snapshot missing but the aside
-    present (a crash landed between the two renames) restores the
-    aside instead of silently restarting from an empty snapshot.
-    Object stores without atomic rename pay a copy for the aside step;
-    a lakehouse table format replaces this whole dance with MERGE, as
-    the docstring's first paragraph notes.
+    The swap goes through the Hadoop ``FileSystem`` API resolved from
+    the snapshot path's scheme (HDFS/S3A/ABFS/file:), and it is
+    crash-recoverable: the current snapshot is renamed ASIDE
+    (``<path>__prev``) before the new one is promoted, and a batch
+    that starts with the snapshot missing but the aside present (a
+    crash landed between the two renames) restores the aside instead
+    of silently restarting from an empty snapshot. Object stores
+    without atomic rename pay a copy for the aside step.
     """
-    from pyspark.errors import AnalysisException
-
     from ..operators.temporal import latest_snapshot
 
     def _fs_and_path(spark, p: str):
@@ -217,25 +216,27 @@ def maintain_snapshot(
         if not fs.rename(src, dst):  # Hadoop rename reports, not raises
             raise IOError(f"snapshot swap failed: rename {src} -> {dst}")
 
+    def _merge(df: DataFrame) -> DataFrame:
+        return latest_snapshot(df, keys=keys, ts_col=ts_col, tiebreak=tiebreak)
+
     prev = f"{path}__prev"
 
     def upsert(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         fs, dst = _fs_and_path(spark, path)
         _, aside = _fs_and_path(spark, prev)
-        if not fs.exists(dst) and fs.exists(aside):
+        exists = fs.exists(dst)
+        if not exists and fs.exists(aside):
             # a crash landed between rename-aside and promote: the
             # aside copy IS the snapshot — restore it
             _rename_or_raise(fs, aside, dst)
-        try:
-            existing = spark.read.parquet(path)
-        except AnalysisException:
-            existing = spark.createDataFrame([], batch_df.schema)
-        merged = latest_snapshot(
-            existing.unionByName(batch_df), keys=keys, ts_col=ts_col, tiebreak=tiebreak
-        )
-        # write to a temp dir (the ONE action — it reads the old
-        # snapshot files directly), then swap directories
+            exists = True
+        merged = _merge(batch_df)
+        if exists:
+            existing = spark.read.schema(merged.schema).parquet(path)
+            merged = _merge(existing.unionByName(batch_df))
+        # write to a temp dir (it reads the old snapshot files
+        # directly), then swap directories
         tmp = f"{path}__merge_tmp_{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
         _, tmp_p = _fs_and_path(spark, tmp)

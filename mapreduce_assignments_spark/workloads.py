@@ -333,7 +333,7 @@ def _stream_tuned(fn):
     """Decorator: run a streaming workload with the state-partitioning
     dial set for replay scale (see _STREAM_STATE_PARTITIONS); the
     session's shuffle-partition conf is restored on exit — results are
-    already materialized (memory sink / localCheckpoint) by then.
+    already materialized (memory sink / parquet at rest) by then.
 
     r16: trailing no-data micro-batches are also disabled for the
     replay. After an ``availableNow`` run drains its last data batch,
@@ -486,7 +486,7 @@ def q_streaming_snapshot_sink(spark, sf_dir):
     latest_events oracle exactly."""
     from .streaming import EVENTS_SCHEMA, maintain_snapshot
 
-    # not yet created, so the first batch takes the empty path
+    # not yet created, so the first batch merges alone
     snap = f"{_scratch_dir('snapshot-sink')}/snap"
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
@@ -497,15 +497,15 @@ def q_streaming_snapshot_sink(spark, sf_dir):
     maintain_snapshot(
         stream, snap, keys=("user_id", "event_type"), ts_col="ts", tiebreak="event_id"
     )
-    out = spark.read.parquet(snap).select(
+    # the snapshot dir lives until interpreter exit, so the lazy read
+    # stays valid for the caller
+    return spark.read.schema(EVENTS_SCHEMA).parquet(snap).select(
         "user_id",
         "event_type",
         "event_id",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
         F.round("value", 6).alias("value"),
     )
-    # materialize before the atexit-free tmp dir could be cleaned
-    return out.localCheckpoint(eager=True)
 
 
 @_stream_tuned

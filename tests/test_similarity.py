@@ -205,6 +205,29 @@ def test_ivf_train_sampled_init(emb):
     assert all(len(c) == 8 for _, c in a)
 
 
+def test_ivf_train_null_vec_id_is_sampled_out(spark, emb):
+    """A NULL ``vec_id`` never reaches ivf_train's driver-side sort of
+    the init sample: its hash bin is NULL, so deterministic_sample
+    drops the row, and training still returns k centroids."""
+    import pyspark.sql.functions as F
+
+    from mapreduce_assignments_spark.operators.sampling import (
+        deterministic_sample,
+    )
+    from mapreduce_assignments_spark.operators.similarity import ivf_train
+
+    df, _ = emb
+    null_row = spark.createDataFrame(
+        [(None, [1.0] * 8, 0)], "vec_id long, embedding array<float>, label int"
+    )
+    with_null = df.unionByName(null_row)
+    sampled = deterministic_sample(with_null, "vec_id", 1.0)
+    assert sampled.where(F.col("vec_id").isNull()).count() == 0
+    assert sampled.count() == df.count()
+    centroids = ivf_train(with_null, k=3, n_iter=2).collect()
+    assert sorted(r["cell_id"] for r in centroids) == [0, 1, 2]
+
+
 def test_ivf_train_end_to_end_recall(emb):
     from mapreduce_assignments_spark.operators.similarity import ivf_train
 
@@ -652,20 +675,31 @@ def test_ensure_min_parallelism_guard(spark):
     """The narrow-map parallelism guard (round-7 VERDICT item 4):
     a one-partition input is split to ~cores/2 partitions; an
     already-parallel input passes through without a repartition, and
-    values are untouched either way."""
+    values are untouched either way. Probing a post-exchange frame
+    schedules no job, and the session's AQE conf is left as found."""
     from mapreduce_assignments_spark.sources.tables import (
         ensure_min_parallelism,
     )
 
-    target = max(1, spark.sparkContext.defaultParallelism // 2)
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    target = max(1, sc.defaultParallelism // 2)
     base = spark.range(1000).coalesce(1)
     guarded = ensure_min_parallelism(base)
     assert guarded.rdd.getNumPartitions() == target
     assert guarded.count() == 1000 and guarded.agg({"id": "sum"}).first()[0] == 499500
 
     wide = spark.range(1000).repartition(max(target, 2))
-    passthrough = ensure_min_parallelism(wide)
+    group = "ensure-min-parallelism-probe"
+    sc.setJobGroup(group, "post-exchange partition probe")
+    try:
+        passthrough = ensure_min_parallelism(wide)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert passthrough is wide  # no plan change at all
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
 
 def test_random_projection_single_file_input_parallelizes(spark):

@@ -157,3 +157,25 @@ def test_top_orders_per_customer(spark):
         want = sorted(want_top[ck], reverse=True)[: len(rows)]
         got = [(r["o_totalprice"], -r["o_orderkey"]) for r in sorted(rows, key=lambda r: r["rn"])]
         assert got == want
+
+
+def test_load_table_memo_keyed_on_session_identity(spark):
+    """The loaded-table memo is keyed on the JVM session, not on its
+    Python wrapper: a second wrapper of the same session gets the same
+    plan back, and another session gets an entry of its own."""
+    from pyspark.sql import SparkSession
+
+    first = load_table(spark, SF_DIR, "nation")
+    twin = SparkSession(
+        spark.sparkContext, spark._jsparkSession.sqlContext().sparkSession()
+    )
+    assert twin._jsparkSession is not spark._jsparkSession
+    assert load_table(twin, SF_DIR, "nation") is first
+
+    other = spark.newSession()
+    own = load_table(other, SF_DIR, "nation")
+    assert own is not first
+    assert own.sparkSession._jsparkSession.sessionUUID() == (
+        other._jsparkSession.sessionUUID()
+    )
+    assert load_table(other, SF_DIR, "nation") is own

@@ -236,6 +236,91 @@ def test_maintain_snapshot_recovers_aside_copy_after_crash(spark, tmp_path):
     assert not os.path.exists(f"{snap}__prev")
 
 
+def test_maintain_snapshot_job_budget(spark, tmp_path):
+    """Each micro-batch costs one shuffle-map job and one write job:
+    no schema-inference job on the snapshot, no job to build an empty
+    frame for the first batch."""
+    import pyspark.sql.functions as F
+
+    from mapreduce_assignments_spark.streaming import EVENTS_SCHEMA, maintain_snapshot
+
+    schema = (
+        "event_id long, ts string, user_id long, event_type string, "
+        "value double, props string"
+    )
+    src = str(tmp_path / "src")
+    for rows in (
+        [(1, "2024-01-01 00:00:00", 10, "click", 1.0, "{}")],
+        [(2, "2024-01-01 01:00:00", 10, "click", 2.0, "{}")],
+        [(3, "2024-01-01 00:30:00", 11, "view", 3.0, "{}")],
+    ):
+        spark.createDataFrame(rows, schema).withColumn(
+            "ts", F.to_timestamp("ts")
+        ).coalesce(1).write.mode("append").parquet(src)
+    snap = str(tmp_path / "snap")
+    stream = (
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .select("user_id", "event_type", "event_id", "ts", "value")
+    )
+    q = maintain_snapshot(
+        stream, snap, keys=("user_id", "event_type"), tiebreak="event_id"
+    )
+    batches = q.recentProgress
+    assert len(batches) == 3
+    assert all(p["numInputRows"] == 1 for p in batches)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 2 * len(batches)
+    got = {
+        (r["user_id"], r["event_type"]): r["event_id"]
+        for r in spark.read.parquet(snap).collect()
+    }
+    assert got == {(10, "click"): 2, (11, "view"): 3}
+
+
+def test_streaming_snapshot_sink_keeps_its_batch_contract(spark):
+    """The sink query replays its input one file per micro-batch: at
+    sf0.001 that is >= 8 batches, none of them empty. A faster sink
+    must not get there by merging batches."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from mapreduce_assignments_spark import workloads
+
+    class Batches(StreamingQueryListener):
+        def __init__(self):
+            self.rows = []
+            self.done = False
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.rows.append(event.progress.numInputRows)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done = True
+
+    batches = Batches()
+    spark.streams.addListener(batches)
+    try:
+        out = workloads.ALL_QUERIES["streaming_snapshot_sink"](spark, SF_DIR)
+        deadline = time.monotonic() + 30  # listener events arrive async
+        while not batches.done and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(batches)
+    assert batches.done
+    assert len(batches.rows) >= 8
+    assert all(n > 0 for n in batches.rows)
+    assert out.count() > 0
+
+
 def test_streaming_enriched_counts_stream_static_join(spark, tmp_path):
     import pyspark.sql.functions as F
 
