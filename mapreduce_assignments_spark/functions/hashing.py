@@ -60,10 +60,6 @@ def h60_sql(expr: str) -> str:
     return f"CAST(CONCAT('0x', substring(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def minhash_value_sql(base_expr: str, i: int) -> str:
-    return f"(({MINHASH_A[i]} * {base_expr} + {MINHASH_B[i]}) % {MINHASH_PRIME})"
-
-
 def h28_spark_sql(expr: str) -> str:
     """Spark SQL text equivalent of :func:`h28` (same value as the
     Column form — ``conv`` hex parse instead of DuckDB's '0x' cast).

@@ -46,6 +46,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql.window import Window
 
+from ..session import scoped_conf
+
 __all__ = [
     "pagerank",
     "personalized_pagerank",
@@ -64,47 +66,30 @@ __all__ = [
     "lpa_communities",
 ]
 
-# Below this node count, AQE is temporarily disabled for the iteration
-# loop: its per-stage re-planning adds ~20-40% latency (measured) while
-# its benefits (skew splits, coalescing large shuffles) cannot apply to
-# micro-stages. Restored after the loop; see _no_aqe_if_tiny.
+# Below this node count, AQE is off for the iteration loop: its
+# per-stage re-planning adds ~20-40% latency (measured) while its
+# benefits (skew splits, coalescing large shuffles) cannot apply to
+# micro-stages. See _loop_confs.
 _AQE_MIN_NODES = 100_000
 
 
-class _loop_tuning:
-    """Context manager for the iteration loop; restores both settings
-    on exit. Session-level conf — safe for the sequential driver/bench
-    pattern, but mutates the shared session for the loop's duration
-    (documented in the public docstrings).
+def _loop_confs(n: int, parts: int) -> dict[str, str]:
+    """The session dials an iteration loop runs under, through
+    ``session.scoped_conf``:
 
-    (a) AQE off below _AQE_MIN_NODES: per-stage re-planning costs
-        20-40% on micro-stages (measured) with nothing to re-plan.
-    (b) ``spark.sql.shuffle.partitions`` aligned with the loop's
+    (a) ``spark.sql.shuffle.partitions`` aligned with the loop's
         ``num_partitions``: the scatter groupBy and gather join
         otherwise shuffle through the session default (e.g. 32) while
         the cached structure sits on ``num_partitions``, adding a
         re-exchange and mis-sized stages to EVERY iteration — aligning
         them halved iteration latency at 15k nodes (5.2s → 2.8s for 8
         iterations, measured) and is equally right at cluster scale,
-        where num_partitions is sized to the graph."""
-
-    def __init__(self, spark, n: int, parts: int):
-        self.spark = spark
-        self.apply_aqe = n < _AQE_MIN_NODES
-        self.parts = parts
-
-    def __enter__(self):
-        if self.apply_aqe:
-            self.prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        self.prev_sp = self.spark.conf.get("spark.sql.shuffle.partitions", "200")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.parts))
-
-    def __exit__(self, *exc):
-        if self.apply_aqe:
-            self.spark.conf.set("spark.sql.adaptive.enabled", self.prev_aqe)
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev_sp)
-        return False
+        where num_partitions is sized to the graph.
+    (b) AQE off below _AQE_MIN_NODES nodes."""
+    confs = {"spark.sql.shuffle.partitions": str(parts)}
+    if n < _AQE_MIN_NODES:
+        confs["spark.sql.adaptive.enabled"] = "false"
+    return confs
 
 
 def _prepared_structure(
@@ -151,14 +136,13 @@ def pagerank(
     The default path is bit-for-bit unchanged when the parameter is
     omitted.
 
-    Note: for the duration of the loop this aligns
-    ``spark.sql.shuffle.partitions`` with ``num_partitions`` (the
-    scatter/gather shuffles must land on the cached structure's
-    partitioning, not the session default), and on graphs below 100k
-    nodes also sets ``spark.sql.adaptive.enabled=false`` (AQE's
-    per-stage re-planning costs 20-40% on micro-stages, measured).
-    Both settings are restored on exit — avoid running concurrent
-    queries on the same session mid-loop.
+    Note: the loop runs under scoped session dials
+    (``session.scoped_conf``): shuffle partitions aligned with
+    ``num_partitions`` (the scatter/gather shuffles must land on the
+    cached structure's partitioning), and AQE off below 100k nodes
+    (its re-planning costs 20-40% on micro-stages, measured). Both are
+    restored on exit but are session-wide while the loop runs — avoid
+    concurrent queries on the same session mid-loop.
     """
     links, parts = _prepared_structure(graph, num_partitions)
     n = links.count()  # also materializes the cached structure
@@ -168,7 +152,7 @@ def pagerank(
     ranks = links.select("id", F.lit(1.0 / n).alias("pr"))
     ckpt = _checkpointer(graph.sparkSession, checkpoint_dir)
     prev_state = None
-    with _loop_tuning(graph.sparkSession, n, parts):
+    with scoped_conf(graph.sparkSession, _loop_confs(n, parts)):
         for i in range(n_iter):
             contribs = (
                 ranks.join(links, "id")
@@ -285,9 +269,8 @@ def personalized_pagerank(
     PersonalizedPageRankNode.java:37-52; columns let Catalyst treat
     each slot as an independent aggregate with a single shuffle).
 
-    Note: shares :func:`pagerank`'s loop-duration session tuning
-    (aligned shuffle partitions; AQE off on tiny graphs; both restored
-    on exit) — see its docstring.
+    Note: the loop runs under :func:`pagerank`'s scoped session dials
+    — see its docstring.
     """
     if not sources:
         raise ValueError("personalized_pagerank requires >=1 source node")
@@ -304,7 +287,7 @@ def personalized_pagerank(
     )
     ckpt = _checkpointer(graph.sparkSession, checkpoint_dir)
     prev_state = None
-    with _loop_tuning(graph.sparkSession, n, parts):
+    with scoped_conf(graph.sparkSession, _loop_confs(n, parts)):
         for i in range(n_iter):
             contribs = (
                 ranks.join(links, "id")
@@ -590,6 +573,9 @@ def hits(
     one slim ``(id, auth, hub)`` frame, lineage truncated per
     half-round with localCheckpoint — the same iteration discipline as
     :func:`pagerank`. No driver-side collects at all.
+
+    Note: the rounds run under :func:`pagerank`'s scoped session
+    dials — see its docstring.
     """
     spark = nodes.sparkSession
     parts = num_partitions or spark.sparkContext.defaultParallelism
@@ -630,9 +616,7 @@ def hits(
 
     hub = ids.select("id", F.lit(1.0).alias("hub"))
     auth = None
-    # same iteration-loop conf discipline as pagerank: shuffles sized
-    # to the graph, AQE micro-stage re-planning off on tiny graphs
-    with _loop_tuning(spark, n, parts):
+    with scoped_conf(spark, _loop_confs(n, parts)):
         for _ in range(n_iter):
             auth = _rescaled(_gather(hub, "hub", "src", "dst", "araw"), "araw", "auth")
             hub = _rescaled(_gather(auth, "auth", "dst", "src", "hraw"), "hraw", "hub")

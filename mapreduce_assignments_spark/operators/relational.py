@@ -51,20 +51,14 @@ __all__ = [
     "yoy_growth",
 ]
 
-# Decimal widths are chosen so every product stays within 38 digits
-# in BOTH Spark and DuckDB (DuckDB errors on decimal overflow rather
-# than reducing scale): measure columns get (18,6), unit factors like
-# (1 - discount) get (8,6) → products peak at (38,18).
+# Measure columns are summed as decimal(18,6): Long-backed in Spark,
+# and within DuckDB's range too (DuckDB errors on decimal overflow
+# rather than reducing scale).
 _DEC = "decimal(18,6)"
-_FAC = "decimal(8,6)"
 
 
 def _dec(col: str):
     return F.col(col).cast(_DEC)
-
-
-def _fac(col: str):
-    return F.col(col).cast(_FAC)
 
 
 def _exact_product_dec(*cols_and_factors) -> "F.Column":

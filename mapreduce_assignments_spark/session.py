@@ -8,11 +8,30 @@ but every knob is chosen to also make sense on a real cluster:
   on a 1000-executor cluster this should be raised to ~2-3x total cores;
   AQE coalescing makes over-provisioning cheap.
 - Arrow enabled for the (rare) Pandas-UDF paths.
+- ``spark.sql.session.timeZone=UTC``: the engine's contract is that
+  every timestamp is a UTC instant.
+
+Outside ``get_spark`` the package writes session confs in two ways:
+
+- Load-time pins: ``sources.tables.load_table`` sets
+  ``spark.sql.legacy.parquet.nanosAsLong=true`` and
+  ``spark.sql.session.timeZone=UTC`` where the session's value differs
+  (a foreign session, e.g. an unconfigured vanilla one); a ``get_spark``
+  session has both, so loading it never writes.
+- Scoped dials, through :func:`scoped_conf`, restored on exit:
+  - bounded stream replays (``streaming.run_replay``): 8 shuffle
+    (state) partitions and no trailing no-data micro-batch, around the
+    query's ``start()`` only;
+  - graph iteration loops (``operators.graph``): shuffle partitions
+    aligned to the loop's partition count, and AQE off below 100k
+    nodes, for the loop's duration.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -34,9 +53,10 @@ def get_spark(
         # some driver testdata generations store TIMESTAMP(NANOS),
         # which the vectorized parquet reader rejects; read as int64
         # nanos and let sources.tables rebuild micro-precision
-        # timestamps (it also re-sets this at load time so foreign
-        # sessions — e.g. the driver's own harness — behave the same).
+        # timestamps (it pins this and the UTC zone at load time on
+        # foreign, unconfigured sessions so they behave the same).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -44,6 +64,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` on ``spark`` for the body of the ``with`` block.
+    On exit each key gets back its earlier explicit value, or is unset
+    if it had none, so the session's ``conf.getAll`` is as before. The
+    session is shared: other threads see the values while the block
+    runs."""
+    before = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def testdata_dir(sf: str = "0.001") -> str:

@@ -66,19 +66,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# Load-time pins, both runtime-settable SQL confs. ``get_spark`` sets
+# them at build time; callers' sessions (the correctness harness builds
+# its own vanilla SparkSession) won't have them. Without nanosAsLong
+# the vectorized reader rejects TIMESTAMP(NANOS) columns outright
+# [PARQUET_TYPE_ILLEGAL]. The UTC pin makes hour()/month()/
+# date_format() over these timestamps — and the NTZ→instant cast below
+# — agree with the tz-naive DuckDB oracles regardless of the host
+# session's default timezone: the engine's documented contract is "all
+# timestamps are UTC instants".
+_LOAD_PINS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Both confs are runtime-settable SQL confs; callers' sessions
-    # (the correctness harness builds its own vanilla SparkSession)
-    # won't have them. Without nanosAsLong the vectorized reader
-    # rejects TIMESTAMP(NANOS) columns outright [PARQUET_TYPE_ILLEGAL].
-    # The UTC pin makes hour()/month()/date_format() over these
-    # timestamps — and the NTZ→instant cast below — agree with the
-    # tz-naive DuckDB oracles regardless of the host session's default
-    # timezone: the engine's documented contract is "all timestamps
-    # are UTC instants".
     if name in _TS_COLS:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        for k, v in _LOAD_PINS.items():
+            # written only where the session differs: an engine
+            # session is never written at load time
+            if spark.conf.get(k, None) != v:
+                spark.conf.set(k, v)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for col in _TS_COLS.get(name, ()):
         if col not in df.columns:
@@ -109,23 +118,20 @@ def ensure_min_parallelism(df: DataFrame, factor: float = 0.5) -> DataFrame:
     no exchange. Row values are untouched, so set-semantics outputs
     (and their oracles) are unaffected.
     """
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    target = max(1, int(sc.defaultParallelism * factor))
-    # JVM-side partition count (the Python ``df.rdd`` property would
-    # additionally build a javaToPython conversion stage) — probed
-    # with AQE disabled: finalizing an AdaptiveSparkPlan MATERIALIZES
-    # its shuffle stages, so probing a frame that already contains an
-    # exchange (e.g. one routed through ``_parallelize``) ran a real
-    # job per query construction (measured: 1 job / 0.25 s AQE-on vs
-    # 0 jobs / 1 ms AQE-off, same count — the guard only needs the
-    # STATIC layout; AQE re-planning still applies at execution).
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    target = max(1, int(df.sparkSession.sparkContext.defaultParallelism * factor))
+    # Static partition count, read JVM-side from the physical plan (the
+    # Python ``df.rdd`` property would additionally build a
+    # javaToPython conversion stage). Under AQE a plan with an exchange
+    # is an AdaptiveSparkPlan, and finalizing it MATERIALIZES its
+    # shuffle stages (measured: 1 job / 0.25 s per query
+    # construction), so the count comes from its initial plan's output
+    # partitioning instead: no job, and the guard only needs the
+    # STATIC layout (AQE re-planning still applies at execution).
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        n_parts = plan.executedPlan().outputPartitioning().numPartitions()
+    else:
         n_parts = df._jdf.rdd().getNumPartitions()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     if n_parts < target:
         return df.repartition(target)
     return df

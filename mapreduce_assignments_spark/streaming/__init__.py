@@ -5,6 +5,7 @@ from .stream_ops import (  # noqa: F401
     maintain_snapshot,
     read_events_stream,
     replay_sessions_to_parquet,
+    run_replay,
     run_to_memory,
     streaming_enriched_counts,
     streaming_exact_dedup,
@@ -26,6 +27,7 @@ __all__ = [
     "streaming_interval_join",
     "replay_sessions_to_parquet",
     "EVENTS_SCHEMA",
+    "run_replay",
     "run_to_memory",
     "streaming_session_stats",
 ]

@@ -26,7 +26,10 @@ from typing import Iterator
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..session import scoped_conf
 
 __all__ = [
     "read_events_stream",
@@ -37,10 +40,50 @@ __all__ = [
     "streaming_sliding_counts",
     "streaming_enriched_counts",
     "streaming_interval_join",
+    "run_replay",
     "run_to_memory",
     "streaming_session_stats",
     "replay_sessions_to_parquet",
 ]
+
+# The dials of a bounded replay, set around ``start()`` only: a query
+# clones the session's confs when it starts, so its state operators
+# and its foreachBatch session keep them once the caller's confs are
+# restored.
+# - 8 state partitions: a stateful query creates one state store per
+#   shuffle partition PER micro-batch, and at replay scale the store
+#   setup dominates (sf0.1, whole streaming family: 32 -> 8 partitions
+#   halves every query). On a cluster this is the stream's
+#   parallelism dial, sized to sustained throughput.
+# - No trailing no-data micro-batch: it only advances the watermark to
+#   EVICT state, which emits nothing for update-mode aggregations,
+#   dedup or inner interval joins; a replay reads its sink after
+#   termination and discards the state, so that batch is pure cost
+#   (0.35-1.6 s per stateful query at sf0.1). A continuous stream
+#   keeps the default.
+_REPLAY_CONFS = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+}
+_REPLAY_TIMEOUT_S = 300
+
+
+def run_replay(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Run ``writer`` as ONE bounded ``availableNow`` replay under the
+    replay dials and wait for it. A replay that has not finished
+    within ``_REPLAY_TIMEOUT_S`` is stopped and raises: its sink is
+    incomplete, and reading it would turn a hang into silently wrong
+    rows. Returns the terminated query."""
+    with scoped_conf(spark, _REPLAY_CONFS):
+        q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(_REPLAY_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"stream replay {q.name or q.id} did not finish its availableNow "
+            f"run within {_REPLAY_TIMEOUT_S}s; its sink is incomplete"
+        )
+    return q
+
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -248,14 +291,10 @@ def maintain_snapshot(
 
     # multi-batch replay is controlled by the caller's readStream
     # options (e.g. maxFilesPerTrigger) — the merge body is per-batch
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+    return run_replay(
+        stream.sparkSession,
+        stream.writeStream.foreachBatch(upsert).outputMode("update"),
     )
-    q.awaitTermination()
-    return q
 
 
 def streaming_sliding_counts(
@@ -345,18 +384,13 @@ def streaming_interval_join(
 
 
 def run_to_memory(stream: DataFrame, name: str, output_mode: str = "update"):
-    """Drain every available input into an in-memory table and stop —
-    the batch-replay harness used by tests (`trigger(availableNow)`).
-    Returns the StreamingQuery (already awaited)."""
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    """Drain every available input into an in-memory table named
+    ``name`` in one bounded replay, then stop. Returns the
+    StreamingQuery (already terminated)."""
+    return run_replay(
+        stream.sparkSession,
+        stream.writeStream.format("memory").queryName(name).outputMode(output_mode),
     )
-    q.awaitTermination()
-    return q
 
 
 def replay_sessions_to_parquet(
@@ -424,23 +458,13 @@ def replay_sessions_to_parquet(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
+    run_replay(
+        spark,
         streaming_session_stats(stream, gap_minutes, watermark)
         .writeStream.outputMode("append")
         .option("checkpointLocation", ckpt)
-        .foreachBatch(lambda b, i: b.write.mode("append").parquet(out))
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(lambda b, i: b.write.mode("append").parquet(out)),
     )
-    # awaitTermination(timeout) returns False on timeout WITHOUT
-    # raising — swallowing that would cache a half-written parquet and
-    # turn a hang into a silent wrong-rows failure downstream
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "session replay did not finish its availableNow run within "
-            "300s; output parquet is incomplete"
-        )
     return out
 
 

@@ -30,7 +30,9 @@ from pyspark.sql.window import Window
 
 import struct
 
-from .functions.hashing import MINHASH_A, MINHASH_B, MINHASH_PRIME, NUM_MINHASHES, h60
+from .functions.hashing import (
+    MINHASH_A, MINHASH_B, MINHASH_PRIME, NUM_MINHASHES, h28_sql, h60, h60_sql,
+)
 from .operators import (
     dedup,
     features,
@@ -58,12 +60,6 @@ from .sources.tables import load_table, register_views
 
 # whitespace tokens with empties dropped — mirrors text.tokens_array
 _TOK = r"list_filter(regexp_split_to_array(text, '\s+'), t -> len(t) > 0)"
-_H28 = "CAST(CONCAT('0x', substring(md5(shingle), 1, 7)) AS BIGINT)"
-
-
-def _h60_sql(expr: str) -> str:
-    return f"CAST(CONCAT('0x', substring(md5({expr}), 1, 15)) AS BIGINT)"
-
 
 _A_SQL = "[" + ",".join(str(a) for a in MINHASH_A) + "]"
 _B_SQL = "[" + ",".join(str(b) for b in MINHASH_B) + "]"
@@ -83,7 +79,7 @@ _SHINGLES_3 = f"""
 _MINHASH_FLAT = f"""
   SELECT doc_id, CAST(g.i AS INTEGER) AS i,
          min(({_A_SQL}[g.i + 1] * h + {_B_SQL}[g.i + 1]) % {MINHASH_PRIME}) AS mh
-  FROM (SELECT doc_id, {_H28} AS h FROM ({_SHINGLES_3})),
+  FROM (SELECT doc_id, {h28_sql("shingle")} AS h FROM ({_SHINGLES_3})),
        generate_series(0, {NUM_MINHASHES - 1}) g(i)
   GROUP BY doc_id, g.i
 """
@@ -317,64 +313,6 @@ def _staged_events_dir(spark, sf_dir: str) -> str:
     )
 
 
-# Streaming state-store parallelism for the replay harness. A
-# Structured Streaming stateful query creates one state store per
-# shuffle partition PER micro-batch; at replay scale the per-store
-# setup dominates wall-clock (measured across the whole streaming
-# family at sf0.1: 32 -> 8 partitions halves every query — interval
-# join 11.4s -> 3.0s). On a cluster this number IS the stream's
-# parallelism dial and is sized to sustained throughput, not to 8 —
-# the operators themselves are unchanged; only the harness wrapper
-# sets it, and restores the session conf afterwards.
-_STREAM_STATE_PARTITIONS = 8
-
-
-def _stream_tuned(fn):
-    """Decorator: run a streaming workload with the state-partitioning
-    dial set for replay scale (see _STREAM_STATE_PARTITIONS); the
-    session's shuffle-partition conf is restored on exit — results are
-    already materialized (memory sink / parquet at rest) by then.
-
-    r16: trailing no-data micro-batches are also disabled for the
-    replay. After an ``availableNow`` run drains its last data batch,
-    the engine schedules one extra empty batch purely to advance the
-    watermark and EVICT state (update-mode aggregations, dedup,
-    inner interval joins emit rows only from DATA batches — eviction
-    produces no output for these shapes). The replay reads its sink
-    AFTER termination and then discards the state store, so that
-    final eviction pass is pure cost — measured 0.35-1.6 s per
-    stateful query at sf0.1 (durationMs trace: interval_join's
-    rows=0 batch was 1.57 s of its 4.2 s). A CONTINUOUS production
-    stream keeps the default (eviction latency and append-mode
-    finalization matter when nobody restarts the query); this dial —
-    like the partition one — is replay-harness scope only and is
-    restored on exit."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(spark, sf_dir):
-        prev = spark.conf.get("spark.sql.shuffle.partitions", "200")
-        prev_ndb = spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-        )
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(_STREAM_STATE_PARTITIONS)
-        )
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-            )
-
-    return wrapper
-
-
-@_stream_tuned
 def q_streaming_hourly_counts(spark, sf_dir):
     """The hourly rollup computed by the Structured Streaming engine:
     events re-staged as a micros parquet dir, replayed through the
@@ -401,7 +339,6 @@ def _staged_dup_events_dir(spark, sf_dir: str) -> str:
     return _stage_once("dup-events", sf_dir, write)
 
 
-@_stream_tuned
 def q_streaming_dedup(spark, sf_dir):
     """Streaming exactly-once dedup under the oracle: the input stream
     carries every event twice (duplicated staging); the deduped output
@@ -417,7 +354,6 @@ def q_streaming_dedup(spark, sf_dir):
     return spark.table("q_stream_dedup_mem")
 
 
-@_stream_tuned
 def q_streaming_latest_events(spark, sf_dir):
     """Streaming CDC compaction: the SAME ``temporal.latest_snapshot``
     operator (groupBy + max_by — nothing batch-specific) runs over the
@@ -461,7 +397,6 @@ def _staged_user_dim_dir(spark, sf_dir: str) -> str:
     )
 
 
-@_stream_tuned
 def q_streaming_enriched_counts(spark, sf_dir):
     """Stream-static enrichment join: the event stream joins the
     staged user-tier dimension (broadcast, re-resolved per
@@ -477,7 +412,6 @@ def q_streaming_enriched_counts(spark, sf_dir):
     return spark.table("q_stream_enrich_mem")
 
 
-@_stream_tuned
 def q_streaming_snapshot_sink(spark, sf_dir):
     """foreachBatch incremental upsert-to-storage: the duplicated
     event stream is replayed ONE FILE PER MICRO-BATCH (>= 8 batches),
@@ -508,7 +442,6 @@ def q_streaming_snapshot_sink(spark, sf_dir):
     )
 
 
-@_stream_tuned
 def q_streaming_sliding_counts(spark, sf_dir):
     """Sliding 2h/1h event-time windows over the staged stream in
     complete mode; each event lands in exactly two windows, which the
@@ -522,7 +455,6 @@ def q_streaming_sliding_counts(spark, sf_dir):
     return spark.table("q_stream_sliding_mem")
 
 
-@_stream_tuned
 def q_streaming_user_sessions(spark, sf_dir):
     """Stateful streaming sessionization (applyInPandasWithState)
     replayed over the staged events and checked against the SAME DuckDB
@@ -971,7 +903,6 @@ def q_balance_classes(spark, sf_dir):
     return sampling.balance_classes(_emb(spark, sf_dir), "label", "vec_id")
 
 
-@_stream_tuned
 def q_streaming_top_users(spark, sf_dir):
     """Complete-mode streaming rank: top-10 users by event count over
     the replayed stream; the oracle is the batch ranking (sorting is
@@ -1414,7 +1345,6 @@ def q_pagerank_convergence(spark, sf_dir):
     )
 
 
-@_stream_tuned
 def q_streaming_countmin(spark, sf_dir):
     """Count-min counters built INCREMENTALLY over the event stream
     (complete-mode stateful aggregation) — the sketch is mergeable, so
@@ -3149,6 +3079,8 @@ def q_streaming_quality_gate(spark, sf_dir):
     funnel rows. Full replay must equal the batch filter_funnel
     oracle — curation-as-a-stream with exact batch parity, no
     stateful operator needed (the additivity IS the design point)."""
+    from .streaming import run_replay
+
     src = _stage_once(
         "quality-stream-src",
         sf_dir,
@@ -3181,17 +3113,15 @@ def q_streaming_quality_gate(spark, sf_dir):
             F.sum(F.when(r1 & r2 & ~r3, 1).otherwise(0)).alias("f3"),
         ).write.mode("append").parquet(out)
 
-    q = (
+    run_replay(
+        spark,
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)  # force multiple batches
         .parquet(src)
         .writeStream.outputMode("append")
         .option("checkpointLocation", f"{root}/ckpt")
-        .foreachBatch(partials)
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(partials),
     )
-    q.awaitTermination(300)
     sums = spark.read.parquet(out).agg(
         F.sum("n0").alias("n0"),
         F.sum("f1").alias("f1"),
@@ -3935,7 +3865,6 @@ def q_scd2_history(spark, sf_dir):
     )
 
 
-@_stream_tuned
 def q_streaming_interval_join(spark, sf_dir):
     """Stream-STREAM interval join (click → purchase attribution
     within 1 hour, per user), both sides replayed through the file
@@ -4629,7 +4558,7 @@ WITH tf AS (
   FROM (SELECT doc_id, unnest({_TOK}) AS t FROM documents)
   GROUP BY doc_id, t
 ), th AS (
-  SELECT doc_id, tf, {_h60_sql('w')} AS h FROM tf
+  SELECT doc_id, tf, {h60_sql('w')} AS h FROM tf
 ), c AS (
   SELECT doc_id, g.b AS b,
          CASE WHEN (h >> g.b) & 1 = 1 THEN tf ELSE -tf END AS v
@@ -4653,7 +4582,7 @@ _SIMHASH_CTE = f"""
       SELECT doc_id, g.b AS b,
              CASE WHEN (h >> g.b) & 1 = 1 THEN tf ELSE -tf END AS v
       FROM (
-        SELECT doc_id, tf, {_h60_sql('w')} AS h FROM (
+        SELECT doc_id, tf, {h60_sql('w')} AS h FROM (
           SELECT doc_id, t AS w, count(*) AS tf
           FROM (SELECT doc_id, unnest({_TOK}) AS t FROM documents)
           GROUP BY doc_id, t)),
@@ -4839,7 +4768,7 @@ FROM scored GROUP BY split
 ORACLE["packing_efficiency"] = f"""
 WITH t AS (
   SELECT doc_id, CAST(len({_TOK}) AS BIGINT) AS ws_tokens,
-         {_h60_sql("CAST(doc_id AS VARCHAR)")} AS h
+         {h60_sql("CAST(doc_id AS VARCHAR)")} AS h
   FROM documents
 ),
 b AS (SELECT *, CAST(h % 8 AS INTEGER) AS bucket FROM t),
@@ -5301,8 +5230,8 @@ SELECT doc_id,
        CASE WHEN len(ts) >= 5
             THEN list_aggregate(list_transform(
                    range(1, len(ts) - 3),
-                   i -> {_h60_sql("array_to_string(ts[i:i+4], ' ')")}), 'min')
-            ELSE {_h60_sql("array_to_string(ts, ' ')")} END AS fingerprint
+                   i -> {h60_sql("array_to_string(ts[i:i+4], ' ')")}), 'min')
+            ELSE {h60_sql("array_to_string(ts, ' ')")} END AS fingerprint
 FROM t
 """
 
@@ -6036,7 +5965,7 @@ WHERE (CASE WHEN o.event_id IS NULL THEN 'insert'
 ORACLE["shuffle_shards"] = f"""
 WITH h AS (
   SELECT doc_id, source,
-         {_h60_sql("'42|' || CAST(doc_id AS VARCHAR)")} AS hh
+         {h60_sql("'42|' || CAST(doc_id AS VARCHAR)")} AS hh
   FROM documents WHERE doc_id IS NOT NULL
 )
 SELECT doc_id, source, CAST(hh % 8 AS INTEGER) AS shard,
@@ -7519,7 +7448,7 @@ WITH v AS (
   SELECT DISTINCT t AS term
   FROM (SELECT unnest({_TOK}) AS t FROM documents)
 ), pb AS (
-  SELECT {_h60_sql("term")} % 1024 AS bucket,
+  SELECT {h60_sql("term")} % 1024 AS bucket,
          count(*) AS n_terms_in_bucket
   FROM v GROUP BY 1
 )
@@ -9087,7 +9016,7 @@ ORACLE["hashing_tf"] = f"""
 WITH tok AS (SELECT doc_id, unnest({_TOK}) AS token FROM documents),
 c AS (
   SELECT doc_id,
-         CAST({_h60_sql("token")} % 1024 AS INTEGER) AS bucket,
+         CAST({h60_sql("token")} % 1024 AS INTEGER) AS bucket,
          count(*) AS tf
   FROM tok GROUP BY doc_id, bucket
 ),
@@ -9109,7 +9038,7 @@ ORACLE["hashing_tfidf"] = f"""
 WITH tok AS (SELECT doc_id, unnest({_TOK}) AS token FROM documents),
 c AS (
   SELECT doc_id,
-         CAST({_h60_sql("token")} % 1024 AS INTEGER) AS bucket,
+         CAST({h60_sql("token")} % 1024 AS INTEGER) AS bucket,
          count(*) AS tf
   FROM tok GROUP BY doc_id, bucket
 ),
@@ -9140,7 +9069,7 @@ ORACLE["hashing_tf_cells"] = f"""
 WITH tok AS (SELECT doc_id, unnest({_TOK}) AS token FROM documents),
 c AS (
   SELECT doc_id,
-         CAST({_h60_sql("token")} % 1024 AS INTEGER) AS bucket,
+         CAST({h60_sql("token")} % 1024 AS INTEGER) AS bucket,
          count(*) AS tf
   FROM tok GROUP BY doc_id, bucket
 )
@@ -9156,7 +9085,7 @@ ORACLE["hashing_tfidf_cells"] = f"""
 WITH tok AS (SELECT doc_id, unnest({_TOK}) AS token FROM documents),
 c AS (
   SELECT doc_id,
-         CAST({_h60_sql("token")} % 1024 AS INTEGER) AS bucket,
+         CAST({h60_sql("token")} % 1024 AS INTEGER) AS bucket,
          count(*) AS tf
   FROM tok GROUP BY doc_id, bucket
 ),
@@ -9179,7 +9108,7 @@ FROM w
 # approximation itself is oracle-exact (HLL could never be).
 ORACLE["kmv_distinct"] = f"""
 WITH tok AS (SELECT source, unnest({_TOK}) AS token FROM documents),
-d AS (SELECT DISTINCT source, {_h60_sql("CAST(token AS VARCHAR)")} AS h FROM tok),
+d AS (SELECT DISTINCT source, {h60_sql("CAST(token AS VARCHAR)")} AS h FROM tok),
 r AS (SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS rn FROM d)
 SELECT source, 64 AS k, count(*) AS n_kept,
        round(CASE WHEN count(*) < 64 THEN CAST(count(*) AS DOUBLE)
@@ -9193,7 +9122,7 @@ FROM r WHERE rn <= 64 GROUP BY source
 ORACLE["pack_sequences"] = f"""
 WITH t AS (
   SELECT doc_id, CAST(len({_TOK}) AS BIGINT) AS ws_tokens,
-         {_h60_sql("CAST(doc_id AS VARCHAR)")} AS h
+         {h60_sql("CAST(doc_id AS VARCHAR)")} AS h
   FROM documents
 ),
 b AS (SELECT *, CAST(h % 8 AS INTEGER) AS bucket FROM t),
@@ -9215,7 +9144,7 @@ FROM c
 ORACLE["weighted_sample"] = f"""
 SELECT doc_id, n_chars FROM (
   SELECT doc_id, n_chars,
-         round(ln(({_h60_sql("CAST(doc_id AS VARCHAR)")} + 1)
+         round(ln(({h60_sql("CAST(doc_id AS VARCHAR)")} + 1)
                   / 1152921504606846976.0) / CAST(n_chars AS DOUBLE), 9) AS score
   FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0
   ORDER BY score DESC, doc_id LIMIT 200)

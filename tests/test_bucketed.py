@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import pytest
 
+from mapreduce_assignments_spark.session import scoped_conf
 from mapreduce_assignments_spark.sources.bucketed import read_bucketed, write_bucketed
 from mapreduce_assignments_spark.sources.tables import load_table
 
@@ -10,10 +11,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture()
 def no_broadcast(spark):
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        yield
 
 
 def test_bucketed_join_has_no_exchange(spark, no_broadcast):

@@ -582,3 +582,44 @@ def test_stage_once_writes_once_per_kind_and_sf_dir():
     c = workloads._stage_once("test-kind-b", "sf-x", calls.append)
     assert calls == [a, b, c]
     assert len({a, b, c}) == 3
+
+
+def test_replay_runs_with_its_dials_and_restores_the_session(spark, events_dir):
+    """A stateful replay on a 4-partition session runs its state
+    operator on the replay's 8 partitions, runs no trailing empty
+    batch, and leaves the caller's confs as they were."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    before = dict(spark.conf.getAll)
+    q = run_to_memory(
+        streaming_hourly_counts(read_events_stream(spark, events_dir)),
+        "t_replay_dials_mem",
+        "update",
+    )
+    progress = q.recentProgress
+    assert progress
+    assert all(
+        p["stateOperators"][0]["numShufflePartitions"] == 8 for p in progress
+    )
+    assert all(p["numInputRows"] > 0 for p in progress)
+    assert dict(spark.conf.getAll) == before
+
+
+def test_replay_timeout_stops_the_query_and_raises(spark, tmp_path, monkeypatch):
+    """A replay still running at the timeout is stopped and raises
+    instead of handing back a half-written sink."""
+    import time
+
+    from mapreduce_assignments_spark.streaming import run_replay, stream_ops
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    monkeypatch.setattr(stream_ops, "_REPLAY_TIMEOUT_S", 0.5)
+    writer = (
+        spark.readStream.schema("id long")
+        .parquet(src)
+        .writeStream.queryName("t_replay_timeout")
+        .foreachBatch(lambda batch, batch_id: time.sleep(3))
+    )
+    with pytest.raises(TimeoutError, match="t_replay_timeout"):
+        run_replay(spark, writer)
+    assert not any(q.name == "t_replay_timeout" for q in spark.streams.active)
