@@ -529,6 +529,15 @@ def main() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
     spark = get_spark("bench")
+    # Every unpartitioned window in the package runs on a bounded input
+    # (each site carries a "# bounded-input" note, linted by
+    # tests/test_window_lint.py), so WindowExec's per-run "No Partition
+    # Defined" warning is noise on a bench run's stderr.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     # one warm-up action so JVM/codegen startup isn't billed to query 1
     workloads.q_word_count(spark, sf_dir).write.format("noop").mode("overwrite").save()
 

@@ -41,6 +41,7 @@ from ..functions.hashing import (
     minhash_value,
     minhash_value_spark_sql,
 )
+from .fixpoint import fixpoint
 from .text import tokens_array, tokens_spark_sql
 
 __all__ = [
@@ -153,8 +154,8 @@ def ngram_jaccard_pairs(
     # truncates lineage onto EXECUTOR-LOCAL storage — losing an
     # executor now fails the job instead of recomputing the subtree.
     # Fine on local[n]; on a preemptible-node cluster, prefer a
-    # reliable checkpoint dir (graph._checkpointer's pattern) or
-    # accept job retry as the recovery path.
+    # reliable checkpoint dir (fixpoint.materialize's checkpoint_dir)
+    # or accept job retry as the recovery path.
     sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -627,25 +628,21 @@ def dedup_clusters(
     the first round nothing changes. The previous label rides the
     aggregation (``old`` = the self row's label, the only non-null),
     so the per-round change count is a ``df.observe`` metric resolved
-    by the checkpoint materialization itself — ONE action per round;
-    the round-4 shape re-joined new labels to old for a separate
-    witness count (two actions, one extra join scan per round).
+    by the checkpoint materialization itself — ONE action per round.
 
     Scale shape: state is one (node, label) row per PAIRED document —
     orders of magnitude smaller than the corpus; each round is one
     join (edges x labels, both hash-partitioned on the node id) plus
     one groupBy-min; nothing but the per-round change flag reaches the
-    driver. Each round's state is eagerly ``localCheckpoint``-ed:
-    ``labels`` appears twice in a round's plan (propagation join +
-    self-union), so WITHOUT per-round lineage truncation the logical
-    plan doubles every round — exponential analysis cost that OOMs the
-    driver near 12 rounds regardless of data size (pagerank:
-    ``graph._checkpointer`` solves the same problem). ``max_iter``
-    bounds pathological chains (a partially converged labeling still
-    merges every cluster of diameter <= max_iter; the cap is
-    documented, not silent).
+    driver. Each round is one ``operators.fixpoint`` round, whose eager
+    checkpoint cuts the lineage: ``labels`` appears twice in a round's
+    plan (propagation join + self-union), so WITHOUT per-round
+    truncation the logical plan doubles every round — exponential
+    analysis cost that OOMs the driver near 12 rounds regardless of
+    data size. ``max_iter`` bounds pathological chains (a partially
+    converged labeling still merges every cluster of diameter <=
+    max_iter; hitting the cap is warned, not silent).
     """
-    spark = pairs.sparkSession
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -658,38 +655,33 @@ def dedup_clusters(
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=True)
     )
-    converged = False
-    for _ in range(max_iter):
-        from pyspark.sql import Observation
 
+    def step(labels: DataFrame, m: dict, i: int):
         prop = edges.join(labels, edges["src"] == labels["id"]).select(
             F.col("dst").alias("id"),
             F.col("label"),
             F.lit(None).cast("long").alias("old"),
         )
-        self_rows = labels.select(
-            "id", "label", F.col("label").alias("old")
-        )
+        self_rows = labels.select("id", "label", F.col("label").alias("old"))
         # every id has exactly one self row (labels is grouped by id),
         # so min("old") recovers the previous label; labels only ever
         # decrease, so label < old counts exactly the changed nodes.
-        obs = Observation()
         new_labels = (
             self_rows.unionByName(prop)
             .groupBy("id")
             .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-            .observe(
-                obs,
-                F.sum(
-                    F.when(F.col("label") < F.col("old"), 1).otherwise(0)
-                ).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
         )
-        labels = new_labels.select("id", "label")
-        if (obs.get["changed"] or 0) == 0:
-            converged = True
-            break
+        changed = F.sum(F.when(F.col("label") < F.col("old"), 1).otherwise(0))
+        return new_labels, [changed.alias("changed")]
+
+    labels, _ = fixpoint(
+        labels,
+        step,
+        max_iter,
+        until=lambda _, m: (m["changed"] or 0) == 0,
+        cap_warning=f"dedup_clusters hit max_iter={max_iter} before convergence; "
+        "components wider than max_iter hops may be split",
+    )
     sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
     out = labels.join(sizes, "label").select(
         F.col("id").alias("doc_id"),
@@ -699,14 +691,6 @@ def dedup_clusters(
     # `out` depends only on the final checkpointed labels, never on
     # the cached edge list.
     edges.unpersist()
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"dedup_clusters hit max_iter={max_iter} before convergence; "
-            "components wider than max_iter hops may be split",
-            stacklevel=2,
-        )
     return out
 
 

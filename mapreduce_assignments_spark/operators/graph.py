@@ -32,21 +32,26 @@ on id once, cached, and reused every iteration — the Spark analogue of
 the reference's NonSplitableSequenceFileInputFormat partition-stability
 trick (RunPageRankBasic.java:464-478,491). Per-iteration state is one
 slim (id, pr) DataFrame; the driver-side "side file" aggregation
-becomes a one-line ``agg(sum)`` action. Lineage is truncated every
-``checkpoint_every`` iterations — localCheckpoint by default (fast,
-executor-local), or reliable HDFS/S3 checkpoints when
-``checkpoint_dir`` is passed (survives executor loss on a cluster).
-The scatter join (ranks ⋈ structure on id) is co-partitioned, so AQE
-only shuffles the slim ranks side after the first iteration.
+becomes an ``observe`` metric on the round's materialization.
+
+Every iterative operator here (pagerank, personalized_pagerank, hits,
+the BFS frontier under bfs_distances and harmonic_centrality, kcore,
+lpa_communities) runs its rounds through ``operators.fixpoint``: one
+eager checkpoint per round — localCheckpoint by default, reliable
+HDFS/S3 checkpoints when ``checkpoint_dir`` is passed — that cuts the
+lineage and resolves the round's driver-side scalars in the same
+action. The PageRank family's dials (shuffle partitions aligned with
+the cached structure, AQE off on small graphs) apply in a child
+session, never on the caller's.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
-from ..session import scoped_conf
+from .fixpoint import fixpoint, materialize
 
 __all__ = [
     "pagerank",
@@ -66,26 +71,19 @@ __all__ = [
     "lpa_communities",
 ]
 
-# Below this node count, AQE is off for the iteration loop: its
-# per-stage re-planning adds ~20-40% latency (measured) while its
-# benefits (skew splits, coalescing large shuffles) cannot apply to
-# micro-stages. See _loop_confs.
 _AQE_MIN_NODES = 100_000
 
 
 def _loop_confs(n: int, parts: int) -> dict[str, str]:
-    """The session dials an iteration loop runs under, through
-    ``session.scoped_conf``:
-
-    (a) ``spark.sql.shuffle.partitions`` aligned with the loop's
-        ``num_partitions``: the scatter groupBy and gather join
-        otherwise shuffle through the session default (e.g. 32) while
-        the cached structure sits on ``num_partitions``, adding a
-        re-exchange and mis-sized stages to EVERY iteration — aligning
-        them halved iteration latency at 15k nodes (5.2s → 2.8s for 8
-        iterations, measured) and is equally right at cluster scale,
-        where num_partitions is sized to the graph.
-    (b) AQE off below _AQE_MIN_NODES nodes."""
+    """The private dials of a PageRank-family loop: (a) shuffle
+    partitions aligned with the loop's ``num_partitions`` — otherwise
+    the scatter groupBy and gather join shuffle through the session
+    default (e.g. 32) while the cached structure sits on
+    ``num_partitions``, adding a re-exchange to EVERY iteration
+    (aligning them halved iteration latency at 15k nodes, measured);
+    (b) AQE off below _AQE_MIN_NODES nodes: its per-stage re-planning
+    adds 20-40% latency (measured), and its skew splits and coalescing
+    cannot help micro-stages."""
     confs = {"spark.sql.shuffle.partitions": str(parts)}
     if n < _AQE_MIN_NODES:
         confs["spark.sql.adaptive.enabled"] = "false"
@@ -104,22 +102,10 @@ def _prepared_structure(
     return links, parts
 
 
-def _checkpointer(spark, checkpoint_dir: str | None):
-    """localCheckpoint is fast but lives in executor memory/disk — if
-    an executor dies the lineage is gone (fine on local[n]). On a real
-    cluster pass ``checkpoint_dir`` (HDFS/S3) for reliable checkpoints
-    that survive executor loss."""
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        return lambda df: df.checkpoint(eager=True)
-    return lambda df: df.localCheckpoint(eager=True)
-
-
 def pagerank(
     graph: DataFrame,
     n_iter: int = 10,
     alpha: float = 0.15,
-    checkpoint_every: int = 5,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
     residuals: list | None = None,
@@ -131,125 +117,77 @@ def pagerank(
     Pass ``residuals=[]`` to collect the per-iteration L1 delta
     ``Σ|pr_i - pr_{i-1}|`` (the convergence-monitoring signal). Each
     iteration's delta rides the NEXT iteration's state materialization
-    as a second observe metric — tracking adds ONE scalar-agg job for
-    the final iteration's delta instead of one per iteration (r15).
-    The default path is bit-for-bit unchanged when the parameter is
-    omitted.
+    as a second observe metric, and the last one rides one extra
+    materialization of the final ranks. The default path is unchanged
+    when the parameter is omitted.
 
-    Note: the loop runs under scoped session dials
-    (``session.scoped_conf``): shuffle partitions aligned with
-    ``num_partitions`` (the scatter/gather shuffles must land on the
-    cached structure's partitioning), and AQE off below 100k nodes
-    (its re-planning costs 20-40% on micro-stages, measured). Both are
-    restored on exit but are session-wide while the loop runs — avoid
-    concurrent queries on the same session mid-loop.
+    The rounds run under private dials (:func:`_loop_confs`).
     """
     links, parts = _prepared_structure(graph, num_partitions)
     n = links.count()  # also materializes the cached structure
     if n == 0:
         return graph.sparkSession.createDataFrame([], "id int, pr double")
+    track = residuals is not None
+    resid = F.sum(F.abs(F.col("pr") - F.col("prev"))).alias("resid")
 
-    ranks = links.select("id", F.lit(1.0 / n).alias("pr"))
-    ckpt = _checkpointer(graph.sparkSession, checkpoint_dir)
-    prev_state = None
-    with scoped_conf(graph.sparkSession, _loop_confs(n, parts)):
-        for i in range(n_iter):
-            contribs = (
-                ranks.join(links, "id")
-                .where(F.col("outdeg") > 0)
-                .select(
-                    F.explode("adj").alias("id"),
-                    (F.col("pr") / F.col("outdeg")).alias("m"),
-                )
+    def ranks_of(state: DataFrame, m: dict) -> DataFrame:
+        """The ranks a round's state and its received-mass total give;
+        before the first round, the initial ranks themselves."""
+        if not m:
+            return state
+        missing = 1.0 - (m["total"] or 0.0)
+        new_pr = F.lit(alpha / n) + F.lit(1.0 - alpha) * (
+            F.col("recv") + F.lit(missing / n)
+        )
+        # tracking carries the round's input pr forward, so the next
+        # materialization can observe the delta
+        carry = [F.col("pr").alias("prev")] if track else []
+        return state.select("id", new_pr.alias("pr"), *carry)
+
+    def step(state: DataFrame, m: dict, i: int):
+        if track and "resid" in m:
+            residuals.append(m["resid"])
+        ranks = ranks_of(state, m)
+        if i == n_iter:  # tracking only: the last delta rides the final ranks
+            return ranks, [resid]
+        contribs = (
+            ranks.join(links, "id")
+            .where(F.col("outdeg") > 0)
+            .select(
+                F.explode("adj").alias("id"),
+                (F.col("pr") / F.col("outdeg")).alias("m"),
             )
-            # inner-join semantics: mass sent to ids without a row
-            # vanishes into the missing mass (reference :288-296).
-            recv = contribs.groupBy("id").agg(F.sum("m").alias("recv"))
-            # the received-mass total rides the state materialization
-            # as an observe metric (functions/telemetry.py pattern):
-            # ONE pass computes and caches state AND the scalar the
-            # driver needs — the reference needed a second job plus an
-            # HDFS side file for this (RunPageRankBasic.java:304-318);
-            # the round-4 loop still paid a separate agg stage re-
-            # scanning the fresh cache.
-            obs = Observation()
-            if residuals is None:
-                state = (
-                    links.select("id")
-                    .join(recv, "id", "left")
-                    .select("id", F.coalesce("recv", F.lit(0.0)).alias("recv"))
-                    .observe(obs, F.sum("recv").alias("total"))
-                    .cache()
-                )
-            else:
-                # tracking variant: carry the previous pr through the
-                # same join so the delta can be aggregated from cache.
-                # r15: iteration i-1's residual Σ|pr_{i-1} − pr_{i-2}|
-                # rides THIS materialization as a SECOND observe metric
-                # (`ranks` carries the two pr generations as columns),
-                # so tracking no longer pays a separate scalar-agg job
-                # per iteration — only the final iteration's delta
-                # needs one job after the loop. Same double summands in
-                # a different sum order: the same ulp-drift class as
-                # the dangling-mass total, absorbed by the consumer's
-                # round-6 (equivalence pinned by the oracle at two SFs
-                # and tests/test_graph.py residual assertions).
-                sel = [
-                    "id",
-                    F.col("pr").alias("prev_pr"),
-                    F.coalesce("recv", F.lit(0.0)).alias("recv"),
-                ]
-                metrics = [F.sum("recv").alias("total")]
-                if i > 0:
-                    sel.append(F.col("prev").alias("prev2"))
-                    metrics.append(
-                        F.sum(F.abs(F.col("prev_pr") - F.col("prev2"))).alias("resid")
-                    )
-                state = (
-                    ranks.join(recv, "id", "left")
-                    .select(*sel)
-                    .observe(obs, *metrics)
-                    .cache()
-                )
-            state.write.format("noop").mode("overwrite").save()
-            total = obs.get["total"] or 0.0
-            if residuals is not None and i > 0:
-                residuals.append(obs.get["resid"])
-            # the noop write materialized `state`, so the previous
-            # iteration's cached state is dead — release it now (a long
-            # run must not accumulate one cached DataFrame per iter).
-            if prev_state is not None:
-                prev_state.unpersist()
-            prev_state = state
-            missing = 1.0 - total
-            new_pr = (
-                F.lit(alpha / n)
-                + F.lit(1.0 - alpha) * (F.col("recv") + F.lit(missing / n))
-            )
-            if residuals is None:
-                ranks = state.select("id", new_pr.alias("pr"))
-            else:
-                # carry this iteration's input pr forward so the next
-                # materialization's observe can compute the delta
-                ranks = state.select(
-                    "id", new_pr.alias("pr"), F.col("prev_pr").alias("prev")
-                )
-            if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-                ranks = ckpt(ranks)
-        # materialize the result, then release every cached helper.
-        ranks = ckpt(ranks)
-        if residuals is not None and n_iter > 0:
-            # the final iteration's delta: ONE bounded scalar agg over
-            # the just-checkpointed ranks (which still carry prev)
-            [row] = ranks.agg(
-                F.sum(F.abs(F.col("pr") - F.col("prev"))).alias("d")
-            ).collect()
-            residuals.append(row["d"])
-            ranks = ranks.select("id", "pr")
-    if prev_state is not None:
-        prev_state.unpersist()
+        )
+        # inner-join semantics: mass sent to ids without a row
+        # vanishes into the missing mass (reference :288-296).
+        recv = contribs.groupBy("id").agg(F.sum("m").alias("recv"))
+        # the received-mass total rides the state materialization as an
+        # observe metric: ONE pass computes the state AND the scalar the
+        # driver needs — the reference needed a second job plus an HDFS
+        # side file for this (RunPageRankBasic.java:304-318).
+        got = F.coalesce("recv", F.lit(0.0)).alias("recv")
+        total = F.sum("recv").alias("total")
+        if not track:
+            return links.select("id").join(recv, "id", "left").select("id", got), [total]
+        # tracking: the state keeps the round's (pr, prev), so iteration
+        # i-1's residual rides THIS materialization. Its ulp drift from
+        # the sum order is absorbed by the consumer's round-6.
+        state = ranks.join(recv, "id", "left").select(*ranks.columns, got)
+        return state, ([total, resid] if i > 0 else [total])
+
+    state, m = fixpoint(
+        links.select("id", F.lit(1.0 / n).alias("pr")),
+        step,
+        n_iter + 1 if track and n_iter > 0 else n_iter,
+        dials=_loop_confs(n, parts),
+        checkpoint_dir=checkpoint_dir,
+    )
     links.unpersist()
-    return ranks
+    if not track:
+        return ranks_of(state, m)
+    if "resid" in m:
+        residuals.append(m["resid"])
+    return state.select("id", "pr")
 
 
 def personalized_pagerank(
@@ -257,7 +195,6 @@ def personalized_pagerank(
     sources: list[int],
     n_iter: int = 10,
     alpha: float = 0.15,
-    checkpoint_every: int = 5,
     num_partitions: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
@@ -269,8 +206,7 @@ def personalized_pagerank(
     PersonalizedPageRankNode.java:37-52; columns let Catalyst treat
     each slot as an independent aggregate with a single shuffle).
 
-    Note: the loop runs under :func:`pagerank`'s scoped session dials
-    — see its docstring.
+    The rounds run under :func:`pagerank`'s private dials.
     """
     if not sources:
         raise ValueError("personalized_pagerank requires >=1 source node")
@@ -278,66 +214,56 @@ def personalized_pagerank(
     n = links.count()
 
     cols = [f"pr_{k}" for k in range(len(sources))]
-    ranks = links.select(
+
+    def ranks_of(state: DataFrame, m: dict) -> DataFrame:
+        if not m:
+            return state
+        return state.select(
+            "id",
+            *[
+                F.when(
+                    F.col("id") == F.lit(src),
+                    F.lit(alpha)
+                    + F.lit(1.0 - alpha) * (F.col(c) + F.lit(1.0 - (m[c] or 0.0))),
+                )
+                .otherwise(F.lit(1.0 - alpha) * F.col(c))
+                .alias(c)
+                for c, src in zip(cols, sources)
+            ],
+        )
+
+    def step(state: DataFrame, m: dict, i: int):
+        contribs = (
+            ranks_of(state, m)
+            .join(links, "id")
+            .where(F.col("outdeg") > 0)
+            .select(
+                F.explode("adj").alias("id"),
+                *[(F.col(c) / F.col("outdeg")).alias(c) for c in cols],
+            )
+        )
+        recv = contribs.groupBy("id").agg(*[F.sum(c).alias(c) for c in cols])
+        # all per-source totals ride the state materialization as one
+        # observe metric set (see the basic pagerank loop).
+        return (
+            links.select("id")
+            .join(recv, "id", "left")
+            .select("id", *[F.coalesce(c, F.lit(0.0)).alias(c) for c in cols]),
+            [F.sum(c).alias(c) for c in cols],
+        )
+
+    init = links.select(
         "id",
         *[
             F.when(F.col("id") == F.lit(src), 1.0).otherwise(0.0).alias(c)
             for c, src in zip(cols, sources)
         ],
     )
-    ckpt = _checkpointer(graph.sparkSession, checkpoint_dir)
-    prev_state = None
-    with scoped_conf(graph.sparkSession, _loop_confs(n, parts)):
-        for i in range(n_iter):
-            contribs = (
-                ranks.join(links, "id")
-                .where(F.col("outdeg") > 0)
-                .select(
-                    F.explode("adj").alias("id"),
-                    *[(F.col(c) / F.col("outdeg")).alias(c) for c in cols],
-                )
-            )
-            recv = contribs.groupBy("id").agg(
-                *[F.sum(c).alias(c) for c in cols]
-            )
-            # all per-source totals ride the state materialization as
-            # one observe metric set — single pass, no separate agg
-            # stage (see the basic pagerank loop).
-            obs = Observation()
-            state = (
-                links.select("id")
-                .join(recv, "id", "left")
-                .select(
-                    "id", *[F.coalesce(c, F.lit(0.0)).alias(c) for c in cols]
-                )
-                .observe(obs, *[F.sum(c).alias(c) for c in cols])
-                .cache()
-            )
-            state.write.format("noop").mode("overwrite").save()
-            totals = obs.get
-            if prev_state is not None:
-                prev_state.unpersist()
-            prev_state = state
-            ranks = state.select(
-                "id",
-                *[
-                    F.when(
-                        F.col("id") == F.lit(src),
-                        F.lit(alpha)
-                        + F.lit(1.0 - alpha)
-                        * (F.col(c) + F.lit(1.0 - (totals[c] or 0.0))),
-                    )
-                    .otherwise(F.lit(1.0 - alpha) * F.col(c))
-                    .alias(c)
-                    for c, src in zip(cols, sources)
-                ],
-            )
-            if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-                ranks = ckpt(ranks)
-        ranks = ckpt(ranks)
-    if prev_state is not None:
-        prev_state.unpersist()
+    state, m = fixpoint(
+        init, step, n_iter, dials=_loop_confs(n, parts), checkpoint_dir=checkpoint_dir
+    )
     links.unpersist()
+    ranks = ranks_of(state, m)
 
     # flatten to (source, id, pr)
     slot_structs = F.array(
@@ -364,6 +290,7 @@ def top_k_nodes(ranks: DataFrame, k: int = 10) -> DataFrame:
     """
     # limit(k) first so the row_number window only sees k rows on one
     # partition — TakeOrderedAndProject does the distributed top-k.
+    # bounded-input: the k rows of the limit below
     w = Window.orderBy(F.desc("pr"), F.asc("id"))
     return (
         ranks.orderBy(F.desc("pr"), F.asc("id"))
@@ -411,6 +338,18 @@ def _undirected_edges(nodes: DataFrame) -> DataFrame:
     ).distinct()
 
 
+def _symmetrized(edges: DataFrame) -> DataFrame:
+    """Both orientations ``(id, nbr)`` of a canonical edge set."""
+    return edges.select(F.col("a").alias("id"), F.col("b").alias("nbr")).unionAll(
+        edges.select(F.col("b").alias("id"), F.col("a").alias("nbr"))
+    )
+
+
+def _degrees(edges: DataFrame, name: str) -> DataFrame:
+    """``(id, name)``: every endpoint's degree in a canonical edge set."""
+    return _symmetrized(edges).groupBy("id").agg(F.count("*").alias(name))
+
+
 def degree_histogram(nodes: DataFrame) -> DataFrame:
     """Undirected degree distribution ``(degree, n_nodes)`` — the
     first thing anyone plots about a graph. Degrees are counted over
@@ -420,10 +359,7 @@ def degree_histogram(nodes: DataFrame) -> DataFrame:
     (isolated) nodes do not appear. Two partial aggregations; no
     joins."""
     edges = _undirected_edges(nodes)
-    ends = edges.select(F.col("a").alias("id")).unionAll(
-        edges.select(F.col("b").alias("id"))
-    )
-    deg = ends.groupBy("id").agg(F.count("*").alias("degree"))
+    deg = _degrees(edges, "degree")
     return deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
 
 
@@ -466,10 +402,7 @@ def _oriented_edges(edges: DataFrame) -> DataFrame:
     every edge points from its smaller ``(degree, id)`` endpoint to the
     larger, capping per-node out-degree at O(sqrt(m)) (Suri &
     Vassilvitskii, WWW'11). Checkpointed — callers self-join it."""
-    ends = edges.select(F.col("a").alias("id")).unionAll(
-        edges.select(F.col("b").alias("id"))
-    )
-    deg = ends.groupBy("id").agg(F.count("*").alias("deg"))
+    deg = _degrees(edges, "deg")
     return (
         edges.join(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "da"), "a")
         .join(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "db"), "b")
@@ -523,10 +456,7 @@ def clustering_coefficient(nodes: DataFrame) -> DataFrame:
     aggregation — the 100 TB plan is identical to triangle_count's.
     """
     edges = _undirected_edges(nodes).localCheckpoint(eager=True)
-    ends = edges.select(F.col("a").alias("id")).unionAll(
-        edges.select(F.col("b").alias("id"))
-    )
-    deg = ends.groupBy("id").agg(F.count("*").alias("degree"))
+    deg = _degrees(edges, "degree")
     tri = (
         _closed_wedges(edges)
         .select(F.explode(F.array("u", "x", "y")).alias("id"))
@@ -567,60 +497,49 @@ def hits(
     orders into every score every round. Scaling choice cannot affect
     the ranking — power iteration is direction-only.
 
-    Scale shape: per round, two key-partitioned equi-joins (scatter
-    hub mass along edges, gather; then the reverse) plus two bounded
-    one-row max aggregates that broadcast back into the plan; state is
-    one slim ``(id, auth, hub)`` frame, lineage truncated per
-    half-round with localCheckpoint — the same iteration discipline as
-    :func:`pagerank`. No driver-side collects at all.
-
-    Note: the rounds run under :func:`pagerank`'s scoped session
-    dials — see its docstring.
+    Scale shape: each half-round (scatter hub mass along edges and
+    gather, then the reverse) is one ``fixpoint`` round under
+    :func:`pagerank`'s private dials: the slim ``(id, auth, hub)`` state
+    is checkpointed with the fresh column's maximum observed in the
+    same action, and the next half-round rescales by a literal divide.
     """
-    spark = nodes.sparkSession
-    parts = num_partitions or spark.sparkContext.defaultParallelism
+    parts = num_partitions or nodes.sparkSession.sparkContext.defaultParallelism
     edges = (
         nodes.select(F.col("id").alias("src"), F.explode("adj").alias("dst"))
         .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    ids = nodes.select("id").localCheckpoint(eager=True)
-    n = ids.count()
+    init, m0 = materialize(
+        nodes.select("id", F.lit(0.0).alias("auth"), F.lit(1.0).alias("hub")),
+        F.count(F.lit(1)).alias("n"),
+    )
 
-    def _gather(state: DataFrame, state_col: str, src: str, dst: str, out: str) -> DataFrame:
-        """One mass-flow half-step: scatter ``state_col`` along
-        (src -> dst), gather by sum, left-join back onto the full id
-        set with absent nodes at 0."""
-        return ids.join(
-            edges.join(state.withColumnRenamed("id", src), src)
+    def rescaled(state: DataFrame, m: dict, col: str) -> DataFrame:
+        """``state`` with ``col`` divided by its observed maximum."""
+        scaled = (F.col(col) / F.lit(m["m"])) if m.get("m") else F.lit(0.0)
+        return state.withColumn(col, scaled)
+
+    def step(state: DataFrame, m: dict, i: int):
+        """Half-round ``i``: even rounds gather authority from hubs
+        along (src -> dst), odd rounds hub from authorities against
+        them; nodes that receive nothing get 0."""
+        if i % 2 == 0:
+            src, dst, frm, to = "src", "dst", "hub", "auth"
+        else:
+            src, dst, frm, to = "dst", "src", "auth", "hub"
+        if i > 0:
+            state = rescaled(state, m, frm)
+        raw = (
+            edges.join(state.select(F.col("id").alias(src), frm), src)
             .groupBy(F.col(dst).alias("id"))
-            .agg(F.sum(state_col).alias("raw")),
-            "id",
-            "left",
-        ).select("id", F.coalesce("raw", F.lit(0.0)).alias(out))
+            .agg(F.sum(frm).alias("raw"))
+        )
+        nxt = state.join(raw, "id", "left").withColumn(to, F.coalesce("raw", F.lit(0.0)))
+        return nxt.select("id", "auth", "hub"), [F.max(to).alias("m")]
 
-    def _rescaled(raw: DataFrame, col: str, out: str) -> DataFrame:
-        """Materialize the half-step ONCE (localCheckpoint), with the
-        max riding the same action as an observe metric (the pagerank
-        one-pass discipline — a crossJoin'd max aggregate would
-        re-execute the whole un-checkpointed half-step a second time);
-        the rescale is then a literal divide over the checkpointed
-        rows. max is aggregation-order-exact, so the driver round-trip
-        costs nothing in parity."""
-        obs = Observation()
-        mat = raw.observe(obs, F.max(col).alias("m")).localCheckpoint(eager=True)
-        m = obs.get["m"]
-        scaled = (F.col(col) / F.lit(m)) if m else F.lit(0.0)
-        return mat.select("id", scaled.alias(out))
-
-    hub = ids.select("id", F.lit(1.0).alias("hub"))
-    auth = None
-    with scoped_conf(spark, _loop_confs(n, parts)):
-        for _ in range(n_iter):
-            auth = _rescaled(_gather(hub, "hub", "src", "dst", "araw"), "araw", "auth")
-            hub = _rescaled(_gather(auth, "auth", "dst", "src", "hraw"), "hraw", "hub")
-    return auth.join(hub, "id").select("id", "auth", "hub")
+    state, m = fixpoint(init, step, 2 * n_iter, dials=_loop_confs(m0["n"], parts))
+    return rescaled(state, m, "hub") if n_iter > 0 else state
 
 
 def bfs_distances(nodes: DataFrame, sources: list[int], max_hops: int = 10) -> DataFrame:
@@ -631,54 +550,48 @@ def bfs_distances(nodes: DataFrame, sources: list[int], max_hops: int = 10) -> D
     standard frontier contract.
 
     Level-synchronous frontier expansion, all-integer (so
-    cross-engine parity is exact, no float drift to manage): per hop,
-    one semi-join scatters the frontier to its neighbors, a distinct
-    collapses fan-in, and an anti-join against the settled set keeps
-    only first-time visits — each a key-partitioned hash join on node
-    id. ONE action per hop (r15): the frontier checkpoint resolves an
-    ``observe`` row count (the dedup_clusters discipline — an exact
-    integer, no drift class at all), which replaces the separate
-    ``isEmpty`` probe; and the settled set is NOT re-checkpointed per
-    hop — it is a union of already-checkpointed per-hop frontiers
-    (flat lineage, one LogicalRDD leaf per hop), so the per-hop
-    settled-set materialization job was pure overhead. At 100 TB the
-    settled set grows monotonically but each hop touches only
-    frontier-adjacent edges — the textbook Pregel BFS cost model.
+    cross-engine parity is exact, no float drift to manage): see
+    :func:`_frontier`.
     """
-    edges = _undirected_edges(nodes).localCheckpoint(eager=True)
-    nbrs = edges.select(F.col("a").alias("id"), F.col("b").alias("nbr")).unionAll(
-        edges.select(F.col("b").alias("id"), F.col("a").alias("nbr"))
-    )
-    return _bfs_over_nbrs(nodes.sparkSession, nbrs, sources, max_hops)
+    return _frontier(nodes, [(s, 0) for s in sources], max_hops).select("id", "dist")
 
 
-def _bfs_over_nbrs(
-    spark, nbrs: DataFrame, sources: list[int], max_hops: int
-) -> DataFrame:
-    """Frontier loop of :func:`bfs_distances` over a prebuilt
-    ``(id, nbr)`` adjacency stream — split out (r15) so multi-probe
-    callers (harmonic_centrality) build the symmetrized edge structure
-    ONCE instead of once per source."""
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in sources], "id int, dist int"
-    ).localCheckpoint(eager=True)
-    frontier = dist.select("id")
-    for hop in range(1, max_hops + 1):
-        obs = Observation()
+def _frontier(nodes: DataFrame, seeds: list[tuple[int, int]], max_hops: int) -> DataFrame:
+    """BFS over the undirected graph from ``seeds`` ``(id, source)``:
+    ``(id, source, dist)`` for every node within ``max_hops`` of its
+    ``source`` group, at the hop count of the nearest seed in that
+    group. One loop serves every group, so a multi-probe caller
+    (harmonic_centrality) runs ONE frontier of at most ``max_hops``
+    rounds instead of one BFS per probe.
+
+    Each hop is one ``fixpoint`` round: an inner join scatters the
+    frontier (the last hop's rows) to its neighbors, a distinct
+    collapses fan-in, and an anti-join against the settled set keeps
+    only first-time visits — each a key-partitioned hash join. The
+    settled set plus the new hop is the round's state, so the hop's
+    row count (an exact integer) rides its checkpoint, and the loop
+    stops at the first empty hop. At 100 TB each hop touches only
+    frontier-adjacent edges — the textbook Pregel BFS cost model."""
+    nbrs = _symmetrized(_undirected_edges(nodes).localCheckpoint(eager=True))
+
+    def step(dist: DataFrame, m: dict, i: int):
+        frontier = dist.where(F.col("dist") == i).select("id", "source")
         nxt = (
-            nbrs.join(frontier, "id", "left_semi")
-            .select(F.col("nbr").alias("id"))
+            frontier.join(nbrs, "id")
+            .select(F.col("nbr").alias("id"), "source")
             .distinct()
-            .join(dist, "id", "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .join(dist, ["id", "source"], "left_anti")
+            .select("id", "source", F.lit(i + 1).alias("dist"))
         )
-        if (obs.get["n"] or 0) == 0:
-            break
-        dist = dist.unionAll(
-            nxt.select("id", F.lit(hop).cast("int").alias("dist"))
-        )
-        frontier = nxt
+        return dist.unionAll(nxt), [F.count_if(F.col("dist") == i + 1).alias("n")]
+
+    # built in the JVM: a createDataFrame frame is a Python RDD, which
+    # round 0 would run once per scan of the state (three)
+    seed_rows = F.array(*[F.struct(F.lit(int(s)), F.lit(k), F.lit(0)) for s, k in seeds])
+    init = nodes.sparkSession.range(1).select(
+        F.inline(seed_rows.cast("array<struct<id:int,source:int,dist:int>>"))
+    )
+    dist, _ = fixpoint(init, step, max_hops, until=lambda _, m: m["n"] == 0)
     return dist
 
 
@@ -706,15 +619,11 @@ def link_prediction(
     deterministic across engines.
     """
     edges = _undirected_edges(nodes).localCheckpoint(eager=True)
-    nbrs = edges.select(F.col("a").alias("id"), F.col("b").alias("nbr")).unionAll(
-        edges.select(F.col("b").alias("id"), F.col("a").alias("nbr"))
-    )
+    nbrs = _symmetrized(edges)
     # deg feeds THREE consumers (the cap filter and both endpoint
     # annotations) — checkpoint it once or the degree shuffle runs
     # three times (the triangle_count lesson)
-    deg = nbrs.groupBy("id").agg(F.count("*").alias("degree")).localCheckpoint(
-        eager=True
-    )
+    deg = _degrees(edges, "degree").localCheckpoint(eager=True)
     mids = deg.where(F.col("degree") <= max_degree).select("id")
     nb = nbrs.join(mids, "id", "left_semi")
     l, r = nb.alias("l"), nb.alias("r")
@@ -761,53 +670,39 @@ def kcore(nodes: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     Scale shape: each round is one degree aggregation plus two
     semi-joins restricting the edge set — all key-partitioned
     equi-joins; the edge set only ever SHRINKS, so round cost is
-    monotonically decreasing. Per-round driver traffic is a single
-    bounded scalar (the edge count, for the convergence test — same
-    discipline as pagerank's dangling mass) and lineage is truncated
-    per round with localCheckpoint. Rounds needed = the graph's
-    degeneracy ordering depth, typically tens even on web graphs;
-    ``max_iter`` bounds the pathological chain-graph case.
+    monotonically decreasing. Each round is one ``fixpoint`` round:
+    the surviving-edge count (an exact integer, for the convergence
+    test — same discipline as pagerank's dangling mass) rides the
+    round's checkpoint. Rounds needed = the graph's degeneracy ordering
+    depth, typically tens even on web graphs; ``max_iter`` bounds the
+    pathological chain-graph case, with a warning when it cuts the
+    peeling short.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    edges = _undirected_edges(nodes).localCheckpoint(eager=True)
-    n_edges = edges.count()
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
-        ends = edges.select(F.col("a").alias("id")).unionAll(
-            edges.select(F.col("b").alias("id"))
-        )
-        keep = (
-            ends.groupBy("id")
-            .agg(F.count("*").alias("d"))
-            .where(F.col("d") >= k)
-            .select("id")
-        )
-        # ONE action per round (r15): the surviving-edge count rides
-        # the checkpoint materialization as an observe metric (exact
-        # integer — the dedup_clusters discipline) instead of a
-        # separate count job over the fresh checkpoint.
-        obs = Observation()
+    n = F.count(F.lit(1)).alias("n")
+    edges, m0 = materialize(_undirected_edges(nodes), n)
+
+    def step(edges: DataFrame, m: dict, i: int):
+        keep = _degrees(edges, "d").where(F.col("d") >= k).select("id")
         pruned = (
             edges.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
             .select("a", "b")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        n_pruned = obs.get["n"] or 0
-        if n_pruned == n_edges:
-            break  # fixpoint: nothing peeled this round
-        edges, n_edges = pruned, n_pruned
-    ends = edges.select(F.col("a").alias("id")).unionAll(
-        edges.select(F.col("b").alias("id"))
+        return pruned, [n]
+
+    edges, _ = fixpoint(
+        edges,
+        step,
+        max_iter,
+        metrics=m0,
+        # fixpoint: nothing peeled this round (or nothing left)
+        until=lambda prev, m: m["n"] in (0, prev["n"]),
+        cap_warning=f"kcore hit max_iter={max_iter} before its fixpoint; "
+        "the core is only partly peeled",
     )
-    return (
-        ends.groupBy("id")
-        .agg(F.count("*").alias("core_degree"))
-        .where(F.col("core_degree") >= k)
-    )
+    return _degrees(edges, "core_degree").where(F.col("core_degree") >= k)
 
 
 def lpa_communities(nodes: DataFrame, rounds: int = 4) -> DataFrame:
@@ -823,38 +718,34 @@ def lpa_communities(nodes: DataFrame, rounds: int = 4) -> DataFrame:
 
     Scale shape per round: one (node, label) count aggregation over
     the symmetrized edge join and one per-node window max + min —
-    all key-partitioned on node id, no global structure; labels are
-    localCheckpoint-ed per round (the pagerank lineage discipline).
-    Synchronous LPA on a fixed round budget is the standard
-    cluster-scale formulation — asynchronous update order is
-    inherently sequential and nondeterministic.
+    all key-partitioned on node id, no global structure; each round is
+    one ``fixpoint`` round, checkpointing the labels (the pagerank
+    lineage discipline). Synchronous LPA on a fixed round budget is
+    the standard cluster-scale formulation — asynchronous update order
+    is inherently sequential and nondeterministic.
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    from pyspark.sql.window import Window
-
     edges = _undirected_edges(nodes).localCheckpoint(eager=True)
-    sym = edges.select(F.col("a").alias("v"), F.col("b").alias("u")).unionAll(
-        edges.select(F.col("b").alias("v"), F.col("a").alias("u"))
-    )
-    labels = sym.select(F.col("v").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
-    w = Window.partitionBy("v")
-    for _ in range(rounds):
+    sym = _symmetrized(edges)
+    w = Window.partitionBy("id")
+
+    def step(labels: DataFrame, m: dict, i: int):
         counted = (
-            sym.join(labels.withColumnRenamed("id", "u"), "u")
-            .groupBy("v", "label")
+            sym.join(labels.withColumnRenamed("id", "nbr"), "nbr")
+            .groupBy("id", "label")
             .agg(F.count("*").alias("c"))
         )
-        labels = (
+        adopted = (
             counted.withColumn("mx", F.max("c").over(w))
             .where(F.col("c") == F.col("mx"))
-            .groupBy("v")
+            .groupBy("id")
             .agg(F.min("label").alias("label"))
-            .select(F.col("v").alias("id"), "label")
-            .localCheckpoint(eager=True)
         )
+        return adopted, []
+
+    init = sym.select("id").distinct().withColumn("label", F.col("id"))
+    labels, _ = fixpoint(init, step, rounds)
     return labels.groupBy("label").agg(F.count("*").alias("n_nodes"))
 
 
@@ -879,10 +770,7 @@ def degree_assortativity(nodes: DataFrame) -> DataFrame:
     annotation join fans out 1:1.
     """
     edges = _undirected_edges(nodes).localCheckpoint(eager=True)
-    ends = edges.select(F.col("a").alias("id")).unionAll(
-        edges.select(F.col("b").alias("id"))
-    )
-    deg = ends.groupBy("id").agg(F.count("*").alias("deg"))
+    deg = _degrees(edges, "deg")
     annotated = edges.join(
         deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "da"), "a"
     ).join(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "db"), "b")
@@ -918,22 +806,15 @@ def harmonic_centrality(
 
     The probe-set formulation is the standard scale approximation
     (exact all-pairs harmonic is O(V·E)): accuracy grows with probe
-    count, cost is one BFS per probe. Each BFS is the
-    level-synchronous frontier loop of :func:`bfs_distances`, run over
-    ONE shared symmetrized edge structure (r15 — previously each probe
-    rebuilt and re-checkpointed it); the final combine is one
-    aggregation over the union of per-probe distance tables.
+    count. All probes share ONE frontier over ``(id, source, dist)``
+    (:func:`_frontier`, one group per probe): at most ``max_hops``
+    rounds whatever the probe count, over one shared symmetrized edge
+    structure; the final combine is one aggregation over the distance
+    table.
     """
-    edges = _undirected_edges(nodes).localCheckpoint(eager=True)
-    nbrs = edges.select(F.col("a").alias("id"), F.col("b").alias("nbr")).unionAll(
-        edges.select(F.col("b").alias("id"), F.col("a").alias("nbr"))
-    )
-    per_source = None
-    for s in sources:
-        d = _bfs_over_nbrs(nodes.sparkSession, nbrs, [s], max_hops)
-        per_source = d if per_source is None else per_source.unionAll(d)
+    dist = _frontier(nodes, [(s, k) for k, s in enumerate(sources)], max_hops)
     scored = (
-        per_source.where(F.col("dist") > 0)
+        dist.where(F.col("dist") > 0)
         .groupBy("id")
         .agg(
             F.round(F.sum(F.lit(1.0) / F.col("dist")), 6).alias("harmonic"),
@@ -947,6 +828,7 @@ def harmonic_centrality(
     # and filtering rank <= k after was the one data-sized global
     # window in the graph family (round-11 VERDICT item 6's audit
     # now fails on that shape).
+    # bounded-input: the k rows of the limit below
     w = Window.orderBy(F.desc("harmonic"), F.asc("id"))
     return (
         scored.orderBy(F.desc("harmonic"), F.asc("id"))

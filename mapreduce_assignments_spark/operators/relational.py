@@ -1013,6 +1013,7 @@ def rolling_weekly_revenue(orders: DataFrame) -> DataFrame:
         .agg(F.round(F.sum("p"), 6).cast("double").alias("day_revenue"))
         .withColumn("day_no", F.datediff(F.col("d"), F.lit("1970-01-01").cast("timestamp")))
     )
+    # bounded-input: one row per calendar day
     w = Window.orderBy("day_no").rangeBetween(-6, 0)
     return daily.select(
         F.date_format("d", "yyyy-MM-dd").alias("order_day"),

@@ -309,6 +309,7 @@ def temperature_weights(
     g = df.groupBy(group_col).agg(
         F.sum(size_col).cast("long").alias("n_units")
     )
+    # bounded-input: one row per source group
     w = Window.partitionBy()
     nat = F.col("n_units") / F.sum("n_units").over(w)
     u = F.pow(nat, 1.0 / temperature)
@@ -359,8 +360,9 @@ def unimax_allocation(
     g = df.groupBy(group_col).agg(
         F.sum(size_col).cast("long").alias("n_units")
     )
+    # bounded-input: one row per source group (both windows)
     full = Window.partitionBy()
-    order = Window.orderBy(F.asc("capacity"), F.asc(group_col))
+    order = Window.orderBy(F.asc("capacity"), F.asc(group_col))  # bounded-input
     prev = order.rowsBetween(Window.unboundedPreceding, -1)
     budget = F.lit(budget_frac) * F.sum("n_units").over(full)
     t = g.select(

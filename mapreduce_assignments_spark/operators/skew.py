@@ -91,6 +91,7 @@ def key_skew_report(df: DataFrame, key: str) -> DataFrame:
     )
     hist = counts.groupBy("cnt").agg(F.count("*").alias("k"))
     w = (
+        # bounded-input: one row per distinct count value
         Window.orderBy("cnt")
         .rowsBetween(Window.unboundedPreceding, -1)
     )

@@ -440,6 +440,7 @@ def ewma_hourly(
             "hour"
         )
     ).agg(F.count("*").alias("n"))
+    # bounded-input: one row per observed hour
     w = Window.orderBy("hour")
     terms = None
     for k in range(window):

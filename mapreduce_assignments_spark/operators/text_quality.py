@@ -814,6 +814,7 @@ def vocab_coverage(
 
     total = wc.agg(F.sum("cnt").alias("total_tokens"))
     top = wc.orderBy(F.desc("cnt"), F.asc("term")).limit(max(ks))
+    # bounded-input: the max(ks) rows of the limit above
     w = Window.orderBy(F.desc("cnt"), F.asc("term"))
     ranked = top.withColumn("rn", F.row_number().over(w))
     # One conditional-sum aggregate over the k-bounded ranked frame
@@ -1243,6 +1244,7 @@ def heaps_law_fit(
     scaffold = docs.sparkSession.range(0, n_buckets).select(
         F.col("id").alias("bucket")
     )
+    # bounded-input: one row per bucket (n_buckets)
     w = Window.orderBy("bucket")
     curve = (
         scaffold.join(per_bucket_tokens, "bucket", "left")

@@ -11,29 +11,29 @@ but every knob is chosen to also make sense on a real cluster:
 - ``spark.sql.session.timeZone=UTC``: the engine's contract is that
   every timestamp is a UTC instant.
 
-Outside ``get_spark`` the package writes session confs in two ways:
+This module is the one conf writer. Outside ``get_spark``:
 
 - Load-time pins: ``sources.tables.load_table`` sets
   ``spark.sql.legacy.parquet.nanosAsLong=true`` and
   ``spark.sql.session.timeZone=UTC`` where the session's value differs
-  (a foreign session, e.g. an unconfigured vanilla one); a ``get_spark``
-  session has both, so loading it never writes.
-- Scoped dials, through :func:`scoped_conf`, restored on exit:
-  - bounded stream replays (``streaming.run_replay``): 8 shuffle
-    (state) partitions and no trailing no-data micro-batch, around the
-    query's ``start()`` only;
-  - graph iteration loops (``operators.graph``): shuffle partitions
-    aligned to the loop's partition count, and AQE off below 100k
-    nodes, for the loop's duration.
+  (a foreign session, e.g. an unconfigured vanilla one).
+- Private dials (:func:`child_session`): the graph loops
+  (``operators.fixpoint``) run in a child session with shuffle
+  partitions aligned to the loop and AQE off below 100k nodes. The
+  caller's session is never written.
+- Scoped dials (:func:`scoped_conf`, restored on exit): bounded stream
+  replays (``streaming.run_replay``) set 8 shuffle (state) partitions
+  and no trailing no-data micro-batch around ``start()`` only.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -66,24 +66,49 @@ def get_spark(
     return builder.getOrCreate()
 
 
+# A scoped_conf block saves the values it sees on entry, so two blocks
+# overlapping on one session would restore each other's values.
+_CONF_LOCK = threading.RLock()
+
+
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
     """Set ``confs`` on ``spark`` for the body of the ``with`` block.
     On exit each key gets back its earlier explicit value, or is unset
     if it had none, so the session's ``conf.getAll`` is as before. The
     session is shared: other threads see the values while the block
-    runs."""
-    before = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in before.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    runs, and other blocks wait for it, so keep the body short."""
+    with _CONF_LOCK:
+        before = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in before.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+def child_session(spark: SparkSession, confs: Mapping[str, str]) -> SparkSession:
+    """A session sharing ``spark``'s context and cache, with
+    ``spark``'s confs plus ``confs``, private to it. (``newSession``
+    starts from the build-time confs; runtime ones are copied.)"""
+    child = spark.newSession()
+    inherited = child.conf.getAll
+    for k, v in {**spark.conf.getAll, **confs}.items():
+        if inherited.get(k) != v:
+            child.conf.set(k, v)
+    return child
+
+
+def rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s plan as a frame of ``session``: planned and run under
+    that session's confs."""
+    ofrows = getattr(session._jvm, "org.apache.spark.sql.classic.Dataset").ofRows
+    return DataFrame(ofrows(session._jsparkSession, df._jdf.logicalPlan()), session)
 
 
 def testdata_dir(sf: str = "0.001") -> str:

@@ -848,6 +848,7 @@ def q_revenue_lag_features(spark, sf_dir):
             .alias("revenue")
         )
     )
+    # bounded-input: one row per calendar day
     w = Window.orderBy("day")
     out = daily.select(
         "day",
@@ -949,6 +950,7 @@ def q_revenue_share(spark, sf_dir):
         load_table(spark, sf_dir, "nation"),
         load_table(spark, sf_dir, "region"),
     )
+    # bounded-input: one row per nation
     w = Window.partitionBy()
     return rev.select(
         "n_name",
@@ -1136,6 +1138,7 @@ def q_rrf_fusion(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     terms = ["spark", "table", "query"]
     tfs = index.term_frequencies(docs).localCheckpoint()
+    # bounded-input: the k=20 rows each scorer returns
     w = Window.orderBy(F.desc("score"), F.asc("docid"))
     bm = index.bm25_scores(docs, terms, k=20, tfs=tfs).select(
         "docid", F.row_number().over(w).cast("int").alias("bm25_rank")
@@ -1746,6 +1749,7 @@ def q_hits(spark, sf_dir):
     )
     # limit-first (top_k_nodes idiom): TakeOrderedAndProject bounds
     # the rank window's input to 25 rows — never a full-node sort
+    # bounded-input: the 25 rows of the limit below
     w = Window.orderBy(F.desc("auth"), F.asc("id"))
     return (
         rounded.orderBy(F.desc("auth"), F.asc("id"))
@@ -2473,6 +2477,7 @@ def q_zipf_fit(spark, sf_dir):
     from pyspark.sql.window import Window
 
     wc = text.word_count(_docs(spark, sf_dir))
+    # bounded-input: one row per vocabulary word, not per token
     w = Window.orderBy(F.desc("cnt"), F.asc("word"))
     ranked = wc.withColumn("rank", F.row_number().over(w))
     return ranked.agg(
@@ -3227,6 +3232,7 @@ def q_region_nation_share(spark, sf_dir):
         load_table(spark, sf_dir, "region"),
     )
     wr = Window.partitionBy("r_name")
+    # bounded-input: one row per nation
     wg = Window.partitionBy()
     return rev.select(
         "r_name",
@@ -3415,6 +3421,7 @@ def q_slo_burn_rate(spark, sf_dir):
             F.sum((F.col("event_type") == "error").cast("int")).alias("err"),
         )
     )
+    # bounded-input: one row per observed hour
     w6 = Window.orderBy("h").rowsBetween(-5, 0)
     rate1 = F.round(F.col("err") / F.col("n"), 6)
     rate6 = F.round(F.sum("err").over(w6) / F.sum("n").over(w6), 6)

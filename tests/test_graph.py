@@ -154,12 +154,10 @@ def test_top_k_per_source_and_format(fixture_graph):
 
 def test_pagerank_reliable_checkpoint_matches(fixture_graph, tmp_path):
     df, nodes, edges = fixture_graph
-    base = {r["id"]: r["pr"] for r in pagerank(df, n_iter=7, checkpoint_every=3).collect()}
+    base = {r["id"]: r["pr"] for r in pagerank(df, n_iter=7).collect()}
     ckpt = {
         r["id"]: r["pr"]
-        for r in pagerank(
-            df, n_iter=7, checkpoint_every=3, checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
+        for r in pagerank(df, n_iter=7, checkpoint_dir=str(tmp_path / "ckpt")).collect()
     }
     assert base.keys() == ckpt.keys()
     for k in base:
@@ -253,6 +251,9 @@ def test_kcore_peeling_cascades(spark):
     )
     got = {r["id"]: r["core_degree"] for r in kcore(ring, k=2).collect()}
     assert got == {i: 2 for i in range(1, 6)}
+    # one round peels only the chain's ends: the cut is warned, not silent
+    with pytest.warns(UserWarning, match="kcore hit max_iter=1"):
+        kcore(df, k=2, max_iter=1)
 
 
 def test_kcore_matches_python_peeler_on_random_graphs(spark):

@@ -1,11 +1,16 @@
 """Session confs have one owner: ``session.scoped_conf`` restores what
-it sets, no query leaves a conf behind on its caller's session, and
-nothing else in the package writes a conf."""
+it sets, even when blocks overlap across threads; no query leaves a
+conf behind on its caller's session, also when queries run from
+several threads at once; and nothing else in the package writes a
+conf."""
 
 from __future__ import annotations
 
 import ast
+import hashlib
 import re
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import pytest
@@ -30,6 +35,37 @@ def test_scoped_conf_restores_explicit_values_and_unsets_the_rest(spark):
     assert dict(spark.conf.getAll) == before
 
 
+def test_overlapping_scoped_conf_blocks_restore_the_session(spark):
+    """Thread A enters a block; thread B enters one on the same key
+    before A leaves, and leaves after A. Without serialization B saves
+    A's value on entry and writes it back after A has restored the
+    original. With it, B waits for A and the timeouts end the waits."""
+    key = "spark.sql.shuffle.partitions"
+    before = dict(spark.conf.getAll)
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+
+    def a():
+        with scoped_conf(spark, {key: "7"}):
+            a_in.set()
+            b_in.wait(timeout=1)
+        a_out.set()
+
+    def b():
+        a_in.wait(timeout=10)
+        with scoped_conf(spark, {key: "9"}):
+            b_in.set()
+            a_out.wait(timeout=1)
+
+    threads = [threading.Thread(target=f) for f in (a, b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
+    assert a_in.is_set() and b_in.is_set() and a_out.is_set()
+    assert dict(spark.conf.getAll) == before
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -38,7 +74,15 @@ def test_scoped_conf_restores_explicit_values_and_unsets_the_rest(spark):
         "streaming_session_stats",
         "streaming_quality_gate",
         "pagerank",
+        "personalized_pagerank",
+        "pagerank_convergence",
         "hits",
+        "kcore",
+        "bfs_hops",
+        "harmonic_centrality",
+        "lpa_communities",
+        "dedup_clusters",
+        "graph_components",
         "record_linkage",
         "random_projection",
         "hourly_counts",
@@ -51,6 +95,35 @@ def test_query_leaves_session_conf_unchanged(spark, sf_dir, name):
     workloads.ALL_QUERIES[name](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
+    assert dict(spark.conf.getAll) == before
+
+
+# A mixed sample for eight threads: every loop family with private
+# dials, the plain fixpoint loops and a stream replay (scoped dials).
+_MIXED = (
+    "pagerank",
+    "personalized_pagerank",
+    "hits",
+    "kcore",
+    "harmonic_centrality",
+    "dedup_clusters",
+    "streaming_hourly_counts",
+    "pagerank",
+)
+
+
+def test_queries_on_eight_threads_match_serial_runs(spark, sf_dir):
+    from mapreduce_assignments_spark import workloads
+
+    def digest(name: str) -> str:
+        rows = workloads.ALL_QUERIES[name](spark, sf_dir).collect()
+        return hashlib.sha256(repr(sorted(map(repr, rows))).encode()).hexdigest()
+
+    serial = {name: digest(name) for name in set(_MIXED)}
+    before = dict(spark.conf.getAll)
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        got = list(pool.map(digest, _MIXED))
+    assert got == [serial[name] for name in _MIXED]
     assert dict(spark.conf.getAll) == before
 
 
