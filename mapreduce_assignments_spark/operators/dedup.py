@@ -10,11 +10,21 @@ Scale design notes (the whole point of these operators):
 
 - exact: one hash aggregation on the text (or a digest of it — group
   on md5 to keep shuffle rows narrow when documents are MBs).
-- n-gram Jaccard: candidate generation via an inverted shingle join —
+- n-gram Jaccard: ONE exact pair join, an inverted shingle self-join —
   quadratic only within a shingle bucket, never globally. At 100 TB
   add a document-frequency cap on shingles (drop shingles appearing in
   > df_cap docs) to kill the quadratic blowup of boilerplate shingles;
-  exposed as ``shingle_df_cap``.
+  exposed as ``shingle_df_cap``. ``ngram_jaccard_pairs``,
+  ``exact_jaccard_for_pairs`` and ``containment_pairs`` share one
+  scaffold (shingles, cap, checkpoint, sizes). A PPJoin prefix +
+  positional filter over a rare-first shingle order was dropped: it
+  only pays when the prefix is a small share of each list, i.e. at
+  high thresholds, and it never beat the inverted join (inverted vs
+  prefix, 4 cores, same rows: sf0.01 t=0.1 1.25 s / 6 jobs against
+  2.06 s / 13 jobs; sf0.1 t=0.1/0.5/0.8 3.07/2.86/3.56 s against
+  4.89/4.69/3.69 s; sf1 t=0.1, best of 3 per process, 65.4-73.5 s
+  against 72.4-76.0 s; sf10 on 32 cores 150.9 s against 170.8 s,
+  docs/SCALE.md).
 - MinHash LSH: signatures are narrow (32 int64), banding turns
   near-dup search into an equi-join on (band, band_signature) — the
   textbook shuffle-friendly formulation.
@@ -63,7 +73,6 @@ __all__ = [
     "ngram_novelty",
     "record_linkage_pairs",
     "cluster_canonical",
-    "prefix_jaccard_pairs",
     "dup_span_report",
     "winnowing_fingerprints",
     "winnowing_candidates",
@@ -124,22 +133,30 @@ def shingles(
     )
 
 
-def ngram_jaccard_pairs(
+def _shingle_sizes(
     docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    shingle_df_cap: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Near-duplicate pairs by exact n-gram Jaccard similarity:
-    ``(doc_a, doc_b, jaccard)`` with doc_a < doc_b, jaccard >= threshold.
+    n: int,
+    shingle_df_cap: int | None,
+    text_col: str,
+    id_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """``(sh, sizes)`` — the shared scaffold of the shingle-pair
+    operators: the ``(doc_id, shingle)`` stream, minus the shingles of
+    more than ``shingle_df_cap`` documents when a cap is given, and
+    each document's shingle count ``(doc_id, sz)``.
 
-    Candidates come from an inverted join on shared shingles;
-    ``|A ∪ B| = |A| + |B| - |A ∩ B|`` avoids materializing unions.
+    Raises ``ValueError`` for ``n < 1`` (every document would get one
+    empty-string shingle, so disjoint documents would pair at Jaccard
+    1.0) and for a cap below 1 (a cap of 0 or less drops every shingle).
     """
+    if n < 1:
+        raise ValueError(f"shingle size n must be >= 1, got {n}")
+    if shingle_df_cap is not None and shingle_df_cap < 1:
+        raise ValueError(
+            f"shingle_df_cap must be >= 1 or None, got {shingle_df_cap}"
+        )
     sh = shingles(docs, n=n, text_col=text_col, id_col=id_col)
-    if shingle_df_cap:
+    if shingle_df_cap is not None:
         hot = sh.groupBy("shingle").count().where(F.col("count") > shingle_df_cap)
         sh = sh.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
     # The shingle subplan feeds three consumers (sizes + both join
@@ -157,16 +174,14 @@ def ngram_jaccard_pairs(
     # reliable checkpoint dir (fixpoint.materialize's checkpoint_dir)
     # or accept job retry as the recovery path.
     sh = sh.localCheckpoint(eager=False)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("inter"))
-    )
+    return sh, sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+
+
+def _jaccard(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, jaccard)`` from per-pair intersection counts
+    ``(doc_a, doc_b, inter)``: ``|A ∪ B| = |A| + |B| - |A ∩ B|``
+    avoids materializing unions. One division over exact integer
+    operands, so every caller's values are bit-identical."""
     # sizes has one row per document — never force-broadcast it (OOM at
     # corpus scale); AQE picks broadcast when it actually fits.
     return (
@@ -179,8 +194,34 @@ def ngram_jaccard_pairs(
                 F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
             ).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= threshold)
     )
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame,
+    n: int = 3,
+    threshold: float = 0.5,
+    shingle_df_cap: int | None = None,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Near-duplicate pairs by exact n-gram Jaccard similarity:
+    ``(doc_a, doc_b, jaccard)`` with doc_a < doc_b, jaccard >= threshold.
+
+    Candidates come from an inverted self-join on shared shingles, so
+    the intersection of every pair is counted in one shuffle.
+    """
+    sh, sizes = _shingle_sizes(docs, n, shingle_df_cap, text_col, id_col)
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(b, "shingle")
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .agg(F.count("*").alias("inter"))
+    )
+    return _jaccard(inter, sizes).where(F.col("jaccard") >= threshold)
 
 
 def exact_jaccard_for_pairs(
@@ -198,27 +239,21 @@ def exact_jaccard_for_pairs(
     (threshold 0): instead of materializing the ENTIRE pair universe
     of the shingle-sharing graph and filtering to the pairs of
     interest afterwards, the pair list drives two joins back into the
-    shingle stream (the prefix_jaccard ``verify="rejoin"`` shape) and
-    the intersection is counted per supplied pair. Compute is
+    shingle stream — once on ``doc_a``, once on ``(doc_b, shingle)`` —
+    and the intersection is counted per supplied pair. Compute is
     Σ_pairs |A| rows — bounded by the candidate set, not by
     hot-shingle document frequency, which is what makes it safe on a
     skewed 100 TB corpus where an uncapped threshold-0 inverted join
-    is the classic blowup (round-14 VERDICT). The jaccard expression
-    reuses the exact integer operands and division shape of
-    :func:`ngram_jaccard_pairs`, so values are bit-identical.
+    is the classic blowup (round-14 VERDICT). Scoring shares
+    :func:`ngram_jaccard_pairs`'s tail, so values are bit-identical.
 
     ``pairs`` must be one row per (doc_a, doc_b) — duplicate rows
     would double-count intersections.
     """
-    sh = shingles(docs, n=n, text_col=text_col, id_col=id_col).localCheckpoint(
-        eager=False  # sizes + both rejoin sides — one materialization
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    p = pairs.select("doc_a", "doc_b")
+    sh, sizes = _shingle_sizes(docs, n, None, text_col, id_col)
     inter = (
-        p.join(
-            sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-        )
+        pairs.select("doc_a", "doc_b")
+        .join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")
         .join(
             sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
             ["doc_b", "shingle"],
@@ -226,23 +261,7 @@ def exact_jaccard_for_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-    )
+    return _jaccard(inter, sizes)
 
 
 def containment_pairs(
@@ -266,14 +285,7 @@ def containment_pairs(
     (one shuffle on shingle, ``shingle_df_cap`` kills hot-shingle
     blowup), with the denominator being the CONTAINED side's size only.
     """
-    sh = shingles(docs, n=n, text_col=text_col, id_col=id_col)
-    if shingle_df_cap:
-        hot = sh.groupBy("shingle").count().where(F.col("count") > shingle_df_cap)
-        sh = sh.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
-    # three consumers of the shingle subplan — one materialization
-    # (the ngram_jaccard_pairs measurement and trade note apply)
-    sh = sh.localCheckpoint(eager=False)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+    sh, sizes = _shingle_sizes(docs, n, shingle_df_cap, text_col, id_col)
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(b, "shingle")
@@ -1443,194 +1455,6 @@ def cluster_canonical(clusters: DataFrame, scores: DataFrame) -> DataFrame:
             "cluster_size",
         )
     )
-
-
-def prefix_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    verify: str = "auto",
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs via PPJoin-style PREFIX FILTERING
-    (Bayardo–Ma–Srikant / Xiao et al., public literature): under a
-    global rarity order on shingles, a pair with Jaccard ≥ t MUST
-    share a shingle within each side's first ``|x| − ⌈t·|x|⌉ + 1``
-    shingles (since J ≥ t forces overlap ≥ t·|x| on both sides), so
-    candidates come from an inverted join over PREFIXES only, then
-    exact verification. Same output contract as
-    :func:`ngram_jaccard_pairs` — ``(doc_a, doc_b, jaccard)``, and by
-    construction the SAME rows: every filter below is lossless.
-
-    POSITIONAL filter (Xiao et al.'s ppjoin bound, re-expressed as
-    plain aggregates): per-doc lists are sorted by ONE global
-    (df, shingle) order, so any shared shingle smaller than a
-    both-prefix match is itself a both-prefix match — the pair's
-    prefix matches w_1 < … < w_m are exactly its m smallest shared
-    shingles, and every other shared shingle sits strictly after
-    (i_k, j_k) in both lists. Hence two lossless overlap bounds from
-    ONE group-by (no per-pair window sort):
-
-        B_first = 1 + min(|x| − min i, |y| − min j)   (k = 1)
-        B_last  = m + min(|x| − max i, |y| − max j)   (k = m)
-
-    A pair is verified only if its best-possible Jaccard
-    ``B/(|x|+|y|−B)`` with ``B = min(B_first, B_last, |x|, |y|)``
-    reaches t. The compare reuses the SAME double-division shape as
-    the final jaccard filter, and fp division is monotone over these
-    exact-integer operands, so no float-boundary pair is lost.
-
-    VERIFY strategy — the threshold decides the cheap physical plan
-    (both are exact; ``verify="auto"`` picks by prefix share):
-
-    - ``"count"`` (low t, prefixes ≈ whole lists): the candidate
-      aggregate already holds ``m = |pref_x ∩ pref_y|``, and every
-      other shared shingle has a side in a SUFFIX, so
-      ``inter = m + |suff_x ∩ full_y| + |pref_x ∩ suff_y|`` — two
-      joins whose volume is the naive join's MINUS the prefix join's
-      (measured sf1 at t=0.1: 2.3M rows vs re-joining full lists per
-      candidate = Σ|x| over 7.3M candidates ≈ 380M rows; 62.6 s →
-      see SCALE.md). Never re-touches a candidate's full list.
-    - ``"rejoin"`` (high t, prefixes short so candidates are few and
-      suffixes are nearly the whole list): join candidates back to
-      the full shingle lists and count — pair-bounded, never corpus².
-      At high t the "count" suffix joins would approach the naive
-      join volume, exactly what the short-prefix join avoids.
-
-    Scale: the candidate join touches the rare end of every document's
-    shingle list — prefix length shrinks as t grows (at t=0.9 only
-    ~10% of shingles index), and rare-first ordering keeps the indexed
-    postings short, attacking hot-shingle blowup WITHOUT losing
-    recall. The shingle scan and the ranked lists are each
-    lazily localCheckpoint'ed — 4-5 consumers, one materialization.
-    """
-    sh = shingles(docs, n=n, text_col=text_col, id_col=id_col).localCheckpoint(
-        eager=False  # sizes + df_tbl + ranked (+ rejoin verify ×2)
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    df_tbl = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("doc_id").orderBy(F.asc("df"), F.asc("shingle"))
-    plen = F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1
-    ranked = (
-        sh.join(df_tbl, "shingle")
-        .withColumn("rnk", F.row_number().over(w))
-        .join(sizes, "doc_id")
-        .select("doc_id", "shingle", "sz", "rnk", (F.col("rnk") <= plen).alias("in_prefix"))
-        .localCheckpoint(eager=False)  # prefix ×2 + both suffix-count joins
-    )
-    prefix = ranked.where("in_prefix").select("doc_id", "shingle", "sz", "rnk")
-    matched = (
-        prefix.alias("pa")
-        .join(prefix.alias("pb"), "shingle")
-        .where(F.col("pa.doc_id") < F.col("pb.doc_id"))
-        # LENGTH filter (also lossless): J >= t forces
-        # t * max(|x|, |y|) <= min(|x|, |y|) — prune size-mismatched
-        # candidates BEFORE the aggregation and verification joins
-        .where(
-            F.least(F.col("pa.sz"), F.col("pb.sz"))
-            >= F.lit(threshold) * F.greatest(F.col("pa.sz"), F.col("pb.sz"))
-        )
-        .groupBy(
-            F.col("pa.doc_id").alias("doc_a"),
-            F.col("pb.doc_id").alias("doc_b"),
-            F.col("pa.sz").alias("sza"),
-            F.col("pb.sz").alias("szb"),
-        )
-        .agg(
-            F.count("*").alias("m"),
-            F.min("pa.rnk").alias("ia_min"),
-            F.min("pb.rnk").alias("ib_min"),
-            F.max("pa.rnk").alias("ia_max"),
-            F.max("pb.rnk").alias("ib_max"),
-        )
-    )
-    bound = F.least(
-        F.lit(1)
-        + F.least(
-            F.col("sza") - F.col("ia_min"), F.col("szb") - F.col("ib_min")
-        ),
-        F.col("m")
-        + F.least(
-            F.col("sza") - F.col("ia_max"), F.col("szb") - F.col("ib_max")
-        ),
-        F.least(F.col("sza"), F.col("szb")),
-    )
-    cand = matched.where(
-        bound / (F.col("sza") + F.col("szb") - bound) >= F.lit(threshold)
-    ).select("doc_a", "doc_b", "sza", "szb", "m")
-    if verify == "auto":
-        # prefix share 1 - t/(1+t)·… ≈ 1 - t of each list: below
-        # t=0.5 the suffix side is the small one — count it instead
-        # of re-joining candidates' full lists
-        verify = "count" if threshold < 0.5 else "rejoin"
-    if verify == "count":
-        suff = ranked.where(~F.col("in_prefix"))
-        # shared shingles NOT counted in m have the smaller-id side
-        # in its suffix (any other side), or the smaller-id side in
-        # its prefix and the larger-id side in its suffix — two
-        # disjoint joins, each suffix-bounded
-        s1 = (
-            suff.alias("sa")
-            .join(ranked.alias("rb"), "shingle")
-            .where(F.col("sa.doc_id") < F.col("rb.doc_id"))
-            .select(
-                F.col("sa.doc_id").alias("doc_a"),
-                F.col("rb.doc_id").alias("doc_b"),
-            )
-        )
-        s2 = (
-            prefix.alias("px")
-            .join(suff.alias("sb"), "shingle")
-            .where(F.col("px.doc_id") < F.col("sb.doc_id"))
-            .select(
-                F.col("px.doc_id").alias("doc_a"),
-                F.col("sb.doc_id").alias("doc_b"),
-            )
-        )
-        extra = (
-            s1.unionAll(s2).groupBy("doc_a", "doc_b").agg(
-                F.count("*").alias("s")
-            )
-        )
-        inter = (
-            F.col("m") + F.coalesce(F.col("s"), F.lit(0))
-        ).alias("inter")
-        scored = cand.join(extra, ["doc_a", "doc_b"], "left").select(
-            "doc_a", "doc_b", "sza", "szb", inter
-        )
-    elif verify == "rejoin":
-        scored = (
-            sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-            .join(cand.select("doc_a", "doc_b"), "doc_a")
-            .join(
-                sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-                ["doc_b", "shingle"],
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("inter"))
-            .join(
-                sizes.select(
-                    F.col("doc_id").alias("doc_a"), F.col("sz").alias("sza")
-                ),
-                "doc_a",
-            )
-            .join(
-                sizes.select(
-                    F.col("doc_id").alias("doc_b"), F.col("sz").alias("szb")
-                ),
-                "doc_b",
-            )
-        )
-    else:
-        raise ValueError(f"unknown verify strategy: {verify!r}")
-    return scored.select(
-        "doc_a",
-        "doc_b",
-        (
-            F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
-        ).alias("jaccard"),
-    ).where(F.col("jaccard") >= threshold)
 
 
 def _winnow_base(

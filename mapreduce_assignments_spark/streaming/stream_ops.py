@@ -21,6 +21,7 @@ in tests swaps for Kafka/rate in production with no operator change —
 
 from __future__ import annotations
 
+import tempfile
 from typing import Iterator
 
 import pyspark.sql.functions as F
@@ -83,6 +84,16 @@ def run_replay(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
             f"run within {_REPLAY_TIMEOUT_S}s; its sink is incomplete"
         )
     return q
+
+
+def _run_replay_private(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """:func:`run_replay` for a writer with no checkpoint of its own:
+    the replay checkpoints into a private temporary directory, removed
+    when the replay returns. Without one Spark creates and warns about
+    a ``temporary-<uuid>`` dir per replay and removes it only best
+    effort."""
+    with tempfile.TemporaryDirectory(prefix="replay-ckpt-") as ckpt:
+        return run_replay(spark, writer.option("checkpointLocation", ckpt))
 
 
 EVENTS_SCHEMA = (
@@ -291,7 +302,7 @@ def maintain_snapshot(
 
     # multi-batch replay is controlled by the caller's readStream
     # options (e.g. maxFilesPerTrigger) — the merge body is per-batch
-    return run_replay(
+    return _run_replay_private(
         stream.sparkSession,
         stream.writeStream.foreachBatch(upsert).outputMode("update"),
     )
@@ -387,7 +398,7 @@ def run_to_memory(stream: DataFrame, name: str, output_mode: str = "update"):
     """Drain every available input into an in-memory table named
     ``name`` in one bounded replay, then stop. Returns the
     StreamingQuery (already terminated)."""
-    return run_replay(
+    return _run_replay_private(
         stream.sparkSession,
         stream.writeStream.format("memory").queryName(name).outputMode(output_mode),
     )

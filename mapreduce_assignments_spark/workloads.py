@@ -3213,11 +3213,11 @@ def q_order_size_correlation(spark, sf_dir):
 
 
 def q_prefix_jaccard(spark, sf_dir):
-    """PPJoin-style prefix-filtered exact Jaccard pairs at the same
-    threshold as ngram_jaccard — lossless candidate pruning, so the
-    oracle is ngram_jaccard's verbatim."""
-    out = dedup.prefix_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=0.1)
-    return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    """Exact Jaccard pairs at t=0.1, the same rows as ngram_jaccard and
+    its oracle verbatim. It used to run a PPJoin prefix-filter join;
+    that path never beat the inverted join at any measured scale or
+    threshold (operators/dedup.py), so both names run the one join."""
+    return q_ngram_jaccard(spark, sf_dir)
 
 
 def q_region_nation_share(spark, sf_dir):

@@ -109,10 +109,13 @@ def test_simhash_near_dupes_pigeonhole(spark):
 
 
 def test_ngram_jaccard_shingle_df_cap(spark):
-    from mapreduce_assignments_spark.operators.dedup import ngram_jaccard_pairs
+    from mapreduce_assignments_spark.operators.dedup import (
+        containment_pairs,
+        exact_jaccard_for_pairs,
+    )
 
-    # doc 1/2 share ONLY the boilerplate shingle-source "common common
-    # common common"; doc 3/4 share distinctive content.
+    # doc 1/2 share only boilerplate shingles, doc 3/4 distinctive
+    # content; every shared shingle has df=2.
     rows = [
         (1, "common common common common unique1 a b"),
         (2, "common common common common unique2 c d"),
@@ -120,20 +123,24 @@ def test_ngram_jaccard_shingle_df_cap(spark):
         (4, "rare alpha beta gamma delta x z"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = {
-        (r["doc_a"], r["doc_b"])
-        for r in ngram_jaccard_pairs(docs, n=3, threshold=0.01).collect()
-    }
-    assert (1, 2) in uncapped and (3, 4) in uncapped
-    # cap kills shingles present in >1 docs' worth of boilerplate:
-    # the (1,2) pair loses its only shared shingles, (3,4) remains via
-    # shingles shared by exactly 2 docs... so cap=1 kills both; use
-    # the df threshold to drop only the 4-gram boilerplate by making
-    # it appear in both docs more often: df of "common common common"
-    # is 2, same as the rare shingles. Use cap to remove everything
-    # shared (df=2) and verify no pairs remain.
-    capped = ngram_jaccard_pairs(docs, n=3, threshold=0.01, shingle_df_cap=1).collect()
-    assert capped == []
+    for op in (ngram_jaccard_pairs, containment_pairs):
+        uncapped = {
+            tuple(sorted(r[:2])) for r in op(docs, n=3, threshold=0.01).collect()
+        }
+        assert uncapped == {(1, 2), (3, 4)}, op.__name__
+        # cap=1 drops every shingle held by more than one document,
+        # so no pair can share a shingle any more
+        capped = op(docs, n=3, threshold=0.01, shingle_df_cap=1).collect()
+        assert capped == [], op.__name__
+        # out-of-contract inputs fail loudly: n < 1 would pair disjoint
+        # documents through one empty shingle each, and a cap below 1
+        # would drop every shingle
+        for bad in ({"n": 0}, {"shingle_df_cap": 0}, {"shingle_df_cap": -1}):
+            with pytest.raises(ValueError):
+                op(docs, threshold=0.01, **bad)
+    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
+    with pytest.raises(ValueError):
+        exact_jaccard_for_pairs(docs, pairs, n=0)
 
 
 def test_dedup_clusters_multi_hop_chain(spark):
@@ -488,40 +495,41 @@ def test_cluster_canonical_prefers_quality_then_id(spark):
     assert rows[7]["cluster_size"] == 2
 
 
-def test_prefix_jaccard_equals_naive_at_multiple_thresholds(spark):
-    """The PPJoin prefix filter is LOSSLESS: identical pairs to the
-    naive inverted join at every threshold tried."""
-    from mapreduce_assignments_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        prefix_jaccard_pairs,
+def test_ngram_jaccard_equals_brute_force_at_multiple_thresholds(spark):
+    """The inverted join returns exactly the pairs, and the Jaccard
+    values, of a pure-Python set-Jaccard brute force over the same
+    shingles — every pair that shares a shingle and reaches t."""
+    import itertools
+
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "the quick brown fox jumps over a lazy dog",
+        3: "completely different text with no overlap at all",
+        4: "the quick brown fox jumps over the lazy dog",  # exact dup of 1
+        5: "another completely different text entirely here",
+    }
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id long, text string"
     )
 
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over a lazy dog"),
-            (3, "completely different text with no overlap at all"),
-            (4, "the quick brown fox jumps over the lazy dog"),  # exact dup of 1
-            (5, "another completely different text entirely here"),
-        ],
-        "doc_id long, text string",
-    )
-    for t in (0.1, 0.5, 0.9):
-        naive = sorted(
+    def shingle_set(text, n=3):
+        toks = text.split()
+        return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+    sets = {d: shingle_set(t) for d, t in texts.items()}
+    for t in (0.0, 0.1, 0.5, 0.9):
+        expected = sorted(
+            (a, b, round(len(sets[a] & sets[b]) / len(sets[a] | sets[b]), 6))
+            for a, b in itertools.combinations(sorted(sets), 2)
+            if sets[a] & sets[b]
+            and len(sets[a] & sets[b]) / len(sets[a] | sets[b]) >= t
+        )
+        got = sorted(
             (r["doc_a"], r["doc_b"], round(r["jaccard"], 6))
             for r in ngram_jaccard_pairs(docs, n=3, threshold=t).collect()
         )
-        # every verify strategy is exact at every threshold — auto
-        # merely picks the cheap one (count below t=0.5, else rejoin)
-        for verify in ("auto", "count", "rejoin"):
-            fast = sorted(
-                (r["doc_a"], r["doc_b"], round(r["jaccard"], 6))
-                for r in prefix_jaccard_pairs(
-                    docs, n=3, threshold=t, verify=verify
-                ).collect()
-            )
-            assert fast == naive, (t, verify)
-    assert naive  # the 0.9 pass still finds the exact duplicate pair
+        assert got == expected, t
+    assert (1, 4, 1.0) in got  # the 0.9 pass still finds the exact duplicate pair
 
 
 def test_dedup_savings_bounds(spark):

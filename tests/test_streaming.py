@@ -604,6 +604,24 @@ def test_replay_runs_with_its_dials_and_restores_the_session(spark, events_dir):
     assert dict(spark.conf.getAll) == before
 
 
+def test_memory_replay_checkpoints_privately_and_cleans_up(spark, events_dir):
+    """A memory-sink replay checkpoints into its own temporary dir,
+    not a Spark ``temporary-<uuid>`` dir, and that dir is gone once
+    the replay returns."""
+    import os
+    from urllib.parse import urlparse
+
+    q = run_to_memory(
+        streaming_hourly_counts(read_events_stream(spark, events_dir)),
+        "t_replay_ckpt_mem",
+        "update",
+    )
+    root = urlparse(q._jsq.streamingQuery().resolvedCheckpointRoot()).path
+    assert not os.path.basename(root).startswith("temporary-"), root
+    assert not os.path.exists(root), root
+    assert spark.sql("SELECT * FROM t_replay_ckpt_mem").count() > 0
+
+
 def test_replay_timeout_stops_the_query_and_raises(spark, tmp_path, monkeypatch):
     """A replay still running at the timeout is stopped and raises
     instead of handing back a half-written sink."""
