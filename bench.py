@@ -207,14 +207,23 @@ def _time_query(spark, sf_dir: str, name: str) -> float:
     return round(time.time() - t0, 3)
 
 
-def _git_rev() -> str | None:
+def _git_rev(repo: Path = REPO) -> str | None:
+    """Short HEAD rev, suffixed ``-dirty`` when tracked files differ
+    from HEAD: a run of uncommitted code is not a sample of its parent
+    commit, and ``check_trend`` gates on same-rev records."""
     try:
         import subprocess
 
-        return subprocess.run(
-            ["git", "-C", str(REPO), "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
+        def git(*args):
+            return subprocess.run(
+                ["git", "-C", str(repo), *args],
+                capture_output=True, text=True, timeout=10,
+            )
+
+        rev = git("rev-parse", "--short", "HEAD").stdout.strip()
+        if rev and git("diff", "--quiet", "HEAD", "--").returncode == 1:
+            rev += "-dirty"
+        return rev or None
     except Exception:  # noqa: BLE001 — telemetry only
         return None
 
@@ -407,7 +416,8 @@ def run_full(
 # docs/scale_probe_sf1.json + the trend file (mode "scale-probe").
 SCALE_PROBE_QUERIES = (
     "pagerank", "kcore", "bfs_hops", "harmonic_centrality",
-    "record_linkage", "minhash_calibration", "verified_near_dupes",
+    "record_linkage", "record_linkage_topk", "minhash_calibration",
+    "verified_near_dupes",
     "ivf_topk_trained", "mutual_knn_pairs", "embedding_near_dupes",
     "dedup_savings",
 )

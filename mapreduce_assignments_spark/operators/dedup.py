@@ -952,7 +952,7 @@ def ngram_novelty(
 
 def _deletion_variants_expr(col: str, tau: int) -> str:
     """SQL expression: array of every string reachable from ``col`` by
-    deleting at most ``tau`` (1 or 2) characters, deduplicated. The
+    deleting at most ``tau`` (0, 1 or 2) characters, deduplicated. The
     symmetric-deletion signature set of FastSS (Bocek et al. 2007,
     public literature): lev(a, b) <= tau implies the two variant sets
     intersect, so an equi-join on variants is an EXACT candidate
@@ -962,7 +962,9 @@ def _deletion_variants_expr(col: str, tau: int) -> str:
         f"transform(sequence(1, {l}), i -> "
         f"concat(substring({col}, 1, i - 1), substring({col}, i + 1, {l})))"
     )
-    parts = [f"array({col})", f"CASE WHEN {l} >= 1 THEN {del1} ELSE array() END"]
+    parts = [f"array({col})"]
+    if tau >= 1:
+        parts.append(f"CASE WHEN {l} >= 1 THEN {del1} ELSE array() END")
     if tau >= 2:
         del2 = (
             f"flatten(transform(sequence(1, {l} - 1), i -> "
@@ -981,358 +983,159 @@ def record_linkage_pairs(
     name_col: str,
     block_cols: list[str],
     max_distance: int = 2,
-    method: str = "auto",
     max_pairs_per_record: int | None = None,
-    dedupe_values: bool | None = None,
-    prune_expansion: bool | None = None,
 ) -> DataFrame:
     """Blocked entity resolution: candidate record pairs whose
     ``name_col`` values are within ``max_distance`` Levenshtein edits,
     compared ONLY inside blocks sharing every ``block_cols`` value —
     ``(id_a, id_b, name_a, name_b, distance)`` with id_a < id_b (the
-    Fellegi–Sunter blocking strategy; public literature).
+    Fellegi–Sunter blocking strategy; public literature). Records with
+    a NULL name or a NULL id never pair. ``max_distance`` must be 0, 1
+    or 2 (``ValueError`` otherwise): the candidate generator below is
+    exact for tau <= 2.
 
-    Candidate generation is the scale story, and blocking alone is not
-    enough when the block key has FIXED cardinality (25 nations):
-    per-block membership then grows linearly with the table and the
-    within-block self-join quadratically — measured 13.7 s -> 118 s
-    for a 3x corpus. So for ``max_distance`` <= 2 the default is the
-    symmetric-deletion scheme of FastSS (Bocek et al. 2007): every
-    DISTINCT (block, name) class emits its <= tau-deletion variants
-    (C(len, 2)-ish short strings), candidates are the equi-join on
-    (block, variant), and only distinct candidate CLASS pairs — a
-    superset of the true pairs but a subset of lev <= 2*tau — reach
-    the verifier; verified class pairs then expand to record pairs
-    through one (block, name) join per side, and identical-name
-    record pairs come from a within-class self-join at distance 0
-    with no DP at all. Variant volume is linear in the DISTINCT
-    values, the join keys are near-unique, and the quadratic bill
-    disappears (118 s -> ~8 s at the same 3x corpus); on low-entropy
-    columns where each value repeats m times, candidate generation
-    and verification are m x (and the within-value quadratic m² x)
-    cheaper than instance-level FastSS — only the output-sized
-    expansion join scales with the emitted pairs. A stat gate (two
-    count jobs) picks class-level vs instance-level automatically;
-    ``dedupe_values`` forces the choice (True = class path, False =
-    instance path) for callers that already know their key entropy.
-    NOTE: the auto gate is an EAGER Spark action at plan-construction
-    time (one count + count_distinct scan of the input) — plan-only
-    callers (explain runs, plan audits, speculative builds) should
-    pass ``dedupe_values`` explicitly to stay lazy.
-    ``method="blocked"`` keeps the plain block join: preferable when
-    names are long (variant count grows with length squared at tau=2)
-    or blocks are known-small. Either path feeds the same verifier, so
-    results are identical.
+    One lazy plan, candidate generation plus verify (the similarity-
+    join shape of MapReduce Algorithms for Big Data Analysis, VLDB
+    2012), run once over DISTINCT values instead of once per record.
+    Blocking alone is not enough when the block key has FIXED
+    cardinality (25 nations): per-block membership grows linearly with
+    the table and a within-block self-join quadratically. So:
+
+    1. every distinct (block, name) class carries its sorted record
+       ids as one array;
+    2. each class emits its <= tau-deletion variants (FastSS, Bocek et
+       al. 2007); candidates are the equi-join on (block, variant), and
+       only distinct candidate CLASS pairs reach the banded
+       Levenshtein verifier — on a low-entropy name column where each
+       value repeats m times, that is m² x less verify work than a
+       per-record join, and identical names never pay a DP call;
+    3. each verified class pair expands to its record pairs IN-ROW
+       (higher-order functions over the two id arrays), and each class
+       emits its own distance-0 pairs from its array — no record-level
+       join at all, so only the output-sized explode scales with the
+       emitted pairs.
 
     Verification uses bounded-DP levenshtein: with a threshold Spark
     only fills the 2k+1-wide band and bails the moment the bound is
     exceeded (returns -1) — 4x faster than the full DP on this
     workload's 18-char names (23 s -> 6 s at sf0.1, measured);
-    survivors carry their true distance. A length-gap prefilter
-    (|len(a) - len(b)| > max_distance already exceeds the bound) skips
-    the DP entirely on the blocked path. Levenshtein is integer-exact
-    in every engine.
+    survivors carry their true distance.
 
-    ``max_pairs_per_record`` bounds the OUTPUT, not the plan: on a
-    low-entropy name column the candidate plan stays linear but the
-    true match set itself is O(n * block-density) — an unbounded sink
-    at 100 TB. With the knob set, each record keeps only its
-    ``max_pairs_per_record`` closest matches (ties broken by partner
-    id — deterministic), and a pair survives if EITHER endpoint ranks
-    it (so every record retains its k nearest neighbours and total
-    output is <= 2*k*n rows, linear by construction). The capped
-    result is always a subset of the exact result; the default
-    (``None``) is exact and unchanged.
-
-    ``prune_expansion`` additionally bounds the capped query's
-    INTERMEDIATE: the class->record expansion is pre-pruned to each
-    class's bottom-k record ids (output-identical — see the in-line
-    proof), turning a class pair's m_A*m_B rows into ~2k(m_A+m_B).
-    The prune itself costs a rank window, so it only pays off past
-    the m = 4k crossover; ``None`` (default) decides from the stat
-    gate's max class size, ``True``/``False`` force it (forcing
-    ``dedupe_values`` without forcing this defaults it ON — the lazy
-    path collects no stats, and at forced-class scale the prune's
-    absence is the dangerous direction).
+    ``max_pairs_per_record`` bounds the OUTPUT: on a low-entropy name
+    column the true match set itself is O(n * block-density) — an
+    unbounded sink at 100 TB. With the cap set, each record keeps only
+    its ``max_pairs_per_record`` closest matches (ties broken by
+    partner id — deterministic), and a pair survives if EITHER
+    endpoint ranks it (so every record retains its k nearest
+    neighbours and total output is <= 2*k*n rows). The capped result
+    is always a subset of the exact result; the default (``None``) is
+    exact. The cap also prunes the in-row expansion to what can
+    survive it (see below), so a class pair's m_A*m_B rows become
+    ~k(m_A+m_B) before the rank window.
     """
-    from ..sources.tables import ensure_min_parallelism
-
-    # Every stage below (variant explode, candidate join, DP verify)
-    # is CPU-dense narrow work inheriting this frame's partitioning —
-    # a one-row-group input would run it all on ONE task (measured:
-    # the sf0.1 candidate join 10.5 -> 2.6 s from this alone). The
-    # guard repartitions only under-split inputs; real multi-split
-    # corpora pass through with no exchange (guide §2.5).
-    keyed = ensure_min_parallelism(
+    if max_distance not in (0, 1, 2):
+        raise ValueError("max_distance must be 0, 1 or 2")
+    k = max_pairs_per_record
+    if k is not None and k < 1:
+        raise ValueError("max_pairs_per_record must be >= 1")
+    # The variant explode, candidate join and DP verify are CPU-dense
+    # work inheriting the class table's partitioning. An EXPLICIT
+    # count (which AQE never coalesces) spreads it over every core;
+    # left to AQE, the small class table collapsed into one partition
+    # and the whole candidate stage ran on one task (2x slower at
+    # sf0.1). The groupBy reuses this exchange instead of adding one.
+    classes = (
         df.select(
             F.col(id_col).alias("rid"),
             F.col(name_col).alias("name"),
             *[F.col(c) for c in block_cols],
-        ).where(F.col("name").isNotNull())
+        )
+        .where(F.col("name").isNotNull() & F.col("rid").isNotNull())
+        .repartition(
+            df.sparkSession.sparkContext.defaultParallelism,
+            *block_cols, "name",
+        )
+        .groupBy(*block_cols, "name")
+        .agg(F.array_sort(F.collect_list("rid")).alias("rids"))
     )
-    if method == "auto":
-        method = "fastss" if max_distance <= 2 else "blocked"
-    if method == "fastss" and max_distance > 2:
-        raise ValueError(
-            "fastss candidate generation implements tau <= 2; "
-            "use method='blocked' for larger distances"
+
+    def side(s, *cols):
+        return classes.select(*block_cols, F.col("name").alias(f"name_{s}"), *cols)
+
+    variants = F.explode(
+        F.expr(_deletion_variants_expr("name", max_distance))
+    ).alias("v")
+    cls_verified = (
+        side("a", variants)
+        .join(side("b", variants), [*block_cols, "v"])
+        .where(F.col("name_a") < F.col("name_b"))
+        .select(*block_cols, "name_a", "name_b")
+        .distinct()  # a class pair can share many variants
+        # BARRIER: the verify filter below references only this
+        # distinct's grouping keys, so Catalyst pushes
+        # levenshtein(name_a, name_b) >= 0 through the aggregate INTO
+        # the variant join's condition — the banded DP then runs per
+        # raw join row (~2x the distinct pair count, measured 2.5M vs
+        # 0.7M at sf1) and AGAIN in the post-distinct projection. The
+        # lineage cut pins the DP after the dedup: 51.5 -> ~18 s sf1.
+        .localCheckpoint(eager=False)
+        .withColumn(
+            "distance", F.levenshtein("name_a", "name_b", max_distance)
         )
-    if method == "fastss":
-        classes = keyed.select("name", *block_cols).distinct()
-        if dedupe_values is None:
-            # stat gate (same pattern as brute_force_topk's salting
-            # gate): the class path only pays off when values repeat —
-            # on all-unique names its distinct + expansion joins are
-            # pure overhead (measured 11.5 -> 19.7 s at sf0.1), while
-            # on repeated names it is the difference between verifying
-            # m² identical-value pairs and verifying one class pair
-            # (measured 652 -> 46 s at sf1, names repeated 10x). One
-            # aggregation over per-class counts decides — and its MAX
-            # class size also gates the expansion prune below.
-            n_rows, n_cls, m_max = (
-                keyed.groupBy(*block_cols, "name")
-                .agg(F.count("*").alias("_m"))
-                .agg(F.sum("_m"), F.count("*"), F.max("_m"))
-                .first()
-            )
-            dedupe_values = (n_cls or 0) > 0 and n_rows / n_cls >= 1.5
-            if prune_expansion is None and max_pairs_per_record:
-                # Prune crossover (round-10 VERDICT item 6): the
-                # bottom-k expansion prune replaces a class pair's
-                # m_A*m_B (and a class's C(m,2) same-name) record
-                # pairs with ~2k(m_A+m_B), at the cost of a rank
-                # window + a second expansion arm. Same-box fresh-JVM
-                # A/B (docs/SCALE.md round 11): m=1 prune +20%,
-                # m=3 +25%, m=10 -41% (39 s vs 66 s), m=100 the
-                # unpruned expansion never finishes — crossover
-                # between m=3 and m=10, matching the ~2k-3k row-count
-                # estimate. Gate on the MAX class size (not the
-                # mean — one hot class in a unique-name corpus is
-                # exactly the skew case the prune exists for).
-                prune_expansion = (m_max or 0) > 2 * max_pairs_per_record
-        if prune_expansion is None:
-            # dedupe_values was forced, so no stats were collected:
-            # default the prune ON — a caller forcing the class path
-            # is asserting repeated values, and the prune is
-            # output-identical (pytest-pinned) so the only risk is
-            # the small-m overhead, not correctness
-            prune_expansion = True
-    if method == "fastss" and dedupe_values:
-        # NAME-CLASS candidate generation: every stage up to (and
-        # including) the Levenshtein verify runs on DISTINCT
-        # (block, name) classes, not record instances. On a
-        # low-entropy name column each distinct value repeats m times,
-        # so instance-level work (variant explode, candidate join,
-        # dedup, verify DP) would be m x larger — and the m² identical-
-        # value pairs would each pay a DP call to learn distance 0.
-        # The expansion join below is the only stage still
-        # proportional to the OUTPUT.
-        cvar = classes.select(
-            "name", *block_cols,
-            F.explode(
-                F.expr(_deletion_variants_expr("name", max_distance))
-            ).alias("v"),
+        .where(F.col("distance") >= 0)
+        # BARRIER #2: inside one codegen stage a projected expression
+        # evaluates lazily PER CONSUMING ROW — without this cut the
+        # expansion below re-runs the banded DP once per OUTPUT
+        # record pair (16.3M calls for 163k verified class pairs at
+        # sf1, measured 36 -> 3.5 s for the expansion write)
+        .localCheckpoint(eager=False)
+    )
+    # Expansion, with the cap's prune when capped: the cap ranks a
+    # record's partners by (distance, partner id), and all record
+    # pairs of one class pair share a distance, so a record's k best
+    # partners inside any partner class are that class's k SMALLEST
+    # ids. A pair with BOTH endpoints outside their class's bottom-k
+    # ranks > k from both sides and can never survive; every record's
+    # true top-k is kept, so the rank window's decisions at <= k are
+    # unchanged (output-identical, pytest-pinned). rids are sorted, so
+    # bottom-k is a slice: left index i < k keeps every right id,
+    # otherwise only the right class's first k.
+    right = "rids_b" if k is None else f"if(i < {k}, rids_b, slice(rids_b, 1, {k}))"
+    cross = (
+        cls_verified.join(side("a", F.col("rids").alias("rids_a")), [*block_cols, "name_a"])
+        .join(side("b", F.col("rids").alias("rids_b")), [*block_cols, "name_b"])
+        .select(
+            "distance",
+            F.inline(F.expr(
+                f"flatten(transform(rids_a, (a, i) -> transform({right}, "
+                "b -> named_struct('id_a', least(a, b), 'id_b', greatest(a, b), "
+                "'name_a', if(a < b, name_a, name_b), "
+                "'name_b', if(a < b, name_b, name_a)))))"
+            )),
         )
-        ca = cvar.select(F.col("name").alias("name_a"), *block_cols, "v")
-        cb = cvar.select(F.col("name").alias("name_b"), *block_cols, "v")
-        cls_cand = (
-            ca.join(cb, [*block_cols, "v"])
-            .where(F.col("name_a") < F.col("name_b"))
-            .select(*block_cols, "name_a", "name_b")
-            .distinct()  # a class pair can share many variants
-            # BARRIER (round-14 perf finding): the verify filter
-            # below references only this distinct's grouping keys, so
-            # Catalyst pushes levenshtein(name_a, name_b) >= 0 through
-            # the aggregate INTO the variant join's condition — the
-            # banded DP then runs per raw join row (~2x the distinct
-            # pair count, measured 2.5M vs 0.7M at sf1) and AGAIN in
-            # the post-distinct projection. The lineage cut pins the
-            # DP after the dedup: 51.5 -> ~18 s sf1 best-of-2.
-            .localCheckpoint(eager=False)
-        )
-        cls_verified = (
-            cls_cand.withColumn(
-                "distance", F.levenshtein("name_a", "name_b", max_distance)
-            )
-            .where(F.col("distance") >= 0)
-            # BARRIER #2 (round-14): inside one codegen stage a
-            # projected expression evaluates lazily PER CONSUMING
-            # ROW — without this cut the expansion join below
-            # re-runs the banded DP once per OUTPUT record pair
-            # (16.3M calls for 163k verified class pairs at sf1,
-            # measured 36 -> 3.5 s for the expansion write; the
-            # winnowing materialized-hash lesson, here across a
-            # join instead of a window)
-            .localCheckpoint(eager=False)
-        )
-        # expand verified CLASS pairs to record pairs: one join per
-        # side on (block, name) — each record has exactly one name, so
-        # every unordered id pair materializes exactly once
-        ids_a = keyed.select(
-            F.col("rid").alias("ia"), F.col("name").alias("name_a"),
-            *block_cols,
-        )
-        ids_b = keyed.select(
-            F.col("rid").alias("ib"), F.col("name").alias("name_b"),
-            *block_cols,
-        )
-        if max_pairs_per_record is not None and prune_expansion:
-            # OUTPUT-IDENTICAL upstream prune for the capped query:
-            # the cap ranks every pair by (distance, partner id) from
-            # both endpoints, and all record pairs expanded from one
-            # class pair share a distance — so a record's k best
-            # partners inside any partner class are always that
-            # class's k SMALLEST record ids. Pairs whose BOTH
-            # endpoints fall outside their class's bottom-k therefore
-            # rank > k from both viewpoints and can never survive the
-            # cap; pruning them before the expansion join cuts the
-            # intermediate from m_A*m_B (C(m,2) within-class) to
-            # ~2k(m_A+m_B) per class pair — the sf10 probe measured
-            # the unpruned expansion at ~10^9 rows through the rank
-            # window for a <=2kn output. Ranks at the keep/drop
-            # boundary are preserved: every record's true top-k
-            # candidates are all kept (any pruned candidate has >= k
-            # kept candidates ahead of it inside its own class), so
-            # row_number decisions at <= k are unchanged.
-            kb = max_pairs_per_record
-            wcls = Window.partitionBy(*block_cols, "name").orderBy("rid")
-            ranked_ids = keyed.withColumn("_crk", F.row_number().over(wcls))
-            bot_a = ranked_ids.where(F.col("_crk") <= kb).select(
-                F.col("rid").alias("ia"), F.col("name").alias("name_a"),
-                *block_cols,
-            )
-            bot_b = ranked_ids.where(F.col("_crk") <= kb).select(
-                F.col("rid").alias("ib"), F.col("name").alias("name_b"),
-                *block_cols,
-            )
-            expanded = (
-                cls_verified.join(ids_a, [*block_cols, "name_a"])
-                .join(bot_b, [*block_cols, "name_b"])
-                .unionByName(
-                    cls_verified.join(bot_a, [*block_cols, "name_a"])
-                    .join(ids_b, [*block_cols, "name_b"])
-                )
-                .select("ia", "ib", "name_a", "name_b", "distance")
-            )
-            # same-name candidates: each record with its class's
-            # k+1 smallest ids (k partners once itself is excluded)
-            same_src = (
-                keyed.select(F.col("rid").alias("ia"), "name", *block_cols)
-                .join(
-                    ranked_ids.where(F.col("_crk") <= kb + 1).select(
-                        F.col("rid").alias("ib"), "name", *block_cols
-                    ),
-                    [*block_cols, "name"],
-                )
-                .where(F.col("ia") != F.col("ib"))
-                .select(
-                    "ia", "ib",
-                    F.col("name").alias("name_a"),
-                    F.col("name").alias("name_b"),
-                    F.lit(0).cast("int").alias("distance"),
-                )
-            )
-            swap = F.col("ia") > F.col("ib")
-            # both union arms (and both same-name orientations) can
-            # emit the same unordered pair — canonicalize + distinct
-            verified = (
-                expanded.unionByName(same_src)
-                .select(
-                    F.when(swap, F.col("ib")).otherwise(F.col("ia")).alias("id_a"),
-                    F.when(swap, F.col("ia")).otherwise(F.col("ib")).alias("id_b"),
-                    F.when(swap, F.col("name_b")).otherwise(F.col("name_a")).alias("name_a"),
-                    F.when(swap, F.col("name_a")).otherwise(F.col("name_b")).alias("name_b"),
-                    "distance",
-                )
-                .distinct()
-            )
-        else:
-            swap = F.col("ia") > F.col("ib")
-            cross = (
-                cls_verified.join(ids_a, [*block_cols, "name_a"])
-                .join(ids_b, [*block_cols, "name_b"])
-                .select(
-                    F.when(swap, F.col("ib")).otherwise(F.col("ia")).alias("id_a"),
-                    F.when(swap, F.col("ia")).otherwise(F.col("ib")).alias("id_b"),
-                    F.when(swap, F.col("name_b")).otherwise(F.col("name_a")).alias("name_a"),
-                    F.when(swap, F.col("name_a")).otherwise(F.col("name_b")).alias("name_b"),
-                    "distance",
-                )
-            )
-            # identical-name record pairs are distance 0 by definition —
-            # no DP, just the within-class self-join (these pairs ARE the
-            # output on duplicated values; nothing smaller can emit them)
-            same = (
-                keyed.select(F.col("rid").alias("id_a"), "name", *block_cols)
-                .join(
-                    keyed.select(F.col("rid").alias("id_b"), "name", *block_cols),
-                    [*block_cols, "name"],
-                )
-                .where(F.col("id_a") < F.col("id_b"))
-                .select(
-                    "id_a", "id_b",
-                    F.col("name").alias("name_a"), F.col("name").alias("name_b"),
-                    F.lit(0).cast("int").alias("distance"),
-                )
-            )
-            verified = cross.unionByName(same)
-    elif method == "fastss":
-        # instance-level FastSS: on all-unique values the class path
-        # above degenerates to this plus pure overhead, so the gate
-        # routes here
-        variants = keyed.select(
-            "rid", "name", *block_cols,
-            F.explode(
-                F.expr(_deletion_variants_expr("name", max_distance))
-            ).alias("v"),
-        )
-        a = variants.select(
-            F.col("rid").alias("id_a"), F.col("name").alias("name_a"),
-            *block_cols, "v",
-        )
-        b = variants.select(
-            F.col("rid").alias("id_b"), F.col("name").alias("name_b"),
-            *block_cols, "v",
-        )
-        verified = (
-            a.join(b, [*block_cols, "v"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "name_a", "name_b")
-            .distinct()  # a pair can share many variants; verify once
-            # same barrier as the class path: keep the DP from being
-            # pushed through the distinct into the join condition
-            .localCheckpoint(eager=False)
-            .withColumn(
-                "distance", F.levenshtein("name_a", "name_b", max_distance)
-            )
-            .where(F.col("distance") >= 0)
-            .select("id_a", "id_b", "name_a", "name_b", "distance")
-        )
-    else:
-        l = keyed.select(
-            F.col("rid").alias("id_a"), F.col("name").alias("name_a"),
-            *[F.col(c) for c in block_cols],
-        )
-        r = keyed.select(
-            F.col("rid").alias("id_b"), F.col("name").alias("name_b"),
-            *[F.col(c) for c in block_cols],
-        )
-        verified = (
-            l.join(r, block_cols)
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(
-                F.abs(F.length("name_a") - F.length("name_b")) <= max_distance
-            )
-            .withColumn(
-                "distance", F.levenshtein("name_a", "name_b", max_distance)
-            )
-            .where(F.col("distance") >= 0)
-            .select("id_a", "id_b", "name_a", "name_b", "distance")
-        )
-    if max_pairs_per_record is None:
+    )
+    # identical-name pairs are distance 0 by definition — no DP: each
+    # class pairs its i-th id with every later one. Capped, a pair
+    # survives only if its smaller id is among the class's k+1
+    # smallest (k partners once a record excludes itself).
+    left = "rids" if k is None else f"slice(rids, 1, {k + 1})"
+    same = classes.select(
+        F.col("name").alias("name_a"), F.col("name").alias("name_b"),
+        F.lit(0).alias("distance"),
+        F.inline(F.expr(
+            f"flatten(transform({left}, (a, i) -> "
+            "transform(slice(rids, i + 2, size(rids)), "
+            "b -> named_struct('id_a', a, 'id_b', b))))"
+        )),
+    )
+    # a duplicated id would pair with itself; the contract is id_a < id_b
+    verified = (
+        cross.unionByName(same)
+        .where(F.col("id_a") != F.col("id_b"))
+        .select("id_a", "id_b", "name_a", "name_b", "distance")
+    )
+    if k is None:
         return verified
-    if max_pairs_per_record < 1:
-        raise ValueError("max_pairs_per_record must be >= 1")
     # NOTE: the cap consumes `verified` three times, but do NOT
     # localCheckpoint it — Spark's ReusedExchange already shares the
     # candidate/verify stages across the consumers, and materializing
@@ -1352,7 +1155,7 @@ def record_linkage_pairs(
     w = Window.partitionBy("rid").orderBy("distance", "oid")
     kept = (
         sym.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= max_pairs_per_record)
+        .where(F.col("rk") <= k)
         .select(
             F.least("rid", "oid").alias("id_a"),
             F.greatest("rid", "oid").alias("id_b"),

@@ -409,7 +409,6 @@ def mrr_eval(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hint_broadcast: bool | None = None,
     max_queries: int | None = 200,
 ) -> DataFrame:
     """Known-item retrieval evaluation: every ``every``-th document
@@ -430,10 +429,10 @@ def mrr_eval(
     enough that this broadcasts) and the rank window partitions by
     query_id, which is uniform by construction. The query-term and df
     tables scale with n/every, so the broadcast hints are only safe
-    when the sample is sparse: ``hint_broadcast`` defaults to auto
-    (hint iff ``every >= 64``); with hints off, AQE picks the join
-    strategy from the aggregates' RUNTIME sizes, which stays correct
-    (just possibly shuffled) on a dense sample over a huge corpus.
+    when the sample is sparse: they apply iff ``every >= 64``; below
+    that, AQE picks the join strategy from the aggregates' RUNTIME
+    sizes, which stays correct (just possibly shuffled) on a dense
+    sample over a huge corpus.
     Per-term contributions
     round to 6 dp BEFORE the per-document sum and ranking ties break
     on docid — the engine-parity discipline every scorer here follows.
@@ -453,9 +452,7 @@ def mrr_eval(
         raise ValueError("every, q_len, and k must all be >= 1")
     if max_queries is not None and max_queries < 1:
         raise ValueError("max_queries must be >= 1 or None")
-    if hint_broadcast is None:
-        hint_broadcast = every >= 64
-    _bc = F.broadcast if hint_broadcast else (lambda d: d)
+    _bc = F.broadcast if every >= 64 else (lambda d: d)
     toks = tokens_array(text_col)
     if max_queries is None:
         stride = F.lit(every)

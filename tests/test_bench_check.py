@@ -80,6 +80,36 @@ def test_check_skips_mismatched_mode_and_sf(tmp_path):
     assert bench.check_trend(trend) == []
 
 
+def test_git_rev_marks_uncommitted_tracked_changes(tmp_path):
+    """A run of uncommitted code must not be filed under its parent's
+    rev (check_trend compares same-rev records): a tracked-file edit
+    adds ``-dirty``; an untracked file does not."""
+    import subprocess
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-C", str(tmp_path), "-c", "user.name=t",
+             "-c", "user.email=t@example.com", *args],
+            check=True, capture_output=True,
+        )
+
+    git("init", "-q")
+    (tmp_path / "f.txt").write_text("a\n")
+    git("add", "f.txt")
+    git("commit", "-q", "-m", "init")
+    head = subprocess.run(
+        ["git", "-C", str(tmp_path), "rev-parse", "--short", "HEAD"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert bench._git_rev(tmp_path) == head
+    (tmp_path / "untracked.txt").write_text("x\n")
+    assert bench._git_rev(tmp_path) == head
+    (tmp_path / "f.txt").write_text("b\n")
+    assert bench._git_rev(tmp_path) == f"{head}-dirty"
+    git("add", "f.txt")  # staged but uncommitted is still dirty
+    assert bench._git_rev(tmp_path) == f"{head}-dirty"
+
+
 # -- rotation-backlog drain lock (round-7 VERDICT item 5): every
 # driver round must score at least one first-time query until the
 # never-scored backlog hits zero, and docs/ROTATION_AUDIT.md must

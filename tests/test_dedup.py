@@ -368,43 +368,125 @@ def test_record_linkage_blocking_and_distance(spark):
     assert got == {(1, 2): 1}
 
 
-def test_record_linkage_fastss_equals_blocked(spark):
-    """The symmetric-deletion candidate generator is EXACT: on a
-    deliberately adversarial corpus (dense near-duplicates, repeated
-    characters, length differences, 1-char and empty-ish names) the
-    fastss path returns byte-identical pairs to the quadratic block
-    join, for tau = 1 and tau = 2."""
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _python_cap(pairs, k):
+    """Reference cap: rank every pair from both endpoints by
+    (distance, partner id); keep the pairs either endpoint ranks <= k."""
+    from collections import defaultdict
+
+    cands = defaultdict(list)
+    for a, b, _na, _nb, d in pairs:
+        cands[a].append((d, b))
+        cands[b].append((d, a))
+    keep = set()
+    for rid, lst in cands.items():
+        for _d, oid in sorted(lst)[:k]:
+            keep.add((min(rid, oid), max(rid, oid)))
+    return {p for p in pairs if (p[0], p[1]) in keep}
+
+
+def test_record_linkage_equals_brute_force(spark):
+    """The symmetric-deletion candidate generator, the class-level
+    verify and the in-row id expansion are EXACT: on an adversarial
+    corpus (dense near-duplicates, repeated characters, length
+    differences, 1-char names, exact repeats) and on a 3x replica of
+    it with fresh ids, the output equals a pure-Python all-pairs
+    Levenshtein within each block, for tau in {0, 1, 2}, uncapped and
+    capped at k in {1, 3}. A NULL-id record never pairs, and an id
+    listed under two names never pairs with itself."""
     from mapreduce_assignments_spark.operators.dedup import record_linkage_pairs
 
     names = [
         "aaaa", "aaab", "aab", "abab", "ba", "b", "x",
         "customer#001", "customer#002", "customer#012", "custmer#001",
         "mississippi", "misisipi", "mississippti",
-        # exact repeats (same block as their originals): the fastss
-        # path emits these through its within-class distance-0 branch
-        "aaaa", "customer#001",
+        "aaaa", "customer#001",  # exact repeats in their originals' block
     ]
+    base = [(i, n, chr(65 + i % 2)) for i, n in enumerate(names)]
+    base.append((2, "aaaa", "A"))  # id 2 under a second name: no (2, 2) pair
+    replica = [(i + 100 * r, n, b) for r in range(3) for i, n, b in base]
+    for rows in (base, replica):
+        df = spark.createDataFrame(
+            rows + [(None, "aaaa", "A")], "id long, name string, blk string"
+        )
+        for tau in (0, 1, 2):
+            exact = {
+                (a, b, na, nb, _levenshtein(na, nb))
+                for a, na, ba in rows
+                for b, nb, bb in rows
+                if ba == bb and a < b and _levenshtein(na, nb) <= tau
+            }
+            for k in (None, 1, 3):
+                got = [
+                    tuple(r) for r in record_linkage_pairs(
+                        df, "id", "name", ["blk"], max_distance=tau,
+                        max_pairs_per_record=k,
+                    ).collect()
+                ]
+                want = exact if k is None else _python_cap(exact, k)
+                assert len(got) == len(set(got))  # no pair emitted twice
+                assert set(got) == want, (len(rows), tau, k, set(got) ^ want)
+
+
+def test_record_linkage_null_id_never_pairs(spark):
+    """A NULL id is not a record identity: it must not pair, on
+    repeated names (where the same-name arm expands class id arrays)
+    or otherwise."""
+    from mapreduce_assignments_spark.operators.dedup import record_linkage_pairs
+
     df = spark.createDataFrame(
-        [(i, n, chr(65 + i % 2)) for i, n in enumerate(names)],
+        [
+            (1, "smith john", "A"),
+            (None, "smith john", "A"),
+            (3, "smith jon", "A"),
+            (4, "smith jon", "A"),
+            (5, "wholly different", "A"),
+        ],
         "id long, name string, blk string",
     )
-    for tau in (1, 2):
-        slow = {
-            tuple(r) for r in record_linkage_pairs(
-                df, "id", "name", ["blk"], max_distance=tau, method="blocked"
-            ).collect()
-        }
-        # both fastss plans (instance-level and name-class) must match
-        # the quadratic join exactly, regardless of what the stat gate
-        # would pick
-        for dedupe in (False, True):
-            fast = {
-                tuple(r) for r in record_linkage_pairs(
-                    df, "id", "name", ["blk"], max_distance=tau,
-                    method="fastss", dedupe_values=dedupe,
-                ).collect()
-            }
-            assert fast == slow, f"tau={tau} dedupe={dedupe}: {fast ^ slow}"
+    got = {
+        (r["id_a"], r["id_b"], r["distance"])
+        for r in record_linkage_pairs(df, "id", "name", ["blk"]).collect()
+    }
+    assert got == {(1, 3, 1), (1, 4, 1), (3, 4, 0)}
+
+
+def test_record_linkage_construction_has_no_stat_gate(spark):
+    """Building the plan (capped or not) scans no statistics: the only
+    jobs are the shuffle stages AQE runs when the first lazy verify
+    barrier is built (2 here; an eager count gate made it 7). A
+    distance outside the exact range 0..2 fails loudly."""
+    from mapreduce_assignments_spark.operators.dedup import record_linkage_pairs
+    from mapreduce_assignments_spark.sources.tables import load_table
+
+    cust = load_table(spark, "/root/testdata/sf0.001", "customer")
+    sc = spark.sparkContext
+    group = "record-linkage-construct"
+    for k in (None, 3):
+        sc.setJobGroup(f"{group}-{k}", "record_linkage_pairs construction")
+        try:
+            record_linkage_pairs(
+                cust, "c_custkey", "c_name", ["c_nationkey"],
+                max_pairs_per_record=k,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(f"{group}-{k}")) <= 2
+    for tau in (3, -1):
+        with pytest.raises(ValueError):
+            record_linkage_pairs(
+                cust, "c_custkey", "c_name", ["c_nationkey"], max_distance=tau
+            )
 
 
 def test_record_linkage_max_pairs_cap_properties(spark):
@@ -642,18 +724,14 @@ def test_record_linkage_class_verify_bill_flat_under_replication(spark):
             ).alias("classes"),
         ).first()
 
-    # dedupe_values=True pins the class path on both inputs (and keeps
-    # the auto gate's eager pre-scan out of the test)
     b = stats(
         record_linkage_pairs(
-            cust, "c_custkey", "c_name", ["c_nationkey"],
-            max_distance=2, dedupe_values=True,
+            cust, "c_custkey", "c_name", ["c_nationkey"], max_distance=2
         )
     )
     r = stats(
         record_linkage_pairs(
-            reps, "c_custkey", "c_name", ["c_nationkey"],
-            max_distance=2, dedupe_values=True,
+            reps, "c_custkey", "c_name", ["c_nationkey"], max_distance=2
         )
     )
     # unique names -> no distance-0 pairs in the base run
@@ -668,12 +746,12 @@ def test_record_linkage_class_verify_bill_flat_under_replication(spark):
 
 
 def test_capped_class_expansion_prune_is_output_identical(spark):
-    """The sf10 fix: with max_pairs_per_record the class path prunes
-    the expansion join to per-class bottom-k ids BEFORE the ranking
-    window. Must be EXACTLY the same output as ranking the full
-    uncapped pair set — verified here against a reference cap computed
-    in plain Python over the uncapped output, on a replicated
-    (low-entropy) input where the prune actually bites."""
+    """The sf10 fix: with max_pairs_per_record the expansion is pruned
+    to per-class bottom-k ids BEFORE the ranking window. Must be
+    EXACTLY the same output as ranking the full uncapped pair set —
+    verified here against a reference cap computed in plain Python
+    over the uncapped output, on a replicated (low-entropy) input
+    where the prune actually bites."""
     import pyspark.sql.functions as F
 
     from mapreduce_assignments_spark.operators.dedup import record_linkage_pairs
@@ -693,47 +771,19 @@ def test_capped_class_expansion_prune_is_output_identical(spark):
             )
         )
     k = 3
-    uncapped = record_linkage_pairs(
-        reps, "c_custkey", "c_name", ["c_nationkey"],
-        max_distance=2, dedupe_values=True,
-    ).collect()
-    # reference cap: rank every pair from both endpoints by
-    # (distance, partner id); keep pairs either endpoint ranks <= k
-    from collections import defaultdict
-
-    cands = defaultdict(list)
-    for r in uncapped:
-        cands[r["id_a"]].append((r["distance"], r["id_b"]))
-        cands[r["id_b"]].append((r["distance"], r["id_a"]))
-    keep = set()
-    for rid, lst in cands.items():
-        for d, oid in sorted(lst)[:k]:
-            keep.add((min(rid, oid), max(rid, oid)))
-    capped = record_linkage_pairs(
-        reps, "c_custkey", "c_name", ["c_nationkey"],
-        max_distance=2, dedupe_values=True, max_pairs_per_record=k,
-    ).collect()
-    got = {(r["id_a"], r["id_b"]) for r in capped}
-    assert got == keep
-    # row payload sanity: distances on surviving pairs match uncapped
-    dist = {(r["id_a"], r["id_b"]): r["distance"] for r in uncapped}
-    for r in capped:
-        assert dist[(r["id_a"], r["id_b"])] == r["distance"]
-    # the prune is gated (round-10 VERDICT item 6): both the forced-
-    # off variant (the unpruned expansion) and the full auto gate
-    # (stats decide class path AND prune; m=8 > 2k=6 engages the
-    # prune here) must be output-identical
-    for kwargs in (
-        dict(dedupe_values=True, prune_expansion=False),
-        dict(),  # full auto
-    ):
-        alt = record_linkage_pairs(
-            reps, "c_custkey", "c_name", ["c_nationkey"],
-            max_distance=2, max_pairs_per_record=k, **kwargs,
+    uncapped = {
+        tuple(r) for r in record_linkage_pairs(
+            reps, "c_custkey", "c_name", ["c_nationkey"], max_distance=2
         ).collect()
-        assert {(r["id_a"], r["id_b"]) for r in alt} == keep, kwargs
-        for r in alt:
-            assert dist[(r["id_a"], r["id_b"])] == r["distance"]
+    }
+    capped = {
+        tuple(r) for r in record_linkage_pairs(
+            reps, "c_custkey", "c_name", ["c_nationkey"],
+            max_distance=2, max_pairs_per_record=k,
+        ).collect()
+    }
+    # whole rows, so distances on surviving pairs match uncapped too
+    assert capped == _python_cap(uncapped, k)
 
 
 def test_winnowing_fingerprints_window_arithmetic(spark):
@@ -853,24 +903,20 @@ def test_cluster_aware_split_leak_free_and_total(spark):
             assert r["rep"] == r["doc_id"]
 
 
-def test_record_linkage_parallelizes_single_partition_input(spark):
-    """r15: the CPU-dense candidate stages must not inherit a
-    one-partition layout from a single-row-group input — the operator
-    round-robins under-split inputs (and leaves well-split ones
-    alone), with identical output either way."""
+def test_record_linkage_parallelizes_single_partition_input(spark, monkeypatch):
+    """The CPU-dense candidate stages must not inherit a one-partition
+    layout from a single-row-group input, nor AQE's coalescing of the
+    small class table: an explicit defaultParallelism-wide repartition
+    on the class key feeds the variant explode, with identical output
+    for a one-partition and a pre-split input."""
+    import itertools
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from mapreduce_assignments_spark.operators.dedup import record_linkage_pairs
 
     rows = [(i, f"name {i:03d}", "A") for i in range(40)]
-    from mapreduce_assignments_spark.sources.tables import ensure_min_parallelism
-
     one_part = spark.createDataFrame(rows, "id long, name string, blk string").coalesce(1)
-    # the guard the operator now applies to its keyed frame: a
-    # 1-partition input must come out round-robin split (the final
-    # plan can't show it — the verify barrier truncates lineage)
-    assert ensure_min_parallelism(one_part).rdd.getNumPartitions() > 1
-    df = record_linkage_pairs(
-        one_part, id_col="id", name_col="name", block_cols=["blk"], max_distance=1
-    )
     pre_split = spark.createDataFrame(rows, "id long, name string, blk string").repartition(8)
     expect = {
         (r["id_a"], r["id_b"], r["distance"])
@@ -878,8 +924,29 @@ def test_record_linkage_parallelizes_single_partition_input(spark):
             pre_split, id_col="id", name_col="name", block_cols=["blk"], max_distance=1
         ).collect()
     }
-    got = {(r["id_a"], r["id_b"], r["distance"]) for r in df.collect()}
+    got = {
+        (r["id_a"], r["id_b"], r["distance"])
+        for r in record_linkage_pairs(
+            one_part, id_col="id", name_col="name", block_cols=["blk"], max_distance=1
+        ).collect()
+    }
     assert got == expect
+    # the verify barriers hide the explode behind a checkpoint leaf:
+    # neutralize them to see the candidate subtree
+    monkeypatch.setattr(DataFrame, "localCheckpoint", lambda self, eager=True: self)
+    lines = record_linkage_pairs(
+        one_part, id_col="id", name_col="name", block_cols=["blk"], max_distance=1
+    )._jdf.queryExecution().executedPlan().toString().splitlines()
+    gen = next(i for i, ln in enumerate(lines) if "Generate explode(array_distinct" in ln)
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    subtree = itertools.takewhile(
+        lambda ln: depth(ln) > depth(lines[gen]), lines[gen + 1:]
+    )
+    first_exchange = next(ln for ln in subtree if "Exchange " in ln)
+    n = spark.sparkContext.defaultParallelism
+    assert f", {n}), REPARTITION_BY_NUM" in first_exchange, first_exchange
 
 
 def test_exact_jaccard_for_pairs_matches_threshold0_join(spark):

@@ -138,7 +138,8 @@ def test_record_linkage_fastss_no_quadratic_block_join(spark, monkeypatch):
     """record_linkage's candidate join must key on the deletion
     variant (plus block), never on the block alone — a block-only
     equi-join is quadratic in SF because nation cardinality is fixed.
-    The variant explode appears exactly twice (both join sides).
+    The deletion-variant explode appears exactly twice (both join
+    sides); the id-array expansion's generators are not counted.
 
     The round-14 projection barriers (lazy localCheckpoints that keep
     the DP off the join condition and off the expansion's output
@@ -154,7 +155,7 @@ def test_record_linkage_fastss_no_quadratic_block_join(spark, monkeypatch):
         DataFrame, "localCheckpoint", lambda self, eager=True: self
     )
     plan = _plan(workloads.ALL_QUERIES["record_linkage"](spark, SF_DIR))
-    assert plan.count("Generate explode") == 2
+    assert plan.count("Generate explode(array_distinct(") == 2
     assert "levenshtein" in plan  # bounded-DP verifier still in place
 
 
@@ -206,10 +207,11 @@ def test_record_linkage_barriers_present_in_real_plan(spark):
 
 
 def test_record_linkage_class_path_no_cartesian(spark, monkeypatch):
-    """Both fastss plans (forced class-level and forced instance-
-    level) stay equi-join shaped — no cartesian/BNLJ fallback.
+    """The plan stays equi-join shaped — no cartesian/BNLJ fallback —
+    on unique names and on a replicated (repeated-name) input.
     Barriers neutralized as in the fastss shape test above, so the
     assertion covers the real join subtree, not a LogicalRDD leaf."""
+    import pyspark.sql.functions as F
     from pyspark.sql.classic.dataframe import DataFrame
 
     from mapreduce_assignments_spark.operators.dedup import record_linkage_pairs
@@ -218,16 +220,18 @@ def test_record_linkage_class_path_no_cartesian(spark, monkeypatch):
         DataFrame, "localCheckpoint", lambda self, eager=True: self
     )
     cust = load_table(spark, SF_DIR, "customer")
-    for dedupe in (True, False):
+    replicated = cust.unionByName(
+        cust.withColumn("c_custkey", F.col("c_custkey") + 10_000_000)
+    )
+    for label, df in (("unique", cust), ("replicated", replicated)):
         plan = _plan(
             record_linkage_pairs(
-                cust, "c_custkey", "c_name", ["c_nationkey"],
-                max_distance=2, dedupe_values=dedupe,
+                df, "c_custkey", "c_name", ["c_nationkey"], max_distance=2
             )
         )
-        assert "CartesianProduct" not in plan, dedupe
-        assert "BroadcastNestedLoopJoin" not in plan, dedupe
-        assert "Python" not in plan, dedupe
+        assert "CartesianProduct" not in plan, label
+        assert "BroadcastNestedLoopJoin" not in plan, label
+        assert "Python" not in plan, label
 
 
 def test_global_window_detector_and_bounded_topk_plans(spark):
