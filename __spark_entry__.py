@@ -28,7 +28,7 @@ from mapreduce_assignments_spark import workloads  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the revenue-by-nation star join (broadcast dims,
     decimal-exact aggregation) over sf0.001."""
-    return workloads.q_revenue_by_nation(spark, "/root/testdata/sf0.001")
+    return workloads.ALL_QUERIES["revenue_by_nation"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -72,132 +72,11 @@ HEADLINE = (
     "pagerank",
 )
 
-# family per query for --full subtotals (name-prefix/keyword rules
-# would misfile e.g. simhash vs simhash_near_dupes; explicit is safer).
-# Must partition workloads.ALL_QUERIES exactly (tests/test_bench_check.py).
-FAMILIES: dict[str, tuple[str, ...]] = {
-    "text": (
-        "word_count", "bigram_count", "cooccurrence", "cooccurrence_stripes",
-        "pmi", "llr", "zipf_fit", "length_histogram",
-    ),
-    "index_retrieval": (
-        "inverted_index_stats", "tf_histogram", "tf_idf", "term_frequencies",
-        "boolean_retrieval", "boolean_retrieval_text", "bm25_topk",
-        "top_keywords", "query_likelihood", "rrf_fusion", "phrase_search",
-        "prefix_search", "mrr_eval",
-    ),
-    "timeseries": (
-        "hourly_counts", "hourly_counts_errors", "hourly_counts_tweets",
-        "hourly_counts_tweets_egypt", "hypertable_rollup",
-        "sliding_hourly_stats", "value_percentiles", "asof_join", "range_join",
-        "dense_hourly_counts", "scd2_history", "latest_events",
-        "snapshot_diff", "hourly_anomalies", "normalize_events",
-        "point_in_time_state",
-        "rolling_active_users", "daily_trend", "ewma_hourly",
-        "seasonal_anomalies", "incremental_rollup", "interpolate_gaps",
-        "hourly_top_movers", "activity_heatmap", "slo_burn_rate",
-    ),
-    "relational": (
-        "pricing_summary", "forecast_revenue", "top_revenue_orders", "revenue_by_nation",
-        "sql_revenue_by_nation", "top_orders_per_customer",
-        "customers_without_orders", "salted_order_revenue",
-        "bucketed_customer_orders", "user_sessions", "event_props_stats",
-        "funnel_counts", "cohort_retention", "brand_nation_revenue",
-        "late_orders_by_priority", "top_return_customers", "session_stats", "co_engagement",
-        "event_cube", "shipping_priority", "promo_revenue", "session_paths",
-        "ab_test_zscore", "order_gap_stats", "user_purge_report", "basket_lift",
-        "transition_latency", "linear_attribution", "interarrival_rates",
-        "conversion_by_activity",
-        "nation_trade_balance", "discount_effectiveness",
-        "large_volume_orders", "part_bracket_revenue", "event_transitions",
-        "user_entropy", "conversion_lag", "revenue_share",
-        "revenue_lag_features", "volume_shipping", "market_share",
-        "customer_distribution", "top_supplier", "small_quantity_revenue",
-        "revenue_rollup", "last_touch_attribution", "rfm_segments",
-        "rolling_weekly_revenue", "yoy_growth", "lines_per_order_histogram",
-        "customer_growth_topk", "order_size_correlation", "region_nation_share",
-        "prospective_customers", "pareto_report",
-    ),
-    "graph": (
-        "pagerank", "personalized_pagerank", "degree_histogram",
-        "triangle_count", "graph_components", "kcore",
-        "hits", "bfs_hops", "clustering_coefficient", "link_prediction",
-        "degree_assortativity", "pagerank_convergence", "harmonic_centrality",
-        "lpa_communities",
-        "component_size_histogram",
-    ),
-    "dedup": (
-        "exact_duplicates", "shingles", "ngram_jaccard", "minhash_signatures",
-        "minhash_lsh_candidates", "simhash", "simhash_near_dupes",
-        "dedup_clusters", "contamination_flags", "dedup_apply",
-        "curated_corpus", "split_leakage", "incremental_dedup",
-        "verified_near_dupes", "eval_substring_hits", "bloom_decontamination",
-        "minhash_calibration", "containment_pairs", "source_overlap",
-        "ngram_novelty", "record_linkage", "record_linkage_topk",
-        "cluster_canonical", "dup_span_report",
-        "prefix_jaccard", "dedup_savings", "semantic_decontamination",
-        "winnowing_fingerprints", "winnowing_candidates",
-        "dedup_threshold_curve", "cluster_aware_split",
-    ),
-    "similarity": (
-        "brute_force_topk", "ivf_assign", "ivf_topk_trained",
-        "ivf_index_probe", "embedding_near_dupes", "lsh_topk",
-        "quantize_embeddings", "ivf_recall_report", "label_centroids",
-        "centroid_confusion", "random_projection", "hard_negatives",
-        "label_spread", "semantic_dedup", "knn_label_accuracy",
-        "embedding_covariance", "quantization_error", "index_shard_balance",
-        "nn_similarity_histogram", "margin_bitext", "matryoshka_recall",
-        "embedding_pca", "mutual_knn_pairs", "ivf_silhouette", "pq_codes",
-        "pq_adc_topk", "pq_recall_report",
-    ),
-    "text_quality": (
-        "token_counts", "quality_score", "nb_quality_confusion", "language_id", "doc_fingerprint",
-        "repetition_stats", "pii_scrub", "chunk_documents",
-        "source_stats", "lang_source_matrix", "top_terms_per_source",
-        "unigram_logprob", "bigram_logprob", "oov_rate",
-        "sentence_stats", "heldout_logprob", "filter_funnel",
-        "filter_funnel_examples", "sentence_dedup_stats",
-        "vocab_coverage", "idf_drift", "char_entropy", "language_id_accuracy",
-        "vocab_overlap_matrix", "quality_length_correlation",
-        "perplexity_buckets", "gopher_quality_gate", "heaps_law_fit",
-    ),
-    "sketches": ("kmv_distinct", "countmin_words"),
-    "skew_diag": ("key_skew_report",),
-    "validation": ("profile_events", "robust_outliers", "length_drift_psi",
-                   "k_anonymity", "winsorize_values", "dp_event_counts",
-                   "numeric_percentiles_profile", "corpus_card"),
-    "packing": ("pack_sequences", "packing_efficiency"),
-    "features": (
-        "hashing_tf", "hashing_tfidf", "hashing_tf_cells",
-        "hashing_tfidf_cells", "bpe_merges", "bpe_merges_local",
-        "bpe_vocab", "bpe_token_counts", "tokenizer_fertility",
-        "value_buckets", "target_encoding", "span_corruption",
-        "hash_collision_report",
-    ),
-    "sampling": (
-        "hash_split", "deterministic_sample", "stratified_sample",
-        "weighted_sample", "per_key_sample", "shuffle_shards",
-        "balance_classes", "corpus_mix", "temporal_split", "temperature_mix",
-        "dsir_weights", "unimax_allocation",
-    ),
-    "multimodal": (
-        "image_stats", "png_decode_stats", "jpeg_decode_stats", "phash_duplicates", "media_sniff", "frame_sample",
-        "audio_stats", "resize_images", "aspect_ratio_histogram",
-        "mjpeg_frame_stats", "mp4_frame_text",
-    ),
-    "streaming": (
-        "streaming_hourly_counts", "streaming_user_sessions",
-        "streaming_dedup", "streaming_interval_join",
-        "streaming_snapshot_sink", "streaming_enriched_counts",
-        "streaming_latest_events", "streaming_sliding_counts",
-        "streaming_countmin", "streaming_top_users",
-        "streaming_session_stats", "streaming_quality_gate",
-    ),
-    "sources": ("jsonl_roundtrip", "csv_roundtrip", "orc_roundtrip",
-                "schema_evolution", "csv_malformed_report",
-                "manifest_ingest", "compact_small_files"),
-}
-_FAMILY_OF = {q: fam for fam, qs in FAMILIES.items() for q in qs}
+# --full subtotals per family: the workloads module that defines each
+# query (workloads.FAMILY), grouped
+FAMILIES: dict[str, tuple[str, ...]] = {}
+for _q, _fam in workloads.FAMILY.items():
+    FAMILIES[_fam] = (*FAMILIES.get(_fam, ()), _q)
 
 
 def _time_query(spark, sf_dir: str, name: str) -> float:
@@ -373,7 +252,7 @@ def run_full(
     times = {n: min(s) for n, s in samples.items()}
     fam_totals: dict[str, float] = {}
     for name, t in times.items():
-        fam = _FAMILY_OF[name]
+        fam = workloads.FAMILY[name]
         fam_totals[fam] = round(fam_totals.get(fam, 0.0) + t, 3)
     result = {
         "metric": "full_total",
@@ -549,7 +428,8 @@ def main() -> int:
         jvm.org.apache.logging.log4j.Level.ERROR,
     )
     # one warm-up action so JVM/codegen startup isn't billed to query 1
-    workloads.q_word_count(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    warm = workloads.ALL_QUERIES["word_count"](spark, sf_dir)
+    warm.write.format("noop").mode("overwrite").save()
 
     if args.only:
         unknown = [n for n in args.only if n not in workloads.ALL_QUERIES]

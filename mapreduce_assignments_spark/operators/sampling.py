@@ -295,7 +295,7 @@ def temperature_weights(
     upsample_factor)`` where ``weight`` is the normalized temperature
     share and ``upsample_factor = weight / nat_share`` (> 1 means the
     source is oversampled relative to its natural volume). Feed the
-    weights to :func:`~..workloads.q_corpus_mix`'s applier or any
+    weights to :func:`~..workloads.sampling.q_corpus_mix`'s applier or any
     budgeted sampler.
 
     Scale shape: ONE partial-aggregated exchange (groupBy source over

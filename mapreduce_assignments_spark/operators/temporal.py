@@ -17,7 +17,7 @@ expressed as a shuffle-minimal DataFrame plan:
   ordered bounded row frame.
 
 All expressions are JVM-side (no Python in the plan); every operator
-has a DuckDB oracle in workloads.py.
+has a DuckDB oracle in the workloads package.
 """
 
 from __future__ import annotations

@@ -228,15 +228,3 @@ def test_scored_rounds_sorts_rounds_numerically(tmp_path):
     assert last == {"q": 100, "p": 9}
     assert latest == 100
     assert mod.first_scored_rounds(tmp_path) == first
-
-
-def test_families_partition_the_registry():
-    """Every registered query sits in exactly one --full family."""
-    from collections import Counter
-
-    from mapreduce_assignments_spark.workloads import ALL_QUERIES
-
-    filed = Counter(q for qs in bench.FAMILIES.values() for q in qs)
-    assert [q for q, n in filed.items() if n > 1] == []
-    assert sorted(set(ALL_QUERIES) - set(filed)) == []
-    assert sorted(set(filed) - set(ALL_QUERIES)) == []

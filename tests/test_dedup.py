@@ -551,8 +551,8 @@ def test_bloom_decontamination_no_false_negatives(spark, monkeypatch):
         + [(100, "text number 0")],  # duplicate of eval doc 0's text
         "doc_id long, text string",
     )
-    monkeypatch.setattr(workloads, "_docs", lambda spark, sf_dir: docs)
-    [row] = workloads.q_bloom_decontamination(spark, "unused").collect()
+    monkeypatch.setattr(workloads.dedup, "_docs", lambda spark, sf_dir: docs)
+    [row] = workloads.dedup.q_bloom_decontamination(spark, "unused").collect()
     assert row["false_negatives"] == 0
     # 20 eval docs + the planted duplicate are all true hits
     assert row["true_hits"] == 21

@@ -545,3 +545,24 @@ def test_lpa_communities_two_triangles_with_bridge(spark):
 
     with pytest.raises(ValueError):
         lpa_communities(nodes, rounds=0)
+
+
+@pytest.mark.parametrize("name", ["pagerank", "personalized_pagerank"])
+def test_unrolled_oracle_evaluates_each_round_once(sf_dir, name):
+    """The 8-round unrolled oracles read each round's CTE twice; if
+    DuckDB inlines them the chain is recomputed ~2^8 times (over a
+    minute at sf0.001) instead of a fraction of a second."""
+    import time
+
+    import duckdb
+
+    from mapreduce_assignments_spark import workloads
+    from mapreduce_assignments_spark.sources.tables import TABLE_NAMES
+
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    t0 = time.perf_counter()
+    rows = con.execute(workloads.ORACLE[name]).fetchall()
+    assert rows
+    assert time.perf_counter() - t0 < 10

@@ -146,8 +146,8 @@ def test_packing_efficiency_accounts_every_token(spark, monkeypatch):
         [(i, " ".join(["t"] * 100)) for i in range(50)],
         "doc_id long, text string",
     )
-    monkeypatch.setattr(workloads, "_docs", lambda spark, sf_dir: docs)
-    rows = workloads.q_packing_efficiency(spark, "unused").collect()
+    monkeypatch.setattr(workloads.packing, "_docs", lambda spark, sf_dir: docs)
+    rows = workloads.packing.q_packing_efficiency(spark, "unused").collect()
     assert sum(r["n_docs"] for r in rows) == 50
     assert sum(r["total_tokens"] for r in rows) == 5000
     for r in rows:

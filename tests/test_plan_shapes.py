@@ -94,7 +94,7 @@ def test_rrf_fusion_shares_tf_subplan(spark):
     no parquet scan and at most 8 exchanges."""
     from mapreduce_assignments_spark import workloads
 
-    plan = _plan(workloads.q_rrf_fusion(spark, SF_DIR))
+    plan = _plan(workloads.index_retrieval.q_rrf_fusion(spark, SF_DIR))
     assert _exchanges(plan) <= 8
     assert "Scan parquet" not in plan  # corpus read once, at checkpoint time
 
@@ -124,7 +124,7 @@ def test_customer_graph_broadcasts_bottom_keys(spark):
     the round-7 sf1 check measured the explode shape at ~3.6 GB of
     array copies (pagerank 48.5s vs 13.4s). Guard both properties: a
     broadcast join is present and no explode generator remains."""
-    from mapreduce_assignments_spark.workloads import (
+    from mapreduce_assignments_spark.workloads.graph import (
         _customer_graph, _kcore_graph,
     )
 

@@ -263,10 +263,10 @@ def test_corpus_mix_downsamples_toward_targets(spark, monkeypatch):
         for i in range(400)
     ] + [(10_000, "tok tok", "srcC")]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    monkeypatch.setattr(workloads, "_docs", lambda spark, sf_dir: docs)
-    monkeypatch.setattr(workloads, "_MIX_WEIGHTS", [("srcA", 0.75), ("srcB", 0.25)])
-    monkeypatch.setattr(workloads, "_MIX_BUDGET", 2_000)
-    out = {r["source"]: r for r in workloads.q_corpus_mix(spark, "unused").collect()}
+    monkeypatch.setattr(workloads.sampling, "_docs", lambda spark, sf_dir: docs)
+    monkeypatch.setattr(workloads.sampling, "_MIX_WEIGHTS", [("srcA", 0.75), ("srcB", 0.25)])
+    monkeypatch.setattr(workloads.sampling, "_MIX_BUDGET", 2_000)
+    out = {r["source"]: r for r in workloads.sampling.q_corpus_mix(spark, "unused").collect()}
     assert set(out) == {"srcA", "srcB"}  # srcC unweighted -> dropped
     # targets: A 1500 of 4000 tokens, B 500 of 4000; hash-Bernoulli
     # should land within a generous band around the target

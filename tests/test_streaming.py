@@ -432,7 +432,7 @@ def test_streaming_countmin_equals_batch_sketch(spark, tmp_path):
     sf = "/root/testdata/sf0.001"
     got = {
         (r["d"], r["bucket"]): r["cnt"]
-        for r in workloads.q_streaming_countmin(spark, sf).collect()
+        for r in workloads.streaming.q_streaming_countmin(spark, sf).collect()
     }
     batch = {
         (r["d"], r["bucket"]): r["cnt"]
@@ -565,7 +565,7 @@ def test_streaming_quality_gate_matches_batch_funnel(spark):
     finally:
         spark.streams.removeListener(starts)
     want = sorted(
-        tuple(r) for r in filter_funnel(workloads._docs(spark, SF_DIR)).collect()
+        tuple(r) for r in filter_funnel(workloads._shared._docs(spark, SF_DIR)).collect()
     )
     assert first == want
     assert second == first
@@ -576,10 +576,10 @@ def test_stage_once_writes_once_per_kind_and_sf_dir():
     from mapreduce_assignments_spark import workloads
 
     calls = []
-    a = workloads._stage_once("test-kind-a", "sf-x", calls.append)
-    assert workloads._stage_once("test-kind-a", "sf-x", calls.append) == a
-    b = workloads._stage_once("test-kind-a", "sf-y", calls.append)
-    c = workloads._stage_once("test-kind-b", "sf-x", calls.append)
+    a = workloads._shared._stage_once("test-kind-a", "sf-x", calls.append)
+    assert workloads._shared._stage_once("test-kind-a", "sf-x", calls.append) == a
+    b = workloads._shared._stage_once("test-kind-a", "sf-y", calls.append)
+    c = workloads._shared._stage_once("test-kind-b", "sf-x", calls.append)
     assert calls == [a, b, c]
     assert len({a, b, c}) == 3
 

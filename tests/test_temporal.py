@@ -1,7 +1,7 @@
 """Unit tests for the temporal/interval operators with hand-checkable
 fixtures: as-of join tie/strict semantics, range-join boundary
 inclusion, rollup grain arithmetic, sliding-window frames, and the
-anti join. (Driver-oracle coverage lives in workloads.py; these pin
+anti join. (Driver-oracle coverage lives in workloads/; these pin
 the edge cases the sf-data never exercises.)"""
 
 from __future__ import annotations

@@ -271,16 +271,16 @@ def test_oov_rate_hand_checked(spark, monkeypatch):
         ],
         "doc_id long, text string",
     )
-    monkeypatch.setattr(workloads, "_docs", lambda spark, sf_dir: docs)
+    monkeypatch.setattr(workloads.text_quality, "_docs", lambda spark, sf_dir: docs)
     monkeypatch.setattr(
-        workloads.sampling,
+        workloads.text_quality.sampling,
         "hash_split",
         lambda df, key, weights: df.withColumn(
             "split",
             F.when(F.col("doc_id") <= 2, "train").otherwise(F.lit("test")),
         ),
     )
-    [row] = workloads.q_oov_rate(spark, "unused").collect()
+    [row] = workloads.text_quality.q_oov_rate(spark, "unused").collect()
     assert (row["split"], row["n_tokens"], row["n_oov"]) == ("test", 2, 1)
     assert row["oov_rate"] == 0.5
 

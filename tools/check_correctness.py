@@ -30,10 +30,8 @@ import duckdb
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
+# perfbench/run.py reads TABLES from this module
+from mapreduce_assignments_spark.sources.tables import TABLE_NAMES as TABLES  # noqa: E402
 
 
 def _norm(v):
@@ -120,7 +118,6 @@ def main() -> int:
         )
 
     queries = entrymod.queries()
-    oracles = {k: workloads.ORACLE[k] for k in workloads.ALL_QUERIES if k in workloads.ORACLE}
     if args.all:
         queries = dict(workloads.ALL_QUERIES)
     names = args.only.split(",") if args.only else list(queries)
@@ -144,13 +141,8 @@ def main() -> int:
             n_fail += 1
             print(f"[FAIL] {name}: spark error: {rec['error']}")
             continue
-        if name not in oracles:
-            rec["status"] = "ROWS-ONLY"
-            results[name] = rec
-            print(f"[rows-only] {name}: {len(s_rows)} rows in {rec['spark_secs']}s")
-            continue
         try:
-            cur = con.execute(oracles[name])
+            cur = con.execute(workloads.ORACLE[name])
             d_cols = [d[0] for d in cur.description]
             d_rows = cur.fetchall()
         except Exception as e:  # noqa: BLE001
@@ -201,7 +193,7 @@ def main() -> int:
                     results[name] = rec
                     continue
                 issues = lint or harness_compat.pandas_canon_compare(
-                    df.toPandas(), con.execute(oracles[name]).df()
+                    df.toPandas(), con.execute(workloads.ORACLE[name]).df()
                 )
                 if issues:
                     rec["status"] = "DRIVER-CANON-FAIL"
@@ -226,9 +218,8 @@ def main() -> int:
         results[name] = rec
 
     ok = sum(1 for r in results.values() if r["status"] == "OK")
-    ronly = sum(1 for r in results.values() if r["status"] == "ROWS-ONLY")
     print(
-        f"\n{ok} exact-match, {ronly} rows-only, {n_fail} failing, "
+        f"\n{ok} exact-match, {n_fail} failing, "
         f"{len(results)} total at sf{args.sf}"
     )
     print(json.dumps({k: v["status"] for k, v in results.items()}))

@@ -41,7 +41,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("construct-sweep")
     # warm-up: JVM + parquet footer caches
-    workloads.q_word_count(spark, sf_dir).write.format("noop").mode(
+    workloads.ALL_QUERIES["word_count"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
 

@@ -9,7 +9,7 @@ registry:
     python tools/run_query.py word_count --limit 50
     python tools/run_query.py revenue_by_nation --out /tmp/rev.parquet
     python tools/run_query.py tf_idf --out /tmp/t.csv --format csv
-    python tools/run_query.py --list                    # all 90+ names
+    python tools/run_query.py --list                    # every name
 
 ``--sf-dir`` points at any directory holding the engine's parquet
 tables (default $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.001).
@@ -82,22 +82,18 @@ def main() -> int:
         df.show(args.limit, truncate=40)
         print(f"({args.query} in {time.time() - t0:.2f}s)")
     if args.oracle:
-        if args.query not in workloads.ORACLE:
-            print(f"(no oracle registered for {args.query})")
-        else:
-            import duckdb
+        import duckdb
 
-            con = duckdb.connect()
-            for t in (
-                "region nation customer supplier part orders lineitem "
-                "events documents embeddings"
-            ).split():
-                con.execute(
-                    f"CREATE OR REPLACE VIEW {t} AS "
-                    f"SELECT * FROM '{args.sf_dir}/{t}.parquet'"
-                )
-            n = con.sql(workloads.ORACLE[args.query]).df().shape[0]
-            print(f"(oracle rows: {n})")
+        from mapreduce_assignments_spark.sources.tables import TABLE_NAMES
+
+        con = duckdb.connect()
+        for t in TABLE_NAMES:
+            con.execute(
+                f"CREATE OR REPLACE VIEW {t} AS "
+                f"SELECT * FROM '{args.sf_dir}/{t}.parquet'"
+            )
+        n = con.sql(workloads.ORACLE[args.query]).df().shape[0]
+        print(f"(oracle rows: {n})")
     return 0
 
 

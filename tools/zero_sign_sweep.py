@@ -36,10 +36,7 @@ import numpy as np
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events"
-    " documents embeddings"
-).split()
+from mapreduce_assignments_spark.sources.tables import TABLE_NAMES  # noqa: E402
 
 
 def sweep(sf_dir: str) -> tuple[dict[str, list[str]], list[str]]:
@@ -48,7 +45,7 @@ def sweep(sf_dir: str) -> tuple[dict[str, list[str]], list[str]]:
     from mapreduce_assignments_spark import workloads
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM"
             f" read_parquet('{sf_dir}/{t}.parquet')"
