@@ -286,12 +286,13 @@ def run_full(
 
 # The sf0.1 headline cannot show scaling: at that size every query is
 # driver/scheduling-bound (7 of 20 run FASTER on 8 cores than 32 —
-# PERF_r15 scaling block). Scale evidence lives at sf1: the fixed list
-# below covers the operator families whose 100 TB shape actually moves
-# with input size (graph iteration loops, dedup verify joins, ANN cell
-# scoring, the calibration join). Each query runs in its OWN JVM
-# (tools/probe_one.py — round-8 lesson: successive heavy probes in a
-# shared local JVM hit heap pressure), min-of---full-runs, recorded to
+# scaling block of `git show 77a2827:PERF_r15.json`). Scale evidence
+# lives at sf1: the fixed list below covers the operator families
+# whose 100 TB shape actually moves with input size (graph iteration
+# loops, dedup verify joins, ANN cell scoring, the calibration join).
+# Each query runs in its OWN JVM (tools/probe_one.py — round-8
+# lesson: successive heavy probes in a shared local JVM hit heap
+# pressure), min-of---full-runs, recorded to
 # docs/scale_probe_sf1.json + the trend file (mode "scale-probe").
 SCALE_PROBE_QUERIES = (
     "pagerank", "kcore", "bfs_hops", "harmonic_centrality",
@@ -418,15 +419,6 @@ def main() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
     spark = get_spark("bench")
-    # Every unpartitioned window in the package runs on a bounded input
-    # (each site carries a "# bounded-input" note, linted by
-    # tests/test_window_lint.py), so WindowExec's per-run "No Partition
-    # Defined" warning is noise on a bench run's stderr.
-    jvm = spark.sparkContext._jvm
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        jvm.org.apache.logging.log4j.Level.ERROR,
-    )
     # one warm-up action so JVM/codegen startup isn't billed to query 1
     warm = workloads.ALL_QUERIES["word_count"](spark, sf_dir)
     warm.write.format("noop").mode("overwrite").save()

@@ -14,7 +14,8 @@ failed it historically (round 5):
    Spark's int64 ``5968`` and records hash_match=false.
 
 This module replicates the driver's canonicalization faithfully enough
-to catch both classes BEFORE a rotation ships:
+to keep both classes out of the frozen 50-query driver window
+(``workloads.DRIVER_WINDOW``):
 
 - :func:`lint_spark_schema` — flags driver-unsortable output columns.
 - :func:`pandas_canon` — the driver-style canonical frame (columns
@@ -24,9 +25,9 @@ to catch both classes BEFORE a rotation ships:
   pandas frames; returns a list of human-readable issues (empty =
   driver-compatible).
 
-Used by ``tools/check_correctness.py --pandas-canon`` and the pytest
-suite; run it for every query you plan to rotate INTO the 50-entry
-driver window.
+Used by ``tools/check_correctness.py --pandas-canon``, which screens
+every query it checks (the whole registry with ``--all``), and by the
+pytest suite, which gates the window's output shapes.
 """
 
 from __future__ import annotations

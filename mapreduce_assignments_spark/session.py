@@ -63,7 +63,17 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Every unpartitioned window in the package runs on a bounded input
+    # (each site carries a "# bounded-input" note, linted by
+    # tests/test_window_lint.py), so WindowExec's per-run "No Partition
+    # Defined" warning is noise on stderr.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.window.WindowExec",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
+    return spark
 
 
 # A scoped_conf block saves the values it sees on entry, so two blocks

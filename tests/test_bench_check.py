@@ -110,85 +110,6 @@ def test_git_rev_marks_uncommitted_tracked_changes(tmp_path):
     assert bench._git_rev(tmp_path) == f"{head}-dirty"
 
 
-# -- rotation-backlog drain lock (round-7 VERDICT item 5): every
-# driver round must score at least one first-time query until the
-# never-scored backlog hits zero, and docs/ROTATION_AUDIT.md must
-# carry the live count --
-
-def _never_scored_by_round():
-    """never-scored count after each recorded driver round, against
-    TODAY's registry (late registry adds inflate all rounds equally,
-    so the per-round decreases are preserved)."""
-    import re
-
-    from mapreduce_assignments_spark.workloads import ALL_QUERIES
-
-    rounds = sorted(
-        (int(re.search(r"r(\d+)", f.name).group(1)), f)
-        for f in REPO.glob("CORRECTNESS_r*.json")
-    )
-    assert rounds, "no CORRECTNESS_r*.json at repo root"
-    seen: set[str] = set()
-    out = []
-    for rnd, f in rounds:
-        window = set(json.loads(f.read_text()))
-        seen |= window
-        out.append(
-            (rnd, sum(1 for q in ALL_QUERIES if q not in seen), window)
-        )
-    return out
-
-
-def test_rotation_backlog_monotonically_decreasing():
-    """Every round that ROTATES the driver window must score at least
-    one first-time query until the never-scored backlog hits zero.
-    Optimization rounds (r15+) are contract-bound to keep the declared
-    window byte-identical — a query that disappears from the window is
-    graded as a regression regardless of speed — so a round whose
-    scored window exactly equals the previous round's is a deliberate
-    freeze, not a skipped rotation, and the backlog may stall there."""
-    counts = _never_scored_by_round()
-    for (r_prev, n_prev, w_prev), (r_cur, n_cur, w_cur) in zip(
-        counts, counts[1:]
-    ):
-        if w_cur == w_prev:  # frozen window (optimization round)
-            continue
-        assert n_cur < n_prev or n_cur == 0, (
-            f"round r{r_cur} rotated the window but scored no "
-            f"first-time query (never-scored stuck at {n_cur} since "
-            f"r{r_prev}) — rotate never-scored names into "
-            f"workloads.QUERIES"
-        )
-
-
-def test_rotation_audit_records_live_backlog():
-    """The audit doc must match the backlog AS OF the driver round it
-    recorded (r8/r9 lesson: the driver writes CORRECTNESS_r{N}.json
-    AFTER the builder's last commit, so comparing against the newest
-    file made this lint fire every round for an expected, benign race).
-    A CORRECTNESS file newer than the audit is fine; a doc that
-    disagrees about the rounds it DID see is the real staleness."""
-    import re
-
-    from mapreduce_assignments_spark.workloads import ALL_QUERIES
-
-    doc = (REPO / "docs" / "ROTATION_AUDIT.md").read_text()
-    m = re.search(r"latest driver round r(\d+)", doc)
-    assert m, "ROTATION_AUDIT.md lacks its 'latest driver round rN' stamp"
-    audit_round = int(m.group(1))
-    by_round = {r: n for r, n, _ in _never_scored_by_round()}
-    assert audit_round in by_round, (
-        f"audit claims driver round r{audit_round} but no such "
-        "CORRECTNESS file exists — rerun tools/rotation_audit.py"
-    )
-    as_of = by_round[audit_round]
-    assert f"never-scored: {as_of} of {len(ALL_QUERIES)}" in doc, (
-        f"docs/ROTATION_AUDIT.md backlog line disagrees with the "
-        f"CORRECTNESS files through its own recorded round r{audit_round} "
-        "— rerun tools/rotation_audit.py"
-    )
-
-
 def test_check_only_mode_requires_same_query_set(tmp_path):
     """ADVICE r7: two same-rev --only runs over different subsets ran
     under different load profiles — not comparable. Same subset still
@@ -205,26 +126,3 @@ def test_check_only_mode_requires_same_query_set(tmp_path):
     regs = bench.check_trend(trend)
     assert len(regs) == 1 and regs[0].startswith("q1:")
 
-
-def test_scored_rounds_sorts_rounds_numerically(tmp_path):
-    """ADVICE r8: lexicographic CORRECTNESS_r*.json ordering would
-    attribute first-scored to r10 before r9 (and r100 before r2);
-    attribution must follow the parsed round number, and last_scored
-    must track the NEWEST round."""
-    import importlib.util
-    import json as _json
-
-    spec = importlib.util.spec_from_file_location(
-        "rotation_audit", REPO / "tools" / "rotation_audit.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    (tmp_path / "CORRECTNESS_r10.json").write_text(_json.dumps({"q": {}}))
-    (tmp_path / "CORRECTNESS_r9.json").write_text(_json.dumps({"q": {}, "p": {}}))
-    (tmp_path / "CORRECTNESS_r100.json").write_text(_json.dumps({"q": {}}))
-    first, last, latest = mod.scored_rounds(tmp_path)
-    assert first == {"q": 9, "p": 9}
-    assert last == {"q": 100, "p": 9}
-    assert latest == 100
-    assert mod.first_scored_rounds(tmp_path) == first

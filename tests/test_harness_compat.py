@@ -103,17 +103,28 @@ def test_canon_compare_tolerates_timestamp_resolution():
 
 
 def test_every_window_query_schema_is_driver_sortable(spark, sf_dir):
-    """The structural gate: no query currently registered in the
-    50-entry driver window may output a driver-unsortable column.
-    This is the assertion that would have failed round 5's rotation
-    before it shipped."""
-    bad = {}
+    """The shape gate on the frozen 50-query driver window. No window
+    query may output a driver-unsortable column (ARRAY/MAP/STRUCT), and
+    the window's timestamp columns are exactly the pinned ones: a
+    timestamp renders through the session time zone and the driver runs
+    an unconfigured session, so a new one must first pass
+    ``check_correctness.py --vanilla-session --pandas-canon``."""
+    bad, timestamps = {}, {}
     for name, fn in workloads.QUERIES.items():
         df = fn(spark, sf_dir)
         issues = lint_spark_schema(df)
         if issues:
             bad[name] = issues
+        ts_cols = [
+            f.name for f in df.schema.fields
+            if f.dataType.simpleString().startswith("timestamp")
+        ]
+        if ts_cols:
+            timestamps[name] = ts_cols
     assert not bad, f"driver-unsortable window queries: {bad}"
+    assert timestamps == {"shipping_priority": ["o_orderdate"]}, (
+        f"window timestamp columns changed: {timestamps}"
+    )
 
 
 def test_canon_compare_is_bit_exact_on_zero_sign():

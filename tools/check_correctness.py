@@ -173,16 +173,15 @@ def main() -> int:
             rec["status"] = "OK"
             if args.pandas_canon:
                 # Canon-check EVERY checked query with an oracle, not
-                # just the current 50-window: rotation candidates live
-                # in EXTRA_QUERIES until rotated in, and a silently
-                # skipped canon check there let the round-5 ARRAY/dtype
+                # just the frozen 50-window: a silently skipped canon
+                # check on EXTRA_QUERIES let the round-5 ARRAY/dtype
                 # driver failures through (round-6 ADVICE, medium).
                 from mapreduce_assignments_spark import harness_compat
 
                 lint = harness_compat.lint_spark_schema(df)
                 if lint and name not in workloads.QUERIES:
                     # ARRAY/MAP/STRUCT output is legal outside the
-                    # window but can never rotate in — surface it
+                    # window but could never enter it — surface it
                     # loudly instead of printing a plain [ok].
                     rec["canon_issues"] = lint
                     print(
