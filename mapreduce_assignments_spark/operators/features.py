@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from ..functions.hashing import h60
 from .text import tokens_array
 
-__all__ = ["hashing_tf", "hashing_tfidf", "quantile_buckets", "bpe_merges", "bpe_merges_local", "bpe_encode", "bpe_token_counts", "normalize_values", "target_encoding", "span_corruption_stats"]
+__all__ = ["hashing_tf", "hashing_tfidf", "quantile_buckets", "bpe_merges", "bpe_encode", "bpe_token_counts", "normalize_values", "target_encoding", "span_corruption_stats"]
 
 
 def _bucket_counts(
@@ -171,123 +171,23 @@ def quantile_buckets(
 
 
 def bpe_merges(
-    docs: DataFrame,
-    n_merges: int = 5,
-    text_col: str = "text",
-    max_merges: int = 256,
-) -> DataFrame:
-    """Distributed BPE tokenizer training (simplified: no end-of-word
-    marker): learn the ``n_merges`` highest-count byte-pair merges from
-    the corpus, greedy left-to-right application per round — the same
-    contract as classic subword-tokenizer trainers, run as Spark
-    aggregations.
-
-    Returns the learned merge table ``(rank, lhs, rhs, pair_cnt)``.
-
-    Scale: the iteration state is the WORD-FREQUENCY vocabulary (one
-    row per distinct word — corpus volume collapses in the first
-    aggregation, exactly why real BPE trainers operate on word counts),
-    so each round is one pair-count aggregation over vocab-sized data
-    plus a narrow fold rewriting symbol arrays. The per-round argmax is
-    a driver-collected single row (the same bounded-scalar discipline
-    as pagerank's dangling mass); lineage is truncated per round with
-    localCheckpoint. Ties break (count DESC, lhs, rhs) — deterministic
-    across engines.
-
-    Scaling limit (deliberate): training is O(n_merges) SEQUENTIAL
-    Spark jobs — one pair-count aggregation + one 1-row argmax collect
-    per merge — so a production 30k-merge vocabulary would launch 30k
-    jobs back-to-back, and job-launch latency (not data volume) would
-    dominate. ``max_merges`` (default 256) makes that cliff an error
-    instead of a surprise; raise it only after batching the argmax
-    (collect the top-B non-overlapping pairs per round and apply them
-    together, the standard trainer remedy) or moving training into a
-    single applyInPandas over the word-count vocabulary, which fits in
-    one executor's memory long after the corpus doesn't.
-    """
-    from .text import word_count
-
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    if n_merges > max_merges:
-        raise ValueError(
-            f"n_merges={n_merges} exceeds max_merges={max_merges}: each "
-            "merge is a sequential Spark job (see docstring); batch the "
-            "argmax before raising the bound"
-        )
-    chars = F.expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
-    )
-    state = word_count(docs, text_col=text_col).select(
-        "word", "cnt", chars.alias("syms")
-    )
-    state = state.localCheckpoint(eager=True)
-    spark = docs.sparkSession
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        pairs_arr = F.arrays_zip(
-            F.slice("syms", 1, F.greatest(F.size("syms") - 1, F.lit(0))).alias("l"),
-            F.slice("syms", 2, F.greatest(F.size("syms") - 1, F.lit(0))).alias("r"),
-        )
-        best = (
-            state.where(F.size("syms") >= 2)
-            .select("cnt", F.explode_outer(pairs_arr).alias("p"))
-            .where(F.col("p").isNotNull())
-            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("cnt").alias("pc"))
-            .orderBy(F.desc("pc"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        bl, br, pc = best[0]["l"], best[0]["r"], int(best[0]["pc"])
-        merges.append((rank, bl, br, pc))
-        if rank == n_merges:
-            break  # the last round's fold would never be observed
-        merged = F.lit(bl + br)
-
-        def fold(acc, x):
-            hit = (
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(bl))
-                & (x == F.lit(br))
-            )
-            return F.when(
-                hit,
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
-                ),
-            ).otherwise(F.concat(acc, F.array(x)))
-
-        state = state.withColumn(
-            "syms",
-            F.aggregate("syms", F.array().cast("array<string>"), fold),
-        ).localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, pair_cnt long"
-    )
-
-
-def bpe_merges_local(
     docs: DataFrame, n_merges: int = 5, text_col: str = "text"
 ) -> DataFrame:
-    """Single-job BPE trainer — the batch-argmax remedy for
-    :func:`bpe_merges`'s O(n_merges)-sequential-jobs cliff: the
-    word-frequency vocabulary is aggregated DISTRIBUTED (corpus volume
-    collapses in that one shuffle, exactly as in the iterative
-    trainer), then the classic in-memory trainer runs over the vocab
-    inside ONE ``mapInPandas`` partition. Identical semantics and
-    tie-breaks to :func:`bpe_merges` — both are checked against the
-    same unrolled DuckDB oracle — but a 30k-merge production run is
-    one Spark job instead of 30k.
+    """BPE tokenizer training (simplified: no end-of-word marker):
+    learn the ``n_merges`` highest-count byte-pair merges from the
+    corpus, greedy left-to-right application between rounds. Returns
+    the learned merge table ``(rank, lhs, rhs, pair_cnt)``; ties break
+    (count DESC, lhs, rhs), deterministic across engines.
 
-    Scale contract: the in-memory side holds the word-count VOCABULARY
-    (one row per distinct word — tens of millions of rows at web
-    scale, single-digit GBs), not the corpus; this is the same
-    trade every production subword trainer makes. If the vocabulary
-    itself outgrows one executor, fall back to the iterative trainer
-    with a bounded merge count.
+    One Spark job: the word-frequency vocabulary is aggregated
+    distributed (corpus volume collapses in that one shuffle, which is
+    why real BPE trainers work on word counts), then the classic
+    in-memory trainer runs over the vocabulary inside ONE
+    ``mapInPandas`` partition, so the merge count costs no extra jobs.
+
+    Contract: the vocabulary (one row per distinct word, not the
+    corpus) must fit in one executor's memory, the trade every
+    production subword trainer makes.
     """
     from .text import word_count
 
@@ -311,7 +211,7 @@ def bpe_merges_local(
                     pc[(syms[i], syms[i + 1])] += c
             if not pc:
                 break
-            # same tie-break as the distributed argmax: count DESC, lhs, rhs
+            # tie-break: count DESC, lhs, rhs
             (l, r), cnt = min(
                 pc.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
             )
@@ -322,9 +222,8 @@ def bpe_merges_local(
             for idx, (syms, c) in enumerate(words):
                 out: list = []
                 for s in syms:
-                    # same greedy left-to-right fold as the distributed
-                    # F.aggregate: a freshly merged token participates
-                    # in the NEXT comparison
+                    # greedy left-to-right, as _merge_fold: a freshly
+                    # merged token participates in the NEXT comparison
                     if out and out[-1] == l and s == r:
                         out[-1] = merged
                     else:

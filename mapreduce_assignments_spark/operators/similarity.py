@@ -26,6 +26,8 @@ IVF cells) reuses the same machinery: `embedding_near_dupes`.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
@@ -537,22 +539,43 @@ def ivf_topk(
     With ``nprobe=1`` this reduces exactly to searching the query
     vector's own cell (a corpus query's top-1 centroid is its assigned
     cell)."""
-    if nprobe < 1:
-        raise ValueError("nprobe must be >= 1")
-    # no .cache(): the assignment subplan is reused via exchange reuse;
-    # an explicit cache would outlive the call (the returned DataFrame
-    # is lazy) and leak storage memory.
-    assigned = ivf_assign(embeddings, centroids)
     emb = _as_double(embeddings)
-    cen = centroids.select(
-        F.col("cell_id"), F.col("c").cast("array<double>").alias("c")
-    )
     qv = emb.join(
         queries.select("query_id"), emb["vec_id"] == F.col("query_id")
     ).select("query_id", F.col("embedding").alias("q"))
+    # no .cache(): the assignment subplan is reused via exchange reuse;
+    # an explicit cache would outlive the call (the returned DataFrame
+    # is lazy) and leak storage memory.
+    return _ivf_probe_topk(
+        qv, centroids, lambda probes: ivf_assign(embeddings, centroids), k, nprobe
+    )
+
+
+def _ivf_probe_topk(
+    queries: DataFrame,
+    centroids: DataFrame,
+    corpus: Callable[[DataFrame], DataFrame],
+    k: int,
+    nprobe: int,
+) -> DataFrame:
+    """The probe shared by :func:`ivf_topk` and :func:`probe_ivf_index`:
+    each ``(query_id, q)`` vector's ``nprobe`` max-cosine cells (ties to
+    the lower cell id), then the top-k by cosine among those cells'
+    members, the query itself excluded. ``corpus(probes)`` returns the
+    members ``(vec_id, embedding, cell)``; it is handed the probe frame
+    ``(query_id, q, qcell)`` so a cell-partitioned read can prune to
+    the probed cells."""
+    if nprobe < 1:
+        raise ValueError("nprobe must be >= 1")
+    cen = centroids.select(
+        F.col("cell_id"), F.col("c").cast("array<double>").alias("c")
+    )
+    q = queries.select(
+        F.col("query_id"), F.col("q").cast("array<double>").alias("q")
+    )
     wq = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cell_id"))
-    q_cells = (
-        qv.crossJoin(F.broadcast(cen))
+    probes = (
+        q.crossJoin(F.broadcast(cen))
         .select(
             "query_id",
             "q",
@@ -563,19 +586,18 @@ def ivf_topk(
         .where(F.col("rn") <= nprobe)
         .select("query_id", "q", F.col("cell_id").alias("qcell"))
     )
-    scored = (
-        assigned.join(
-            F.broadcast(q_cells),
-            (assigned["cell"] == F.col("qcell"))
-            & (assigned["vec_id"] != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("q"), F.col("embedding")), 6).alias("sim"),
-        )
+    cells = corpus(probes)
+    scored = cells.join(
+        F.broadcast(probes),
+        (cells["cell"] == F.col("qcell")) & (cells["vec_id"] != F.col("query_id")),
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(
+            cosine_similarity(F.col("q"), F.col("embedding").cast("array<double>")), 6
+        ).alias("sim"),
     )
-    return _topk_per_query(scored, k, gate_df=emb)
+    return _topk_per_query(scored, k, gate_df=cells)
 
 
 def embedding_near_dupes(
@@ -836,40 +858,12 @@ def probe_ivf_index(
     become a partition-pruning IN-filter on the parquet read — the
     same small-side pattern as broadcasting the centroids themselves.
     """
-    if nprobe < 1:
-        raise ValueError("nprobe must be >= 1")
-    cen = centroids.select(
-        F.col("cell_id"), F.col("c").cast("array<double>").alias("c")
-    )
-    q = queries.select(
-        F.col("query_id"), F.col("q").cast("array<double>").alias("q")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cell_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cen))
-        .select(
-            "query_id",
-            "q",
-            "cell_id",
-            F.round(cosine_similarity(F.col("c"), F.col("q")), 6).alias("csim"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "q", F.col("cell_id").alias("qcell"))
-    )
-    cells = [r["qcell"] for r in probes.select("qcell").distinct().collect()]
-    idx = spark.read.parquet(path).where(F.col("cell").isin(cells))
-    scored = idx.join(
-        F.broadcast(probes),
-        (idx["cell"] == F.col("qcell")) & (idx["vec_id"] != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            cosine_similarity(F.col("q"), F.col("embedding").cast("array<double>")), 6
-        ).alias("sim"),
-    )
-    return _topk_per_query(scored, k, gate_df=idx)
+
+    def pruned(probes: DataFrame) -> DataFrame:
+        cells = [r["qcell"] for r in probes.select("qcell").distinct().collect()]
+        return spark.read.parquet(path).where(F.col("cell").isin(cells))
+
+    return _ivf_probe_topk(queries, centroids, pruned, k, nprobe)
 
 
 def ann_recall(exact: DataFrame, approx: DataFrame) -> DataFrame:

@@ -67,12 +67,20 @@ def get_spark(
     # Every unpartitioned window in the package runs on a bounded input
     # (each site carries a "# bounded-input" note, linted by
     # tests/test_window_lint.py), so WindowExec's per-run "No Partition
-    # Defined" warning is noise on stderr.
+    # Defined" warning is noise on stderr. The session turns AQE on for
+    # batch work; stream replays inherit it, and Spark answers each one
+    # with "AQE is not supported in streaming DataFrames" (and, for a
+    # stateful replay, "Disabling AQE") — a fixed, expected fallback,
+    # also noise.
     jvm = spark.sparkContext._jvm
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+    for logger in (
         "org.apache.spark.sql.execution.window.WindowExec",
-        jvm.org.apache.logging.log4j.Level.ERROR,
-    )
+        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+        "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
+    ):
+        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+            logger, jvm.org.apache.logging.log4j.Level.ERROR
+        )
     return spark
 
 

@@ -179,6 +179,28 @@ FROM assigned GROUP BY bucket
 """
 
 
+def _bpe_fold_cte(i: int) -> str:
+    """CTE v{i}: round i's greedy left-to-right merge fold of b{i}'s
+    pair over v{i-1}'s symbol arrays, via DuckDB list_reduce."""
+    return f"""v{i} AS (
+  SELECT word, cnt,
+         list_reduce(list_transform(syms, s -> [s]),
+           (acc, x) -> CASE WHEN len(acc) >= 1 AND acc[len(acc)] = b{i}.l
+                                 AND x[1] = b{i}.r
+                       THEN acc[1:len(acc) - 1] || [b{i}.l || b{i}.r]
+                       ELSE acc || x END) AS syms
+  FROM v{i - 1}, b{i}
+)"""
+
+
+def _bpe_trained_sql(n_merges: int) -> str:
+    """The trainer oracle's WITH block plus the final round's fold
+    v{n_merges}: the corpus vocabulary encoded by the learned table."""
+    base = _bpe_oracle_sql(n_merges)
+    with_block = base[: base.rindex("\nSELECT 1 AS rank")]
+    return with_block + ",\n" + _bpe_fold_cte(n_merges)
+
+
 def _bpe_oracle_sql(n_merges: int = 5) -> str:
     """Unrolled BPE-trainer oracle: per round, the pair-count argmax
     (b{{i}}) and the greedy left-to-right merge fold (v{{i}}) via
@@ -204,17 +226,7 @@ def _bpe_oracle_sql(n_merges: int = 5) -> str:
 b{i} AS (SELECT l, r, pc FROM p{i} ORDER BY pc DESC, l, r LIMIT 1)"""
         )
         if i < n_merges:
-            parts.append(
-                f"""v{i} AS (
-  SELECT word, cnt,
-         list_reduce(list_transform(syms, s -> [s]),
-           (acc, x) -> CASE WHEN len(acc) >= 1 AND acc[len(acc)] = b{i}.l
-                                 AND x[1] = b{i}.r
-                       THEN acc[1:len(acc) - 1] || [b{i}.l || b{i}.r]
-                       ELSE acc || x END) AS syms
-  FROM v{i - 1}, b{i}
-)"""
-            )
+            parts.append(_bpe_fold_cte(i))
     selects = "\nUNION ALL\n".join(
         # CAST: DuckDB sum() yields HUGEINT, which pandas renders as
         # float64 — the driver's value hash then misses Spark's int64
@@ -226,11 +238,10 @@ b{i} AS (SELECT l, r, pc FROM p{i} ORDER BY pc DESC, l, r LIMIT 1)"""
 
 
 def q_bpe_merges(spark, sf_dir):
-    """Distributed BPE tokenizer training: the 5 highest-count merges
-    learned from the corpus vocabulary (greedy left-to-right
-    application between rounds, deterministic tie-break). The oracle
-    replays all 5 rounds in DuckDB — list_reduce reproduces the fold
-    bit-for-bit."""
+    """BPE tokenizer training: the 5 highest-count merges learned from
+    the corpus vocabulary (greedy left-to-right application between
+    rounds, deterministic tie-break). The oracle replays all 5 rounds
+    in DuckDB — list_reduce reproduces the fold bit-for-bit."""
     return features.bpe_merges(_docs(spark, sf_dir), n_merges=5)
 
 
@@ -240,23 +251,10 @@ ORACLE["bpe_merges"] = _bpe_oracle_sql(5)
 def _bpe_vocab_oracle_sql(n_merges: int = 5) -> str:
     """Extends the trainer oracle with the final round's fold (v{n})
     and the weighted subword explode — the encode step in SQL."""
-    base = _bpe_oracle_sql(n_merges)
-    with_block = base[: base.rindex("\nSELECT 1 AS rank")]
-    i = n_merges
-    final_fold = f""",
-v{i} AS (
-  SELECT word, cnt,
-         list_reduce(list_transform(syms, s -> [s]),
-           (acc, x) -> CASE WHEN len(acc) >= 1 AND acc[len(acc)] = b{i}.l
-                                 AND x[1] = b{i}.r
-                       THEN acc[1:len(acc) - 1] || [b{i}.l || b{i}.r]
-                       ELSE acc || x END) AS syms
-  FROM v{i - 1}, b{i}
-)
+    return _bpe_trained_sql(n_merges) + f"""
 SELECT s AS subword, CAST(sum(cnt) AS BIGINT) AS cnt
-FROM (SELECT cnt, unnest(syms) AS s FROM v{i})
+FROM (SELECT cnt, unnest(syms) AS s FROM v{n_merges})
 GROUP BY s"""
-    return with_block + final_fold
 
 
 def q_bpe_vocab(spark, sf_dir):
@@ -265,9 +263,7 @@ def q_bpe_vocab(spark, sf_dir):
     list crossing the driver is 5 rows — bounded by construction."""
     learned = [
         (r["lhs"], r["rhs"])
-        # r15: the single-job batch-argmax trainer — identical merge
-        # table (same unrolled oracle; probe-pinned), 2.1 -> 0.6 s
-        for r in features.bpe_merges_local(_docs(spark, sf_dir), n_merges=5)
+        for r in features.bpe_merges(_docs(spark, sf_dir), n_merges=5)
         .orderBy("rank")
         .collect()
     ]
@@ -281,20 +277,8 @@ def _bpe_token_counts_oracle_sql(n_merges: int = 5) -> str:
     """Extends the trainer oracle with the final fold and a per-doc
     tf-pair join: doc token count = Σ tf(word) * len(syms(word));
     empty docs keep a 0 row via the LEFT JOIN off documents."""
-    base = _bpe_oracle_sql(n_merges)
-    with_block = base[: base.rindex("\nSELECT 1 AS rank")]
-    i = n_merges
-    return with_block + f""",
-v{i} AS (
-  SELECT word, cnt,
-         list_reduce(list_transform(syms, s -> [s]),
-           (acc, x) -> CASE WHEN len(acc) >= 1 AND acc[len(acc)] = b{i}.l
-                                 AND x[1] = b{i}.r
-                       THEN acc[1:len(acc) - 1] || [b{i}.l || b{i}.r]
-                       ELSE acc || x END) AS syms
-  FROM v{i - 1}, b{i}
-),
-wl AS (SELECT word, len(syms) AS n_sub FROM v{i}),
+    return _bpe_trained_sql(n_merges) + f""",
+wl AS (SELECT word, len(syms) AS n_sub FROM v{n_merges}),
 tf AS (
   SELECT doc_id, t AS word, count(*) AS tf
   FROM (SELECT doc_id, unnest({_TOK}) AS t FROM documents)
@@ -316,8 +300,7 @@ def q_bpe_token_counts(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     learned = [
         (r["lhs"], r["rhs"])
-        # r15: single-job trainer, identical merge table (see q_bpe_vocab)
-        for r in features.bpe_merges_local(docs, n_merges=5).orderBy("rank").collect()
+        for r in features.bpe_merges(docs, n_merges=5).orderBy("rank").collect()
     ]
     return features.bpe_token_counts(docs, learned)
 
@@ -415,8 +398,7 @@ def q_tokenizer_fertility(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     learned = [
         (r["lhs"], r["rhs"])
-        # r15: single-job trainer, identical merge table (see q_bpe_vocab)
-        for r in features.bpe_merges_local(docs, n_merges=5).orderBy("rank").collect()
+        for r in features.bpe_merges(docs, n_merges=5).orderBy("rank").collect()
     ]
     bpe = features.bpe_token_counts(docs, learned)
     ws = docs.select(
@@ -450,12 +432,9 @@ GROUP BY 1
 
 
 def q_bpe_merges_local(spark, sf_dir):
-    """The single-job in-partition BPE trainer; checked against the
-    SAME unrolled oracle as the iterative bpe_merges — the two paths
-    must agree merge-for-merge."""
-    return features.bpe_merges_local(_docs(spark, sf_dir), n_merges=5)
+    """The same trainer as q_bpe_merges, kept under this name because
+    it is in the frozen driver window."""
+    return features.bpe_merges(_docs(spark, sf_dir), n_merges=5)
 
 
-# the single-job in-partition trainer has IDENTICAL semantics — one
-# oracle certifies both implementations agree merge-for-merge
 ORACLE["bpe_merges_local"] = ORACLE["bpe_merges"]

@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
 from ..operators import funnel, relational, skew, timeseries
+from ..plans.sql_workloads import PRICING_SUMMARY, REVENUE_BY_NATION
 from ..sources.tables import load_table, register_views
 from ._shared import _events, _ptable, _stage_once
 
@@ -22,24 +23,7 @@ def q_pricing_summary(spark, sf_dir):
     )
 
 
-ORACLE["pricing_summary"] = """
-SELECT l_returnflag, l_linestatus,
-  CAST(round(sum(CAST(l_quantity AS DECIMAL(18,6))), 6) AS DOUBLE) AS sum_qty,
-  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 6) AS DOUBLE) AS sum_base_price,
-  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))
-                 * (CAST(1 AS DECIMAL(8,6)) - CAST(l_discount AS DECIMAL(8,6)))), 6)
-       AS DOUBLE) AS sum_disc_price,
-  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))
-                 * ((CAST(1 AS DECIMAL(8,6)) - CAST(l_discount AS DECIMAL(8,6)))
-                    * (CAST(1 AS DECIMAL(8,6)) + CAST(l_tax AS DECIMAL(8,6))))), 6)
-       AS DOUBLE) AS sum_charge,
-  round(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_qty,
-  round(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE) / count(*), 6) AS avg_disc,
-  count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate < TIMESTAMP '1998-09-01'
-GROUP BY l_returnflag, l_linestatus
-"""
+ORACLE["pricing_summary"] = PRICING_SUMMARY
 
 
 def q_top_revenue_orders(spark, sf_dir):
@@ -67,19 +51,6 @@ ORDER BY revenue DESC, o_orderkey ASC
 LIMIT 10
 """
 
-_REVENUE_BY_NATION_SQL = """
-SELECT n_name, r_name,
-       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))
-                      * (CAST(1 AS DECIMAL(8,6)) - CAST(l_discount AS DECIMAL(8,6)))), 6)
-            AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders   ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation   ON c_nationkey = n_nationkey
-JOIN region   ON n_regionkey = r_regionkey
-GROUP BY n_name, r_name
-"""
-
 
 def q_revenue_by_nation(spark, sf_dir):
     return relational.revenue_by_nation(
@@ -93,7 +64,7 @@ def q_revenue_by_nation(spark, sf_dir):
     )
 
 
-ORACLE["revenue_by_nation"] = _REVENUE_BY_NATION_SQL
+ORACLE["revenue_by_nation"] = REVENUE_BY_NATION
 
 
 def q_user_sessions(spark, sf_dir):
@@ -120,10 +91,10 @@ def q_sql_revenue_by_nation(spark, sf_dir):
     engine's full SQL front-end (reference's Pig scripts analogue,
     assignment6/assignment6.md:9-55)."""
     register_views(spark, sf_dir)
-    return spark.sql(_REVENUE_BY_NATION_SQL)
+    return spark.sql(REVENUE_BY_NATION)
 
 
-ORACLE["sql_revenue_by_nation"] = _REVENUE_BY_NATION_SQL
+ORACLE["sql_revenue_by_nation"] = REVENUE_BY_NATION
 
 
 def q_event_props_stats(spark, sf_dir):
@@ -253,7 +224,7 @@ def q_revenue_share(spark, sf_dir):
 
 
 ORACLE["revenue_share"] = f"""
-WITH rev AS ({_REVENUE_BY_NATION_SQL})
+WITH rev AS ({REVENUE_BY_NATION})
 SELECT n_name, r_name, revenue,
        round(revenue / sum(revenue) OVER (), 6) AS share
 FROM rev

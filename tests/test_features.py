@@ -99,14 +99,6 @@ def test_bpe_merges_hand_computed(spark):
     assert rows == [(1, "a", "a", 3), (2, "a", "b", 2)]
     with pytest.raises(ValueError):
         bpe_merges(df, n_merges=0)
-    # each merge is a sequential Spark job: the bound makes the 30k-
-    # merge production cliff an error, not a surprise (round-5 VERDICT
-    # item 5); raisable once the argmax is batched
-    with pytest.raises(ValueError, match="max_merges"):
-        bpe_merges(df, n_merges=1000)
-    assert (
-        bpe_merges(df, n_merges=300, max_merges=300).count() == 2
-    )  # explicit opt-in raises the bound; corpus exhausts at 2 merges
 
 
 def test_bpe_merges_greedy_left_to_right(spark):
@@ -177,28 +169,42 @@ def test_normalize_values_ignores_nulls_in_stats(spark):
     assert out[4] == (None, None)
 
 
-def test_bpe_merges_local_agrees_with_iterative(spark):
-    """The single-job in-partition trainer and the iterative
-    distributed trainer are two implementations of one function —
-    they must agree merge-for-merge, tie-breaks included."""
-    from mapreduce_assignments_spark.operators.features import (
-        bpe_merges,
-        bpe_merges_local,
-    )
+def test_bpe_merges_pinned_merge_table(spark):
+    """Merge table pinned from the earlier per-merge-job distributed
+    trainer on the same input, tie-breaks included; the corpus runs
+    out of pairs after 3 of the 4 requested merges."""
+    import pytest
+
+    from mapreduce_assignments_spark.operators.features import bpe_merges
 
     df = spark.createDataFrame(
         [(1, "abab abab cd"), (2, "abab cd cd ab"), (3, "")],
         "doc_id long, text string",
     )
-    it = [(r["rank"], r["lhs"], r["rhs"], r["pair_cnt"])
-          for r in bpe_merges(df, n_merges=4).orderBy("rank").collect()]
-    lo = [(r["rank"], r["lhs"], r["rhs"], r["pair_cnt"])
-          for r in bpe_merges_local(df, n_merges=4).orderBy("rank").collect()]
-    assert it == lo and len(it) >= 2
-    import pytest
-
+    rows = [(r["rank"], r["lhs"], r["rhs"], r["pair_cnt"])
+            for r in bpe_merges(df, n_merges=4).orderBy("rank").collect()]
+    assert rows == [(1, "a", "b", 7), (2, "ab", "ab", 3), (3, "c", "d", 3)]
     with pytest.raises(ValueError):
-        bpe_merges_local(df, n_merges=0)
+        bpe_merges(df, n_merges=0)
+
+
+def test_bpe_merges_query_is_a_few_jobs(spark, sf_dir):
+    """Training is one pass over the word-count vocabulary, not a job
+    pair per merge: the registered 5-merge query stays within a few
+    jobs (the per-merge trainer ran 18)."""
+    from mapreduce_assignments_spark import workloads
+
+    sc = spark.sparkContext
+    group = "bpe-merges-jobs"
+    sc.setJobGroup(group, "bpe_merges build and write")
+    try:
+        workloads.ALL_QUERIES["bpe_merges"](spark, sf_dir).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 def test_bpe_token_counts_hand_computed(spark):

@@ -41,10 +41,10 @@ PYTHON_OK = {
     # real-container STAGING is an Arrow encode stage (the sniff /
     # header-parse itself stays JVM-side)
     "media_sniff", "aspect_ratio_histogram",
-    # in-partition BPE trainer: the whole point is ONE mapInPandas
-    # over the (memory-sized) word-count vocabulary instead of
-    # O(n_merges) sequential Spark jobs
-    "bpe_merges_local",
+    # the one BPE trainer (features.bpe_merges, registered under both
+    # names): ONE mapInPandas over the (memory-sized) word-count
+    # vocabulary instead of O(n_merges) sequential Spark jobs
+    "bpe_merges", "bpe_merges_local",
     # r16: quadratic within-cell cosine scoring runs as a per-cell
     # numpy kernel (similarity._cell_pair_sims, guide §4.2) — one
     # Arrow group map over the cell-capped member frame instead of a
