@@ -299,7 +299,8 @@ SCALE_PROBE_QUERIES = (
     "record_linkage", "record_linkage_topk", "minhash_calibration",
     "verified_near_dupes",
     "ivf_topk_trained", "mutual_knn_pairs", "embedding_near_dupes",
-    "dedup_savings",
+    "dedup_savings", "brute_force_topk", "streaming_snapshot_sink",
+    "pq_recall_report",
 )
 
 

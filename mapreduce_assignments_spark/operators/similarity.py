@@ -5,11 +5,12 @@ neighbor over ``embeddings(vec_id, embedding ARRAY<FLOAT>, label)``.
 
 - brute-force cosine top-k: the exactness baseline. Queries are
   broadcast; similarity is a JVM-side higher-order fold
-  (zip_with + aggregate), no Python in the loop; top-k per query is a
-  TWO-PHASE ranking (salted partial top-k, then a final re-rank over
-  the tiny survivor set) so corpus-scale scored rows never funnel into
-  one-partition-per-query — the DataFrame analogue of the reference's
-  mapper-local bounded priority queue + single-reducer merge
+  (zip_with + aggregate), no Python in the loop; top-k per query is
+  one ``row_number() <= k`` window, which Spark plans as a partial
+  ``WindowGroupLimit`` in every map task plus a final one after the
+  shuffle, so corpus-scale scored rows never funnel into
+  one-partition-per-query — the reference's mapper-local bounded
+  priority queue + single-reducer merge
   (assignment4/FindMaxPageRankNodes.java:52-114).
 - IVF (inverted-file) ANN: vectors are bucketed by nearest centroid;
   a query probes only its own cell — the classic recall/throughput
@@ -99,6 +100,11 @@ def _arr_lit(c: list) -> str:
     return "array(" + ", ".join(_dlit(float(x)) for x in c) + ")"
 
 
+# Rows per block of the pair kernel: bounds its accumulator at
+# block x m float64 per cell.
+_PAIR_BLOCK_ROWS = 256
+
+
 def _cell_pair_sims(members: DataFrame, directed: bool = False) -> DataFrame:
     """RAW cosine similarity for every within-cell pair, computed by a
     per-cell numpy kernel (guide §4.2 — hand whole batches to
@@ -112,8 +118,9 @@ def _cell_pair_sims(members: DataFrame, directed: bool = False) -> DataFrame:
     - the dot accumulates positions LEFT TO RIGHT — one vectorized
       outer-product step per dimension, so each pair's accumulator
       performs exactly the fold's ``((0+x0)+x1)+...`` IEEE sequence;
-    - the self-norms are ``sqrt`` of the accumulator's DIAGONAL —
-      the same operation sequence as the hoisted ``sqrt(_dot(e, e))``;
+    - the self-norms are ``sqrt`` of the same left-to-right fold of
+      squares — the operation sequence of the hoisted
+      ``sqrt(_dot(e, e))``;
     - the final ``dot / (na * nb)`` is the same two IEEE ops in the
       same order (numpy and the JVM are both FMA-free binary64 here);
     - ROUNDING STAYS JVM-SIDE: callers apply ``F.round(sim_raw, 6)``,
@@ -123,9 +130,10 @@ def _cell_pair_sims(members: DataFrame, directed: bool = False) -> DataFrame:
     (cosine is commutative at the IEEE level: the products and the
     norm multiply are single multiplications) — the shape
     ``mutual_knn_pairs``'s per-id ranking needs. Memory: the kernel
-    materializes an m×m accumulator per cell, so the documented
-    ``max_cell_size`` cap (4096 → 128 MB float64) is also the batch
-    memory ceiling.
+    scores ``_PAIR_BLOCK_ROWS`` rows at a time against the cell's
+    later members, so its working set is O(block·m) (8 MB float64 at
+    the documented ``max_cell_size`` of 4096); only the emitted
+    upper-triangle rows grow with m².
 
     Input must carry (cell, vec_id, embedding array<double>); output
     is ``(cell, id_a, id_b, sim_raw)``.
@@ -133,6 +141,7 @@ def _cell_pair_sims(members: DataFrame, directed: bool = False) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    block = _PAIR_BLOCK_ROWS
     empty = {
         "cell": pd.Series([], dtype="int32"),
         "id_a": pd.Series([], dtype="int64"),
@@ -146,15 +155,22 @@ def _cell_pair_sims(members: DataFrame, directed: bool = False) -> DataFrame:
             return pd.DataFrame(empty)
         pdf = pdf.sort_values("vec_id")
         A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64, copy=False)
-        acc = np.zeros((m, m), dtype=np.float64)
+        n2 = np.zeros(m, dtype=np.float64)
         for i in range(A.shape[1]):
-            c = A[:, i]
-            acc += c[:, None] * c[None, :]
-        n = np.sqrt(np.diag(acc))
-        sims = acc / np.outer(n, n)
-        iu, ju = np.triu_indices(m, 1)
+            n2 += A[:, i] * A[:, i]
+        n = np.sqrt(n2)
         ids = pdf["vec_id"].to_numpy()
-        id_a, id_b, s = ids[iu], ids[ju], sims[iu, ju]
+        parts = []
+        for lo in range(0, m - 1, block):
+            hi = min(lo + block, m)
+            # the upper triangle of rows lo..hi starts at column lo
+            acc = np.zeros((hi - lo, m - lo), dtype=np.float64)
+            for i in range(A.shape[1]):
+                acc += A[lo:hi, i][:, None] * A[lo:, i][None, :]
+            iu, ju = np.triu_indices(hi - lo, 1, m - lo)
+            a, b = lo + iu, lo + ju
+            parts.append((ids[a], ids[b], acc[iu, ju] / (n[a] * n[b])))
+        id_a, id_b, s = (np.concatenate(p) for p in zip(*parts))
         if directed:
             id_a, id_b = np.concatenate([id_a, id_b]), np.concatenate([id_b, id_a])
             s = np.concatenate([s, s])
@@ -195,95 +211,23 @@ def _as_double(df: DataFrame, col: str = "embedding") -> DataFrame:
     return df.withColumn(col, F.col(col).cast("array<double>"))
 
 
-# Below this much data in the largest leaf scan feeding the scored
-# set, the single-window ranking is cheaper: one task per query can
-# comfortably sort a few hundred MB, and the salt phase's extra
-# shuffle+ranking pass costs more than it saves (measured +59% on the
-# sf0.1 bench when salting unconditionally, round-3 VERDICT).
-_SALT_MIN_LEAF_BYTES = 256 << 20
+def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k of ``(query_id, neighbor_id, sim)`` rows: one
+    ``row_number()`` window per query, ordered by (sim DESC,
+    neighbor_id ASC), filtered to ``rank <= k``.
 
-
-def _max_leaf_bytes(df: DataFrame) -> int:
-    """Largest leaf-relation size estimate from JVM Catalyst stats
-    (actual file sizes for parquet scans). Pure plan inspection — no
-    job runs.
-
-    A leaf whose stats are the unknown sentinel (~Long.MaxValue, e.g.
-    LogicalRDD from ``createDataFrame`` or an uncomputed ``cache()``)
-    counts as HUGE: an unsized input might be corpus-scale, and the
-    only safe answer for an unsized plan is the scale-safe one. Sides
-    that are small by construction (broadcast query vectors, centroid
-    lists) are excluded by the CALLER gating on the corpus DataFrame
-    alone (``_topk_per_query(gate_df=...)``), not by guessing which
-    unknown leaves are benign — a cached corpus joined to a small
-    file-backed side must still read huge (round-4 ADVICE)."""
-    _UNKNOWN = 1 << 62
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        sizes = [
-            int(str(leaves.apply(i).stats().sizeInBytes()))
-            for i in range(leaves.size())
-        ]
-        return max((min(s, 1 << 60) for s in sizes), default=1 << 60)
-    except Exception:
-        return 1 << 60
-
-
-def _topk_per_query(
-    scored: DataFrame,
-    k: int,
-    salt_parts: int | None = None,
-    gate_df: DataFrame | None = None,
-) -> DataFrame:
-    """Top-k of ``(query_id, neighbor_id, sim)`` rows, cost-gated
-    between one- and two-phase ranking.
-
-    A single ``Window.partitionBy("query_id")`` ranking shuffles every
-    scored row (corpus × queries) into #queries partitions — with a
-    handful of queries that is a handful of tasks each holding
-    corpus-scale data (straggler/OOM at 100 TB). So when the plan's
-    biggest input scan is ≥ ``_SALT_MIN_LEAF_BYTES``:
-
-    phase 1: rank within ``(query_id, salt)`` where salt is a
-      deterministic hash of neighbor_id into ``salt_parts`` buckets;
-      every partition sees ~1/salt_parts of one query's rows, and any
-      global top-k row is necessarily top-k within its salt bucket;
-    phase 2: re-rank the ≤ k·salt_parts survivors per query — tiny.
-
-    Below the threshold (the whole scored set fits one task easily)
-    the salt phase is pure overhead and the naive single window runs
-    instead. Both paths order by (sim DESC, neighbor_id ASC), so the
-    output is bit-identical either way. Pass ``salt_parts`` explicitly
-    to override the gate (1 forces single-phase).
-
-    ``gate_df`` is the DataFrame whose leaf stats drive the gate —
-    callers pass the CORPUS side, because a per-query window partition
-    holds at most one corpus's worth of rows and the broadcast query
-    side never lands in it. Unsized inputs (cache/createDataFrame)
-    read huge, so an unsized corpus always takes the salted plan."""
-    if salt_parts is None:
-        salt_parts = (
-            scored.sparkSession.sparkContext.defaultParallelism
-            if _max_leaf_bytes(gate_df if gate_df is not None else scored)
-            >= _SALT_MIN_LEAF_BYTES
-            else 1
-        )
-    order = (F.desc("sim"), F.asc("neighbor_id"))
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    if salt_parts <= 1:
-        return (
-            scored.withColumn("rank", F.row_number().over(w2))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "sim")
-        )
-    w1 = Window.partitionBy("query_id", "__salt").orderBy(*order)
+    Scale: Spark plans a ``row_number() <= k`` filter as a partial
+    ``WindowGroupLimit`` before the shuffle and a final one after it,
+    so each map task keeps at most k rows per query and the exchange
+    carries k x #tasks rows per query, never the corpus-sized scored
+    set — the reference's mapper-local bounded priority queue plus
+    single-reducer merge (assignment4/FindMaxPageRankNodes.java:52-114).
+    Scale contract: ``k`` <= ``spark.sql.optimizer.windowGroupLimitThreshold``
+    (default 1000). Above it Spark plans no limit: the rows stay the
+    same, but every scored row crosses the shuffle."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
-        scored.withColumn(
-            "__salt", F.pmod(F.xxhash64("neighbor_id"), F.lit(salt_parts))
-        )
-        .withColumn("__prank", F.row_number().over(w1))
-        .where(F.col("__prank") <= k)
-        .withColumn("rank", F.row_number().over(w2))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "sim")
     )
@@ -324,7 +268,7 @@ def brute_force_topk(
             ).alias("sim"),
         )
     )
-    return _topk_per_query(scored, k, gate_df=emb.select("vec_id", "embedding"))
+    return _topk_per_query(scored, k)
 
 
 def margin_mined_pairs(
@@ -597,7 +541,7 @@ def _ivf_probe_topk(
             cosine_similarity(F.col("q"), F.col("embedding").cast("array<double>")), 6
         ).alias("sim"),
     )
-    return _topk_per_query(scored, k, gate_df=cells)
+    return _topk_per_query(scored, k)
 
 
 def embedding_near_dupes(
@@ -743,8 +687,8 @@ def lsh_topk(
       hash join — the corpus never shuffles to find its candidates;
     - exact cosine is computed in the same map stage; the only wide
       operations are a distinct over scored candidate pairs (a pair
-      colliding in several bands must score once) and the two-phase
-      salted top-k — both over the candidate set, which banding has
+      colliding in several bands must score once) and the per-query
+      top-k window — both over the candidate set, which banding has
       already cut by ~bucket-count× relative to brute force.
 
     Exact-on-candidates: any returned (query, neighbor) carries the
@@ -774,7 +718,7 @@ def lsh_topk(
         )
         .distinct()
     )
-    return _topk_per_query(scored, k, gate_df=emb)
+    return _topk_per_query(scored, k)
 
 
 def quantize_embeddings(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -1193,8 +1137,8 @@ def knn_label_accuracy(
     n_queries, n_correct, accuracy)``.
 
     Scale: the probe set is id-bounded (``vec_id < n_queries``) and
-    broadcasts; the corpus scans ONCE through the cost-gated top-k
-    helper (:func:`_topk_per_query` salts when the corpus is big), so
+    broadcasts; the corpus scans ONCE through the top-k helper
+    (:func:`_topk_per_query`, map-side partial limit), so
     the eval is a broadcast-probe pass, not an all-pairs join — eval
     cost grows with corpus size × probe count, never corpus².
     """
@@ -1724,7 +1668,7 @@ def matryoshka_recall(
     are plain slices of the same row, so evaluating |dims| prefixes
     costs |dims| extra fused expressions, not |dims| extra scans.
     The stacked (dim, query) rankings ride :func:`_topk_per_query`'s
-    cost-gated one-/two-phase top-k via a struct-valued query key
+    map-side-limited top-k window via a struct-valued query key
     (dim 0 = the full-dim ground truth), and the final recall join is
     over k-bounded survivor sets. Sims are rounded to 6 dp BEFORE
     ranking with an id tiebreak — the brute_force_topk parity
@@ -1769,7 +1713,7 @@ def matryoshka_recall(
         F.col("v.sim").alias("sim"),
     )
     topk = (
-        _topk_per_query(stacked, k, gate_df=emb)
+        _topk_per_query(stacked, k)
         .select(
             F.col("query_id.dim").alias("dim"),
             F.col("query_id.q").alias("query_id"),

@@ -59,6 +59,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # minhash's 32-element signature array and the IVF trainer's
+        # centroid expressions (over 100 fields) pass the default 25,
+        # and Spark warns on stderr when it truncates a plan string
+        .config("spark.sql.debug.maxToStringFields", "256")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -51,83 +51,40 @@ def test_brute_force_topk_matches_numpy(emb):
             assert s == pytest.approx(ws, abs=2e-6)
 
 
-def test_topk_salted_equals_single_phase(emb, tmp_path):
-    """The cost gate switches plans, never results: forcing the
-    two-phase salted ranking must reproduce the single-window ranking
-    bit-for-bit (including rank order under sim ties)."""
-    from mapreduce_assignments_spark.operators.similarity import (
-        _max_leaf_bytes,
-        _topk_per_query,
-        _as_double,
-        cosine_similarity,
-    )
-    import pyspark.sql.functions as F
-
-    df, _ = emb
-    q = df.selectExpr("vec_id as query_id", "embedding as q").where("vec_id < 3")
-    scored = (
-        _as_double(df)
-        .crossJoin(F.broadcast(q.withColumn("q", F.col("q").cast("array<double>"))))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("q"), F.col("embedding")), 6).alias("sim"),
-        )
-    )
-    single = _topk_per_query(scored, 5, salt_parts=1).collect()
-    salted = _topk_per_query(scored, 5, salt_parts=8).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted(single, key=key) == sorted(salted, key=key)
-    # createDataFrame input (LogicalRDD, no stats) → gate reports huge,
-    # i.e. errs toward the scale-safe salted plan
-    assert _max_leaf_bytes(scored) >= 256 << 20
-    # parquet-backed input (written to tmp_path so the gate sees real
-    # file-scan stats): accurate small size → single-phase plan
-    df.write.mode("overwrite").parquet(str(tmp_path / "emb.parquet"))
+def test_topk_window_limits_each_map_task(emb, tmp_path):
+    """Top-k per query is one row_number window, which Spark plans as
+    a partial WindowGroupLimit below the shuffle (at most k rows per
+    query leave each map task) and a final one above it — for a
+    file-backed corpus and for an unsized createDataFrame corpus
+    alike. Rows equal a pure-Python top-k either way."""
+    df, vecs = emb
+    df.write.parquet(str(tmp_path / "emb.parquet"))
     pq = df.sparkSession.read.parquet(str(tmp_path / "emb.parquet"))
-    pq_scored = (
-        _as_double(pq)
-        .crossJoin(F.broadcast(q.withColumn("q", F.col("q").cast("array<double>"))))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("q"), F.col("embedding")), 6).alias("sim"),
+    for corpus in (pq, df):
+        queries = corpus.selectExpr(
+            "vec_id as query_id", "embedding as q"
+        ).where("vec_id < 3")
+        out = brute_force_topk(corpus, queries, k=5)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        nodes = [
+            "Final" if "Final" in line else "Partial" if "Partial" in line
+            else "Exchange"
+            for line in plan.splitlines()
+            if "WindowGroupLimit" in line or "Exchange hashpartitioning" in line
+        ]
+        assert nodes == ["Final", "Exchange", "Partial"], plan
+        got = sorted(
+            (r["query_id"], r["rank"], r["neighbor_id"], r["sim"])
+            for r in out.collect()
         )
-    )
-    # the gate runs on the CORPUS side (gate_df), whose file-backed
-    # stats are accurate and small → single-phase plan; the scored
-    # join itself still carries the unsized broadcast query leaf
-    assert _max_leaf_bytes(pq) < 256 << 20
-    plan = (
-        _topk_per_query(pq_scored, 5, gate_df=pq)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "__salt" not in plan
-    # public API, all-file-backed: small corpus stays single-phase
-    plan_pub = (
-        brute_force_topk(pq, pq.selectExpr(
-            "vec_id as query_id", "embedding as q").limit(3), k=5)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "__salt" not in plan_pub
-    # the round-4 ADVICE hazard: an UNSIZED corpus (cache /
-    # createDataFrame) joined to a small file-backed side must still
-    # read huge — any unknown-stat leaf is treated as corpus-scale,
-    # never masked by a sized sibling leaf
-    mixed = _as_double(df).crossJoin(F.broadcast(pq.selectExpr(
-        "vec_id as query_id", "cast(embedding as array<double>) as q"
-    ).limit(3)))
-    assert _max_leaf_bytes(mixed) >= 256 << 20
-    # and the public API gates on the CORPUS side, so the small
-    # file-backed query table cannot flip a big corpus to single-phase:
-    # with an unsized corpus the salted plan must appear
-    plan_mixed = (
-        brute_force_topk(df, pq.selectExpr(
-            "vec_id as query_id", "embedding as q").limit(3), k=5)
-        ._jdf.queryExecution().optimizedPlan().toString()
-    )
-    assert "__salt" in plan_mixed
+        want = [
+            (qid, rank, n, s)
+            for qid in range(3)
+            for rank, (n, s) in enumerate(numpy_topk(vecs, qid, 5), 1)
+        ]
+        assert [g[:3] for g in got] == [w[:3] for w in want]
+        for g, w in zip(got, want):
+            assert g[3] == pytest.approx(w[3], abs=2e-6)
 
 
 def test_brute_force_finds_planted_near_dup(emb):
@@ -1115,3 +1072,29 @@ def test_cell_pair_sims_kernel_bit_identical_to_fold(spark):
         for r in _cell_pair_sims(members, directed=True).collect()
     }
     assert kernel == fold and len(kernel) > 0
+
+
+def test_cell_pair_sims_row_blocks_bit_identical(spark, monkeypatch):
+    """Cells larger than the kernel's row block (m = 20 > 7, last
+    block partial) give the same pairs and bit-identical sims as one
+    block holding the whole cell, which the fold test above pins."""
+    from mapreduce_assignments_spark.operators import similarity
+
+    rows = [
+        (i, [((i * 29 + j * 13) % 101) / 10.1 - 5.0 for j in range(16)],
+         int(i % 3))
+        for i in range(60)
+    ]
+    members = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, cell int"
+    ).select("cell", "vec_id", "embedding")
+
+    def sims():
+        return {
+            (r["id_a"], r["id_b"]): float(r["sim_raw"]).hex()
+            for r in similarity._cell_pair_sims(members, directed=True).collect()
+        }
+
+    whole = sims()
+    monkeypatch.setattr(similarity, "_PAIR_BLOCK_ROWS", 7)
+    assert sims() == whole and len(whole) == 3 * 20 * 19
