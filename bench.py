@@ -79,6 +79,13 @@ for _q, _fam in workloads.FAMILY.items():
     FAMILIES[_fam] = (*FAMILIES.get(_fam, ()), _q)
 
 
+def _warm_up(spark, sf_dir: str) -> None:
+    """One warm-up action so JVM/codegen startup and the parquet
+    footer caches aren't billed to the first timed query."""
+    warm = workloads.ALL_QUERIES["word_count"](spark, sf_dir)
+    warm.write.format("noop").mode("overwrite").save()
+
+
 def _time_query(spark, sf_dir: str, name: str) -> float:
     t0 = time.time()
     df = workloads.ALL_QUERIES[name](spark, sf_dir)
@@ -420,9 +427,7 @@ def main() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
     spark = get_spark("bench")
-    # one warm-up action so JVM/codegen startup isn't billed to query 1
-    warm = workloads.ALL_QUERIES["word_count"](spark, sf_dir)
-    warm.write.format("noop").mode("overwrite").save()
+    _warm_up(spark, sf_dir)
 
     if args.only:
         unknown = [n for n in args.only if n not in workloads.ALL_QUERIES]

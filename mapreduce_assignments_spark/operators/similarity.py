@@ -234,12 +234,14 @@ def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
 
 
 def brute_force_topk(
-    embeddings: DataFrame, queries: DataFrame, k: int = 10, include_self: bool = False
+    embeddings: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
     """Exact cosine top-k: ``(query_id, neighbor_id, rank, sim)``.
 
     ``queries`` has (query_id, q ARRAY<FLOAT/DOUBLE>); it is broadcast
-    so the corpus scans once with no shuffle before the top-k.
+    so the corpus scans once with no shuffle before the top-k. A
+    corpus vector whose ``vec_id`` equals the ``query_id`` is never
+    its own neighbor.
     """
     emb = _as_double(embeddings).select(
         "vec_id", "embedding",
@@ -256,7 +258,7 @@ def brute_force_topk(
     )
     scored = (
         emb.crossJoin(F.broadcast(q))
-        .where(F.lit(True) if include_self else F.col("vec_id") != F.col("query_id"))
+        .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
@@ -406,21 +408,22 @@ def ivf_train(
     return cen
 
 
-def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Assign each vector to its max-cosine centroid:
-    ``(vec_id, embedding, cell)``; ties break to the lowest cell id.
+def _centroid_cosines(
+    embeddings: DataFrame, centroids: DataFrame, min_cells: int = 1
+) -> tuple[DataFrame, Column | None]:
+    """The per-row cosines to every centroid, for an argmax over
+    cells: ``(with_norm, cands)``. ``with_norm`` is ``(vec_id,
+    embedding ARRAY<DOUBLE>, __n)`` with ``__n`` = ||embedding||;
+    ``cands`` is an array of one ``(csim, nid)`` struct per centroid,
+    ``csim`` the cosine rounded to 6 dp and ``nid`` = -cell_id, so
+    struct ordering gives max csim with the lowest-cell-id tiebreak.
+    ``cands`` is None when there are fewer than ``min_cells``
+    centroids.
 
-    ZERO-shuffle plan: the centroids are collected to the driver
-    (k × dim doubles — the same small-side contract as broadcasting
-    them) and inlined as literal arrays, so assignment is a narrow
-    per-row argmax fold over k cosine expressions. The round-4 shape —
-    crossJoin(broadcast(cen)) then ``row_number() OVER (PARTITION BY
-    vec_id)`` — shuffled the corpus k-fold wide on vec_id just to pick
-    each row's max; at 100 TB that exchange dwarfs the whole pipeline,
-    and locally its removal halved every IVF query. The eager collect
-    is bounded and matches :func:`ivf_train`'s per-iteration pattern
-    (reference analogue: the side-file centroid state,
-    RunPageRankBasic.java:304-318)."""
+    The centroids are collected to the driver (k × dim doubles — the
+    same small-side contract as broadcasting them) and inlined as
+    literal arrays with their norms as Python constants, so the argmax
+    is a narrow per-row fold: no shuffle."""
     import math
 
     emb = _as_double(embeddings)
@@ -428,10 +431,13 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
         (int(r["cell_id"]), [float(x) for x in r["c"]])
         for r in centroids.select("cell_id", "c").collect()
     )
-    if not rows:
-        return emb.select(
-            "vec_id", "embedding", F.lit(None).cast("int").alias("cell")
-        ).where(F.lit(False))
+    # ||v|| computed once per row in its own projection (k cosines
+    # share it)
+    with_norm = emb.select(
+        "vec_id", "embedding", F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("__n")
+    )
+    if len(rows) < min_cells:
+        return with_norm, None
 
     def norm(c: list[float]) -> float:
         # left-to-right accumulation — bit-identical to the
@@ -441,18 +447,11 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
             s += x * x
         return math.sqrt(s)
 
-    # ||v|| computed once per row in its own projection (k cosines
-    # share it); centroid norms are Python constants. The argmax is
-    # array_max over (csim, -cell_id) structs — struct ordering gives
-    # max csim with lowest-cell-id tiebreak, and each cosine
-    # expression appears exactly ONCE (a nested when()-chain would
-    # duplicate the whole accumulated tree at every level — measured
-    # 5x slower at k=8).
-    with_norm = emb.select(
-        "vec_id", "embedding", F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("__n")
-    )
-    # one SQL parse instead of k x dim py4j literal nodes (same tree,
-    # bit-identity pytest-pinned against the Column form)
+    # Each cosine expression appears exactly ONCE in the struct array
+    # (a nested when()-chain would duplicate the whole accumulated tree
+    # at every level — measured 5x slower at k=8); one SQL parse
+    # instead of k x dim py4j literal nodes (same tree, bit-identity
+    # pytest-pinned against the Column form)
     cands = F.expr(
         "array(" + ", ".join(
             f"struct(round({_dot_sql(_arr_lit(c), 'embedding')}"
@@ -461,6 +460,27 @@ def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
             for cell_id, c in rows
         ) + ")"
     )
+    return with_norm, cands
+
+
+def ivf_assign(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Assign each vector to its max-cosine centroid:
+    ``(vec_id, embedding, cell)``; ties break to the lowest cell id.
+
+    ZERO-shuffle plan: assignment is a narrow per-row argmax over the
+    k centroid cosines of :func:`_centroid_cosines`. The round-4 shape —
+    crossJoin(broadcast(cen)) then ``row_number() OVER (PARTITION BY
+    vec_id)`` — shuffled the corpus k-fold wide on vec_id just to pick
+    each row's max; at 100 TB that exchange dwarfs the whole pipeline,
+    and locally its removal halved every IVF query. The eager collect
+    is bounded and matches :func:`ivf_train`'s per-iteration pattern
+    (reference analogue: the side-file centroid state,
+    RunPageRankBasic.java:304-318)."""
+    with_norm, cands = _centroid_cosines(embeddings, centroids)
+    if cands is None:
+        return with_norm.select(
+            "vec_id", "embedding", F.lit(None).cast("int").alias("cell")
+        ).where(F.lit(False))
     return with_norm.select(
         "vec_id", "embedding", (-F.array_max(cands)["nid"]).cast("int").alias("cell")
     )
@@ -721,6 +741,36 @@ def lsh_topk(
     return _topk_per_query(scored, k)
 
 
+def _quant_bounds(emb: DataFrame, vec_col: str) -> Column:
+    """The int8 quantizer's per-dimension global ``[min, max]``, as a
+    literal array of ``(lo, hi)`` structs: one ``(pos)`` aggregation
+    collected to the driver (2·dim doubles, the textbook small side)."""
+    # outer: avoids the inferred size()>0 filter re-casting the array
+    # at the scan (operators/text.py note); vectors are non-empty.
+    dims = sorted(
+        emb.select(F.posexplode_outer(vec_col).alias("pos", "v"))
+        .groupBy("pos")
+        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
+        .collect(),
+        key=lambda r: r["pos"],
+    )
+    return F.zip_with(
+        F.array(*[F.lit(float(r["mn"])) for r in dims]),
+        F.array(*[F.lit(float(r["mx"])) for r in dims]),
+        lambda lo, hi: F.struct(lo.alias("lo"), hi.alias("hi")),
+    )
+
+
+def _quant_level(v: Column, b: Column) -> Column:
+    """The quantization step of ``v`` within bounds ``b``: level
+    ``floor((v - lo)/(hi - lo)·255 + 0.5)`` in [0, 255], computed in
+    float64 (the int8 code is level - 128). floor(x + 0.5) rather than
+    round() so Spark and DuckDB (whose round() tie-breaks can differ)
+    agree bit-for-bit. Undefined for a constant dimension (hi = lo);
+    callers special-case it."""
+    return F.floor((v - b["lo"]) / (b["hi"] - b["lo"]) * 255 + 0.5)
+
+
 def quantize_embeddings(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Scalar int8 quantization against per-dimension global [min, max]:
     ``(vec_id, codes ARRAY<INT> (values in [-128, 127]), norm DOUBLE)``.
@@ -744,23 +794,11 @@ def quantize_embeddings(embeddings: DataFrame, vec_col: str = "embedding") -> Da
     agree bit-for-bit; a constant dimension (mx = mn) quantizes to 0.
     """
     emb = _as_double(embeddings, vec_col)
-    # outer: avoids the inferred size()>0 filter re-casting the array
-    # at the scan (operators/text.py note); vectors are non-empty.
-    dims = (
-        emb.select(F.posexplode_outer(vec_col).alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-        .collect()
-    )
-    mn = [r["mn"] for r in sorted(dims, key=lambda r: r["pos"])]
-    mx = [r["mx"] for r in sorted(dims, key=lambda r: r["pos"])]
-    mn_arr = F.array(*[F.lit(float(x)) for x in mn])
-    mx_arr = F.array(*[F.lit(float(x)) for x in mx])
     code = F.zip_with(
         F.col(vec_col),
-        F.zip_with(mn_arr, mx_arr, lambda lo, hi: F.struct(lo.alias("lo"), hi.alias("hi"))),
+        _quant_bounds(emb, vec_col),
         lambda v, b: F.when(b["hi"] == b["lo"], F.lit(0)).otherwise(
-            F.floor((v - b["lo"]) / (b["hi"] - b["lo"]) * 255 + 0.5).cast("int") - 128
+            _quant_level(v, b).cast("int") - 128
         ),
     )
     return emb.select(
@@ -1289,27 +1327,11 @@ def quantization_error(
     engine-exact.
     """
     emb = _as_double(embeddings)
-    dims = (
-        emb.select(F.posexplode_outer("embedding").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-        .collect()
-    )
-    mn = [r["mn"] for r in sorted(dims, key=lambda r: r["pos"])]
-    mx = [r["mx"] for r in sorted(dims, key=lambda r: r["pos"])]
-    mn_arr = F.array(*[F.lit(float(x)) for x in mn])
-    mx_arr = F.array(*[F.lit(float(x)) for x in mx])
-    bounds = F.zip_with(
-        mn_arr, mx_arr, lambda lo, hi: F.struct(lo.alias("lo"), hi.alias("hi"))
-    )
     deq = F.zip_with(
         F.col("embedding"),
-        bounds,
+        _quant_bounds(emb, "embedding"),
         lambda v, b: F.when(b["hi"] == b["lo"], b["lo"]).otherwise(
-            b["lo"]
-            + F.floor((v - b["lo"]) / (b["hi"] - b["lo"]) * 255 + 0.5)
-            / F.lit(255.0)
-            * (b["hi"] - b["lo"])
+            b["lo"] + _quant_level(v, b) / F.lit(255.0) * (b["hi"] - b["lo"])
         ),
     )
     cos = F.round(cosine_similarity(F.col("embedding"), deq), 6)
@@ -1583,51 +1605,19 @@ def ivf_silhouette(embeddings: DataFrame, centroids: DataFrame) -> DataFrame:
     arbitrary (expected on unclustered data); negative = vectors
     sit closer to a neighboring centroid than their own.
 
-    ONE narrow scan: all k cosines are a literal fold per row (the
-    ivf_assign zero-shuffle contract), own/second-best come from one
-    sorted struct array, and the per-cell mean aggregates
+    ONE narrow scan: the k cosines are :func:`ivf_assign`'s own
+    candidate array (one shared literal fold per row, zero shuffles),
+    own/second-best come from sorting it, and the per-cell mean aggregates
     fixed-point LONG summands (floor(s·2²⁰) — the order-independent
     discipline), so the report is engine-exact."""
-    import math
-
-    emb = _as_double(embeddings)
-    rows = sorted(
-        (int(r["cell_id"]), [float(x) for x in r["c"]])
-        for r in centroids.select("cell_id", "c").collect()
-    )
-    spark = embeddings.sparkSession
-    if len(rows) < 2:
-        return spark.createDataFrame(
+    with_norm, cands = _centroid_cosines(embeddings, centroids, min_cells=2)
+    if cands is None:
+        return embeddings.sparkSession.createDataFrame(
             [], "cell int, n_vecs long, mean_silhouette double"
         )
-
-    def norm(c: list[float]) -> float:
-        s = 0.0
-        for x in c:
-            s += x * x
-        return math.sqrt(s)
-
-    with_norm = emb.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("__n"),
-    )
-    cands = F.array(
-        *[
-            F.struct(
-                F.round(
-                    _dot(F.array(*[F.lit(x) for x in c]), F.col("embedding"))
-                    / (F.lit(norm(c)) * F.col("__n")),
-                    6,
-                ).alias("cs"),
-                F.lit(-cell_id).alias("nid"),
-            )
-            for cell_id, c in rows
-        ]
-    )
     ranked = F.sort_array(cands, asc=False)
-    a = 1.0 - ranked[0]["cs"]
-    b = 1.0 - ranked[1]["cs"]
+    a = 1.0 - ranked[0]["csim"]
+    b = 1.0 - ranked[1]["csim"]
     s = F.when(F.greatest(a, b) == 0.0, F.lit(0.0)).otherwise(
         (b - a) / F.greatest(a, b)
     )

@@ -35,6 +35,10 @@ __all__ = [
     "URL_REGEX",
     "sentence_stats",
     "heldout_logprob",
+    "FUNNEL_RULES",
+    "funnel_flags",
+    "funnel_counts",
+    "funnel_stages",
     "filter_funnel",
     "filter_funnel_examples",
     "sentence_dedup_stats",
@@ -594,26 +598,19 @@ def heldout_logprob(
     )
 
 
-def filter_funnel(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Gopher-style sequential quality-filter funnel: each rule sees
-    only the survivors of the previous ones, and the report shows
-    where documents die — ``(stage, rule, n_in, n_rejected, n_out)``,
-    one row per rule in application order.
+FUNNEL_RULES = ("min_tokens", "mean_token_len", "uppercase_ratio")
 
-    Rules (all integer-arithmetic, so the funnel is engine-exact with
-    no float boundary cases):
+
+def funnel_flags(text_col: str = "text") -> tuple[Column, Column, Column]:
+    """The quality funnel's three rules as per-row booleans, in
+    application order (names in ``FUNNEL_RULES``). All integer
+    arithmetic, so the funnel is engine-exact with no float boundary
+    cases:
       1. ``min_tokens``      — at least 5 whitespace tokens
       2. ``mean_token_len``  — mean token length in [2, 12]
          (as ``2·n_tok ≤ Σlen ≤ 12·n_tok``)
       3. ``uppercase_ratio`` — uppercase chars ≤ 30% of all chars
          (as ``10·upper ≤ 3·chars``)
-
-    Scale: ONE pass — per-row rule booleans are computed map-side and
-    reduced into a single wide aggregate row (conditional sums), then
-    unpivoted driver-free via ``inline``; nothing row-sized ever
-    reaches the exchange. Adding a rule is adding a boolean column.
     """
     toks = tokens_array(text_col)
     n_tok = F.size(toks)
@@ -627,35 +624,55 @@ def filter_funnel(
     r1 = n_tok >= 5
     r2 = (sum_len >= 2 * n_tok) & (sum_len <= 12 * n_tok)
     r3 = F.lit(10) * upper <= F.lit(3) * n_chars
-    flags = docs.select(
-        r1.alias("r1"), r2.alias("r2"), r3.alias("r3")
-    )
-    one = flags.agg(
+    return r1, r2, r3
+
+
+def funnel_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """One row ``(n0, f1, f2, f3)``: the documents in, and how many
+    each rule of :func:`funnel_flags` rejects among the survivors of
+    the rules before it. Each document counts on its own, so the
+    counts of disjoint inputs add up (the streaming gate sums them
+    per micro-batch)."""
+    r1, r2, r3 = funnel_flags(text_col)
+    return docs.agg(
         F.count("*").alias("n0"),
-        F.sum(F.when(~F.col("r1"), 1).otherwise(0)).alias("f1"),
-        F.sum(F.when(F.col("r1") & ~F.col("r2"), 1).otherwise(0)).alias("f2"),
-        F.sum(
-            F.when(F.col("r1") & F.col("r2") & ~F.col("r3"), 1).otherwise(0)
-        ).alias("f3"),
+        F.sum(F.when(~r1, 1).otherwise(0)).alias("f1"),
+        F.sum(F.when(r1 & ~r2, 1).otherwise(0)).alias("f2"),
+        F.sum(F.when(r1 & r2 & ~r3, 1).otherwise(0)).alias("f3"),
     )
-    stage = lambda i, rule, n_in, f: F.struct(  # noqa: E731
-        F.lit(i).alias("stage"),
-        F.lit(rule).alias("rule"),
-        n_in.alias("n_in"),
-        f.alias("n_rejected"),
-        (n_in - f).alias("n_out"),
-    )
-    n1 = F.col("n0") - F.col("f1")
-    n2 = n1 - F.col("f2")
-    return one.select(
-        F.inline(
-            F.array(
-                stage(1, "min_tokens", F.col("n0"), F.col("f1")),
-                stage(2, "mean_token_len", n1, F.col("f2")),
-                stage(3, "uppercase_ratio", n2, F.col("f3")),
-            )
-        )
-    )
+
+
+def funnel_stages(counts: DataFrame) -> DataFrame:
+    """Unpivot a :func:`funnel_counts` row into the funnel report:
+    ``(stage, rule, n_in, n_rejected, n_out)``, one row per rule."""
+    n_in, rows = F.col("n0"), []
+    for i, rule in enumerate(FUNNEL_RULES, 1):
+        f = F.col(f"f{i}")
+        rows.append(F.struct(
+            F.lit(i).alias("stage"),
+            F.lit(rule).alias("rule"),
+            n_in.alias("n_in"),
+            f.alias("n_rejected"),
+            (n_in - f).alias("n_out"),
+        ))
+        n_in = n_in - f
+    return counts.select(F.inline(F.array(*rows)))
+
+
+def filter_funnel(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Gopher-style sequential quality-filter funnel: each rule sees
+    only the survivors of the previous ones, and the report shows
+    where documents die — ``(stage, rule, n_in, n_rejected, n_out)``,
+    one row per rule in application order (rules: :func:`funnel_flags`).
+
+    Scale: ONE pass — per-row rule booleans are computed map-side and
+    reduced into a single wide aggregate row (conditional sums), then
+    unpivoted driver-free via ``inline``; nothing row-sized ever
+    reaches the exchange. Adding a rule is adding a boolean column.
+    """
+    return funnel_stages(funnel_counts(docs, text_col))
 
 
 def filter_funnel_examples(
@@ -673,18 +690,7 @@ def filter_funnel_examples(
     collect_list — the example arrays are k-bounded by construction,
     never a full failing set materialized per group.
     """
-    toks = tokens_array(text_col)
-    n_tok = F.size(toks)
-    sum_len = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    n_chars = F.length(F.col(text_col))
-    upper = F.length(F.regexp_replace(F.col(text_col), "[^A-Z]", ""))
-    r1 = n_tok >= 5
-    r2 = (sum_len >= 2 * n_tok) & (sum_len <= 12 * n_tok)
-    r3 = F.lit(10) * upper <= F.lit(3) * n_chars
+    r1, r2, r3 = funnel_flags(text_col)
     death = (
         F.when(~r1, F.lit(1)).when(~r2, F.lit(2)).when(~r3, F.lit(3))
     )
@@ -695,9 +701,7 @@ def filter_funnel_examples(
     ).where(F.col("stage").isNotNull())
     w = Window.partitionBy("stage").orderBy("doc_id")
     rules = F.create_map(
-        F.lit(1), F.lit("min_tokens"),
-        F.lit(2), F.lit("mean_token_len"),
-        F.lit(3), F.lit("uppercase_ratio"),
+        *[F.lit(x) for i, rule in enumerate(FUNNEL_RULES, 1) for x in (i, rule)]
     )
     counts = dead.groupBy("stage").agg(F.count("*").alias("n_rejected"))
     examples = (

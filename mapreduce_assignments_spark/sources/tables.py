@@ -106,19 +106,25 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     return df
 
 
-def ensure_min_parallelism(df: DataFrame, factor: float = 0.5) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Guard a ZERO-SHUFFLE (narrow-map) pipeline against a
     low-partition input layout: a narrow map inherits the scan's
     partitioning, so a one-file table runs the whole operator on one
-    task no matter how many cores exist (measured: random_projection
+    task no matter how many cores exist (the testdata documents and
+    embeddings parquet is ONE row group; measured: random_projection
     8.6x wall for 10x data at sf1 purely because the upscaled table
-    was one file — SCALE.md). Repartition round-robin to
-    ``factor * defaultParallelism`` ONLY when the input is below it;
+    was one file — SCALE.md). When the input has fewer than
+    ``max(2, defaultParallelism // 2)`` partitions, one round-robin
+    repartition to ``defaultParallelism`` unlocks every core;
     already-split inputs (every real 100 TB dataset) pass through with
     no exchange. Row values are untouched, so set-semantics outputs
     (and their oracles) are unaffected.
+
+    The probe is cheap to repeat on a ``load_table`` frame: the loader
+    returns one memoized DataFrame per table, whose JVM ``rdd()`` is
+    computed once.
     """
-    target = max(1, int(df.sparkSession.sparkContext.defaultParallelism * factor))
+    target = df.sparkSession.sparkContext.defaultParallelism
     # Static partition count, read JVM-side from the physical plan (the
     # Python ``df.rdd`` property would additionally build a
     # javaToPython conversion stage). Under AQE a plan with an exchange
@@ -132,7 +138,7 @@ def ensure_min_parallelism(df: DataFrame, factor: float = 0.5) -> DataFrame:
         n_parts = plan.executedPlan().outputPartitioning().numPartitions()
     else:
         n_parts = df._jdf.rdd().getNumPartitions()
-    if n_parts < target:
+    if n_parts < max(2, target // 2):
         return df.repartition(target)
     return df
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.relational import session_stats
 from ..session import scoped_conf
 
 __all__ = [
@@ -482,33 +483,15 @@ def replay_sessions_to_parquet(
 def streaming_session_stats(
     events: DataFrame, gap_minutes: int = 30, watermark: str = "1 hour"
 ) -> DataFrame:
-    """Per-session statistics on the STREAM via the native dynamic-gap
-    ``session_window`` — the streaming proof of the batch operator\'s
-    claim (operators/relational.py ``session_stats``: "the same API
-    runs unchanged under readStream with a watermark"). Two events
-    within ``gap_minutes`` merge into one growing session; the
-    watermark closes sessions once no extension can arrive, bounding
-    state to sessions still open within the lateness horizon.
+    """Per-session statistics on the STREAM: the batch operator
+    ``operators.relational.session_stats`` itself over the watermarked
+    stream — the proof of its claim that "the same API runs unchanged
+    under readStream with a watermark". Two events within
+    ``gap_minutes`` merge into one growing session; the watermark
+    closes sessions once no extension can arrive, bounding state to
+    sessions still open within the lateness horizon.
 
-    Output schema matches the batch operator exactly, so a full
-    replay must agree with the batch oracle row-for-row — the
-    batch/stream consistency contract.
+    One aggregate serves both, so a full replay must agree with the
+    batch oracle row-for-row — the batch/stream consistency contract.
     """
-    sw = F.session_window("ts", f"{gap_minutes} minutes")
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(sw.alias("w"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 6)
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
+    return session_stats(events.withWatermark("ts", watermark), gap_minutes)

@@ -7,7 +7,7 @@ from collections import ChainMap
 
 import pyspark.sql.functions as F
 
-from ..operators import sketches, temporal, text
+from ..operators import sketches, temporal, text_quality
 from . import (
     relational as _relational,
     text_quality as _text_quality,
@@ -328,24 +328,7 @@ def q_streaming_quality_gate(spark, sf_dir):
     out = f"{root}/out"
 
     def partials(batch_df, batch_id):
-        toks = text.tokens_array("text")
-        n_tok = F.size(toks)
-        sum_len = F.aggregate(
-            F.transform(toks, lambda t: F.length(t)),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
-        n_chars = F.length(F.col("text"))
-        upper = F.length(F.regexp_replace(F.col("text"), "[^A-Z]", ""))
-        r1 = n_tok >= 5
-        r2 = (sum_len >= 2 * n_tok) & (sum_len <= 12 * n_tok)
-        r3 = F.lit(10) * upper <= F.lit(3) * n_chars
-        batch_df.agg(
-            F.count("*").alias("n0"),
-            F.sum(F.when(~r1, 1).otherwise(0)).alias("f1"),
-            F.sum(F.when(r1 & ~r2, 1).otherwise(0)).alias("f2"),
-            F.sum(F.when(r1 & r2 & ~r3, 1).otherwise(0)).alias("f3"),
-        ).write.mode("append").parquet(out)
+        text_quality.funnel_counts(batch_df).write.mode("append").parquet(out)
 
     run_replay(
         spark,
@@ -357,29 +340,9 @@ def q_streaming_quality_gate(spark, sf_dir):
         .foreachBatch(partials),
     )
     sums = spark.read.parquet(out).agg(
-        F.sum("n0").alias("n0"),
-        F.sum("f1").alias("f1"),
-        F.sum("f2").alias("f2"),
-        F.sum("f3").alias("f3"),
+        *[F.sum(c).alias(c) for c in ("n0", "f1", "f2", "f3")]
     )
-    stage = lambda i, rule, n_in, f: F.struct(  # noqa: E731
-        F.lit(i).alias("stage"),
-        F.lit(rule).alias("rule"),
-        n_in.alias("n_in"),
-        f.alias("n_rejected"),
-        (n_in - f).alias("n_out"),
-    )
-    n1 = F.col("n0") - F.col("f1")
-    n2 = n1 - F.col("f2")
-    return sums.select(
-        F.inline(
-            F.array(
-                stage(1, "min_tokens", F.col("n0"), F.col("f1")),
-                stage(2, "mean_token_len", n1, F.col("f2")),
-                stage(3, "uppercase_ratio", n2, F.col("f3")),
-            )
-        )
-    )
+    return text_quality.funnel_stages(sums)
 
 
 # the additive streaming funnel must land exactly on the batch funnel

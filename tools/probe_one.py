@@ -5,7 +5,8 @@ Heavy scale probes (sf1/sf3/sf10) must each run in their own JVM —
 successive heavy runs in a shared local JVM hit heap pressure and
 skew the reading (round-8 lesson, docs/SCALE.md). This wraps the
 bench's noop-sink timing for a single (query, sf_dir, partitions)
-triple and prints one JSON line.
+triple (``bench._time_query`` after ``bench``'s own warm-up) and
+prints one JSON line.
 
 Usage:
   python tools/probe_one.py QUERY SF_DIR [--partitions N] [--runs K]
@@ -21,7 +22,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -36,23 +36,14 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=1)
     args = ap.parse_args()
 
-    from mapreduce_assignments_spark import workloads
+    import bench
     from mapreduce_assignments_spark.session import get_spark
 
     spark = get_spark("probe-one", shuffle_partitions=args.partitions)
-    # warm the session the same way bench.py does (JVM + parquet
-    # footer caches), on a query other than the probed one
-    warm = "word_count" if args.query != "word_count" else "pricing_summary"
-    workloads.ALL_QUERIES[warm](spark, args.sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    times = []
-    for _ in range(args.runs):
-        t0 = time.time()
-        df = workloads.ALL_QUERIES[args.query](spark, args.sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        times.append(round(time.time() - t0, 3))
+    bench._warm_up(spark, args.sf_dir)
+    times = [
+        bench._time_query(spark, args.sf_dir, args.query) for _ in range(args.runs)
+    ]
     print(json.dumps({
         "query": args.query,
         "sf_dir": args.sf_dir,
