@@ -6,13 +6,11 @@ from .hashing import (
     h28,
     h60,
     log_add_exp,
-    minhash_value,
 )
 
 __all__ = [
     "h28",
     "h60",
-    "minhash_value",
     "log_add_exp",
     "MINHASH_A",
     "MINHASH_B",

@@ -45,11 +45,6 @@ def h28(c: Column | str) -> Column:
     return F.conv(F.substring(F.md5(_col(c)), 1, 7), 16, 10).cast("long")
 
 
-def minhash_value(base_hash: Column, i: int) -> Column:
-    """i-th universal hash of a 28-bit base hash (JVM-side arithmetic)."""
-    return (F.lit(MINHASH_A[i]) * base_hash + F.lit(MINHASH_B[i])) % F.lit(MINHASH_PRIME)
-
-
 def h28_sql(expr: str) -> str:
     """DuckDB SQL text equivalent of :func:`h28`."""
     return f"CAST(CONCAT('0x', substring(md5({expr}), 1, 7)) AS BIGINT)"
@@ -81,7 +76,8 @@ def h60_spark_sql(expr: str) -> str:
 
 
 def minhash_value_spark_sql(base_expr: str, i: int) -> str:
-    """Spark SQL text equivalent of :func:`minhash_value`."""
+    """i-th universal hash ``(a_i * h + b_i) mod p`` of the 28-bit
+    base hash ``base_expr``, as Spark SQL text."""
     return (
         f"(({MINHASH_A[i]}L * {base_expr} + {MINHASH_B[i]}L)"
         f" % {MINHASH_PRIME}L)"

@@ -48,7 +48,6 @@ from ..functions.hashing import (
     h28_spark_sql,
     h60,
     h60_spark_sql,
-    minhash_value,
     minhash_value_spark_sql,
 )
 from .fixpoint import fixpoint

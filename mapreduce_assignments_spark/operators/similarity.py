@@ -564,11 +564,23 @@ def _ivf_probe_topk(
     return _topk_per_query(scored, k)
 
 
+def _cap_cells(assigned: DataFrame, max_cell_size: int) -> DataFrame:
+    """Drop every member of an over-cap cell from :func:`ivf_assign`
+    output — the one ``max_cell_size`` rule of the within-cell pair
+    operators (a cell-count window over one hash(cell) exchange)."""
+    cell_n = Window.partitionBy("cell")
+    return (
+        assigned.withColumn("__cell_n", F.count("*").over(cell_n))
+        .where(F.col("__cell_n") <= max_cell_size)
+        .drop("__cell_n")
+    )
+
+
 def embedding_near_dupes(
     embeddings: DataFrame,
     centroids: DataFrame,
     threshold: float = 0.95,
-    max_cell_size: int | None = 4096,
+    max_cell_size: int = 4096,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs ``(id_a, id_b, sim)``
     (id_a < id_b, sim >= threshold), candidate-limited to IVF cells:
@@ -580,16 +592,8 @@ def embedding_near_dupes(
     exists to prevent (cap² pairs per cell is the hard ceiling).
     Members of an over-cap cell are excluded from pairing entirely —
     the same documented recall-for-boundedness trade as
-    ``dedup.ngram_jaccard_pairs``'s hot-shingle ``df_cap``; pass
-    ``None`` to disable."""
-    assigned = ivf_assign(embeddings, centroids)
-    if max_cell_size is not None:
-        cell_n = Window.partitionBy("cell")
-        assigned = (
-            assigned.withColumn("__cell_n", F.count("*").over(cell_n))
-            .where(F.col("__cell_n") <= max_cell_size)
-            .drop("__cell_n")
-        )
+    ``dedup.ngram_jaccard_pairs``'s hot-shingle ``df_cap``."""
+    assigned = _cap_cells(ivf_assign(embeddings, centroids), max_cell_size)
     # r16: pairwise scoring through the per-cell numpy kernel
     # (_cell_pair_sims, guide §4.2) instead of a self-join with one
     # interpreted cosine fold per pair — bit-identical by operation
@@ -1107,7 +1111,7 @@ def semantic_dedup(
     embeddings: DataFrame,
     centroids: DataFrame,
     threshold: float = 0.9,
-    max_cell_size: int | None = 4096,
+    max_cell_size: int = 4096,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication summary (Abbas et al.
     2023): bucket the corpus into centroid cells, call a vector a
@@ -1124,14 +1128,7 @@ def semantic_dedup(
     cell's pair list. Cells over the cap are excluded entirely (the
     documented recall-for-boundedness trade).
     """
-    assigned = ivf_assign(embeddings, centroids)
-    if max_cell_size is not None:
-        cell_n = Window.partitionBy("cell")
-        assigned = (
-            assigned.withColumn("__cell_n", F.count("*").over(cell_n))
-            .where(F.col("__cell_n") <= max_cell_size)
-            .drop("__cell_n")
-        )
+    assigned = _cap_cells(ivf_assign(embeddings, centroids), max_cell_size)
     # members feeds THREE consumers (the pair kernel, the per-cell
     # count, and the semi-join probe) — localCheckpoint so the scan +
     # assignment argmax runs once, not three times (the dedup_clusters
@@ -1856,7 +1853,7 @@ def mutual_knn_pairs(
     embeddings: DataFrame,
     centroids: DataFrame,
     k: int = 3,
-    max_cell_size: int | None = 4096,
+    max_cell_size: int = 4096,
 ) -> DataFrame:
     """Reciprocal-nearest-neighbor pairs within centroid cells —
     ``(id_a, id_b, sim)`` with ``id_a < id_b`` where EACH vector is
@@ -1875,14 +1872,7 @@ def mutual_knn_pairs(
     k-bounded neighbor lists. Sims round to 6 dp BEFORE ranking with
     an id tiebreak (the brute_force_topk parity discipline).
     """
-    assigned = ivf_assign(embeddings, centroids)
-    if max_cell_size is not None:
-        cell_n = Window.partitionBy("cell")
-        assigned = (
-            assigned.withColumn("__cell_n", F.count("*").over(cell_n))
-            .where(F.col("__cell_n") <= max_cell_size)
-            .drop("__cell_n")
-        )
+    assigned = _cap_cells(ivf_assign(embeddings, centroids), max_cell_size)
     # r16: pairwise scoring through the per-cell numpy kernel
     # (_cell_pair_sims with directed=True — the per-id ranking needs
     # both (a,b) and (b,a), and cosine is commutative at the IEEE

@@ -541,10 +541,9 @@ SELECT min(doc_id) AS keeper, count(*) AS n_dups, phash FROM h GROUP BY phash
 """
 
 
-def _fake_wav_assets(spark, sf_dir):
-    """REAL canonical PCM WAV containers (any audio tool opens them —
-    unlike FAKEIMG/FAKEVID this is the actual on-disk format) whose
-    64-byte data chunk is the document's first 64 UTF-8 bytes. Even
+def _wav_assets(spark, sf_dir):
+    """REAL canonical PCM WAV containers (any audio tool opens them)
+    whose 64-byte data chunk is the document's first 64 UTF-8 bytes. Even
     doc_ids get a mono 16 kHz header, odd a stereo 8 kHz one, so every
     parsed field varies across rows. Headers attached JVM-side."""
     h_mono = multimodal.make_wav(bytes(64), channels=1, sample_rate=16000)[:44]
@@ -583,7 +582,7 @@ _WAV_S16 = (
 
 
 def q_audio_stats(spark, sf_dir):
-    return multimodal.audio_stats(_fake_wav_assets(spark, sf_dir))
+    return multimodal.audio_stats(_wav_assets(spark, sf_dir))
 
 
 ORACLE["audio_stats"] = f"""

@@ -133,14 +133,14 @@ def test_embedding_near_dupes(emb):
 
 def test_embedding_near_dupes_cell_cap(emb):
     """A mega-cell must be excluded from pairing: with the cap below
-    the planted pair's cell size the pair disappears; with no cap (or a
-    generous one) it is found. Bounds the quadratic blowup a skewed
+    the planted pair's cell size the pair disappears; with a cap above
+    the row count it is found. Bounds the quadratic blowup a skewed
     embedding space would otherwise re-create."""
     df, _ = emb
     centroids = df.where("vec_id < 4").selectExpr("vec_id as cell_id", "embedding as c")
     uncapped = {
         (r["id_a"], r["id_b"])
-        for r in embedding_near_dupes(df, centroids, 0.95, max_cell_size=None).collect()
+        for r in embedding_near_dupes(df, centroids, 0.95, max_cell_size=df.count() + 1).collect()
     }
     assert (0, 25) in uncapped
     # every cell holds ~10 of the 40 vectors; cap=2 drops them all

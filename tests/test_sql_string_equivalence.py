@@ -15,9 +15,11 @@ import pyspark.sql.functions as F
 import pytest
 
 from mapreduce_assignments_spark.functions.hashing import (
+    MINHASH_A,
+    MINHASH_B,
+    MINHASH_PRIME,
     h28,
     h60,
-    minhash_value,
 )
 from mapreduce_assignments_spark.operators.dedup import (
     _shingle_array,
@@ -69,11 +71,16 @@ def _simhash_column_form(docs, bits=62, text_col="text", id_col="doc_id"):
     return base.select("doc_id", sig.alias("simhash"))
 
 
+def _minhash_value(base_hash, i):
+    """The historical Column-API i-th universal hash, verbatim."""
+    return (F.lit(MINHASH_A[i]) * base_hash + F.lit(MINHASH_B[i])) % F.lit(MINHASH_PRIME)
+
+
 def _minhash_column_form(docs, n=3, num_hashes=16, text_col="text", id_col="doc_id"):
     """The pre-r15 Column-API minhash_signatures, verbatim."""
 
     def mh(i):
-        return lambda h: minhash_value(h, i)
+        return lambda h: _minhash_value(h, i)
 
     toks = tokens_array(text_col)
     base = docs.where(F.size(toks) >= n).select(
